@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import resource
 import sys
 import time
 
@@ -40,6 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mlentory_etl_pipeline_spark.plans.queries import REGISTRY
 from mlentory_etl_pipeline_spark.session import get_spark
+from perfbench.layers import descendants, proc_cpu_s
 
 
 def scd2_scenarios(spark, sf_dir: str) -> dict[str, float]:
@@ -85,13 +87,37 @@ def _proc_stat_snapshot() -> list[int] | None:
         return None
 
 
-def _load_telemetry(start: list[int] | None, end: list[int] | None) -> dict:
+def _bench_cpu_s(jvm_pid: int | None) -> tuple[float, float]:
+    """CPU seconds used so far by this process (its own getrusage) and
+    by the JVM with its Python workers (/proc; reaped workers count
+    through the JVM's cutime)."""
+    ru = resource.getrusage(resource.RUSAGE_SELF)
+    jvm = 0.0
+    for pid in [jvm_pid, *descendants(jvm_pid)] if jvm_pid else []:
+        try:
+            jvm += proc_cpu_s(pid, children=True)
+        except OSError:
+            pass
+    return ru.ru_utime + ru.ru_stime, jvm
+
+
+def _load_telemetry(
+    start: list[int] | None,
+    end: list[int] | None,
+    cpu_start: tuple[float, float],
+    cpu_end: tuple[float, float],
+) -> dict:
     """Machine-load deltas over the bench run (VERDICT r10 №3): a
     co-tenant window on the bench box is indistinguishable from a real
     regression after the fact unless the artifact itself records the
     competing load. steal_pct > ~1 or busy_other unexpectedly high
-    flags a contested run."""
-    out: dict = {}
+    flags a contested run. ``busy_other_pct`` is ``busy_pct`` minus the
+    bench's own share (this process plus its JVM and workers) of the
+    same /proc/stat window."""
+    out: dict = {
+        "self_cpu_s": round(cpu_end[0] - cpu_start[0], 2),
+        "jvm_cpu_s": round(cpu_end[1] - cpu_start[1], 2),
+    }
     try:
         out["loadavg_end"] = round(os.getloadavg()[0], 2)
     except OSError:
@@ -102,6 +128,11 @@ def _load_telemetry(start: list[int] | None, end: list[int] | None) -> dict:
         if tot > 0:
             out["steal_pct"] = round(100.0 * d[7] / tot, 2)
             out["busy_pct"] = round(100.0 * (tot - d[3] - d[4]) / tot, 2)
+            own_ticks = (sum(cpu_end) - sum(cpu_start)) * os.sysconf("SC_CLK_TCK")
+            out["bench_busy_pct"] = round(100.0 * own_ticks / tot, 2)
+            out["busy_other_pct"] = round(
+                max(0.0, out["busy_pct"] - out["bench_busy_pct"]), 2
+            )
             out["iowait_pct"] = round(100.0 * d[4] / tot, 2)
     return out
 
@@ -109,6 +140,7 @@ def _load_telemetry(start: list[int] | None, end: list[int] | None) -> dict:
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     stat_start = _proc_stat_snapshot()
+    cpu_start = _bench_cpu_s(None)  # before the JVM exists
     try:
         loadavg_start = round(os.getloadavg()[0], 2)
     except OSError:
@@ -117,6 +149,8 @@ def main():
     sf = float(m.group(1)) if m else None
     spark = get_spark("mlentory-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    jvm_proc = getattr(spark.sparkContext._gateway, "proc", None)
+    jvm_pid = jvm_proc.pid if jvm_proc is not None else None
 
     names = [n for n, q in REGISTRY.items() if q.headline]
 
@@ -380,7 +414,9 @@ def main():
         # artifact instead of re-litigated round-over-round.
         "load": {
             **({"loadavg_start": loadavg_start} if loadavg_start is not None else {}),
-            **_load_telemetry(stat_start, _proc_stat_snapshot()),
+            **_load_telemetry(
+                stat_start, _proc_stat_snapshot(), cpu_start, _bench_cpu_s(jvm_pid)
+            ),
         },
     }
     detail = {

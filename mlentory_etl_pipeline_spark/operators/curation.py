@@ -32,10 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mlentory_etl_pipeline_spark.operators.dedup import (
-    _ensure_parallelism,
-    _shingles_of_words,
-)
+from mlentory_etl_pipeline_spark.operators.capping import lazy_cap, spread
+from mlentory_etl_pipeline_spark.operators.dedup import _shingles_of_words
 
 # --------------------------------------------------------------------
 # PII redaction
@@ -89,7 +87,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     The word arrays are projected once before the HOF lambdas (see
     ``dedup._shingles_of_words`` — inline expressions in lambdas are
     not CSE'd)."""
-    words = _ensure_parallelism(df).select(
+    words = spread(df).select(
         F.col(id_col), F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w")
     )
     grams = words.select(
@@ -252,7 +250,7 @@ def decontaminate(
 
 
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    words = _ensure_parallelism(df).select(
+    words = spread(df).select(
         F.col(id_col), F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w")
     )
     return words.select(
@@ -276,7 +274,7 @@ def chunk_documents(
     window may be short but the tail is never dropped; a doc shorter
     than ``size`` yields one partial chunk. Map-only: tokenize once,
     ``sequence``+``explode`` fan out the windows, no shuffle anywhere."""
-    words = _ensure_parallelism(df).select(
+    words = spread(df).select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("_w")
     )
     overlap = size - stride
@@ -474,49 +472,6 @@ def gopher_quality(
         & (F.col("stopword_hits") >= min_stopword_hits)
     )
     return scored.withColumn("keep", keep)
-
-
-def mad_outliers(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    z: float = 3.5,
-    consistency: float = 1.4826,
-) -> DataFrame:
-    """Robust per-group outlier detection via the median absolute
-    deviation — the curation pass that survives the exact skew a mean/
-    stddev z-score drowns in (one 10^9-char document drags the mean; it
-    cannot drag the median). Returns the rows whose
-    ``robust_z = (x - median) / (1.4826 · MAD)`` exceeds ``z`` in
-    absolute value, with the score attached.
-
-    Plan shape: two exact-percentile aggregations over the group key
-    (median, then MAD of the absolute deviations) and two joins back.
-    The group cardinality is the number of corpus sources/domains —
-    small by construction — so both stat tables broadcast and the data
-    passes map-only twice; the only shuffles are the two map-side-
-    combined percentile aggs. Groups with ``MAD = 0`` (constant-valued)
-    are skipped: robust z is undefined there, and the right tool for a
-    constant column is a DQ constraint, not an outlier score.
-    """
-    med = df.groupBy(*group_cols).agg(
-        F.percentile(F.col(value_col), F.lit(0.5)).alias("_med")
-    )
-    dev = df.join(F.broadcast(med), group_cols).withColumn(
-        "_adev", F.abs(F.col(value_col) - F.col("_med"))
-    )
-    mad = dev.groupBy(*group_cols).agg(
-        F.percentile(F.col("_adev"), F.lit(0.5)).alias("_mad")
-    )
-    scored = dev.join(F.broadcast(mad), group_cols).where(F.col("_mad") > 0)
-    robust_z = F.round(
-        (F.col(value_col) - F.col("_med")) / (F.lit(consistency) * F.col("_mad")), 6
-    )
-    return (
-        scored.withColumn("robust_z", robust_z)
-        .where(F.abs(F.col("robust_z")) > z)
-        .drop("_med", "_adev", "_mad")
-    )
 
 
 def dsir_importance_weights(
@@ -855,59 +810,31 @@ def build_training_mixture(
     # referenced TWICE (as the next stage's input and again in the
     # funnel tagging below), so an uncapped composition re-expands each
     # stage's subtree per reference — the registry's widest plan (619
-    # exchanges, 12 s of pure plan-build). A lazy localCheckpoint
-    # truncates the logical plan at each boundary (same trick
-    # vs.materialized uses between SCD2 folds): plan width stays
-    # O(stage) and each stage computes exactly once at action time,
-    # pinned on the executors for its two consumers.
-    #
-    # The checkpointed subtree is planned with AQE and auto-broadcast
-    # OFF (restored immediately after): an adaptive plan's toRdd — and
-    # any broadcast exchange's doExecute — materializes its query
-    # stages EAGERLY, which would execute the whole chain at
-    # plan-build time (measured ~9.5 s at sf0.001) instead of keeping
-    # the registry contract that building a DataFrame runs no jobs.
-    # With both off, toRdd is a pure lazy RDD DAG: the chain's
-    # small-side joins inside each stage segment run as shuffle joins
-    # rather than broadcasts — an accepted trade on this OFF-headline
-    # reporting query (the ids being joined are post-agg and tiny, and
-    # the chain is already shuffle-bound on those keys); the OUTER
-    # funnel plan below is planned under normal conf and keeps AQE +
-    # broadcasts.
-    def _cap(df: DataFrame) -> DataFrame:
-        sp = df.sparkSession
-        keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-        saved = [(k, sp.conf.get(k)) for k in keys]
-        sp.conf.set(keys[0], "false")
-        sp.conf.set(keys[1], "-1")
-        try:
-            return df.localCheckpoint(eager=False)
-        finally:
-            for k, v in saved:
-                sp.conf.set(k, v)
-
+    # exchanges, 12 s of pure plan-build). lazy_cap keeps plan width
+    # O(stage) and each stage computes exactly once at action time; the
+    # OUTER funnel plan below keeps AQE + broadcasts.
     stages: list[tuple[str, DataFrame]] = [("raw", docs)]
     keep_ids = (
         gopher_quality(docs, id_col, text_col, min_words=5, min_stopword_hits=0)
         .where(F.col("keep"))
         .select(id_col)
     )
-    quality = _cap(docs.join(keep_ids, id_col))
+    quality = lazy_cap(docs.join(keep_ids, id_col))
     stages.append(("quality", quality))
-    exact = _cap(exact_dedup(quality, [text_col], id_col).select(*docs.columns))
+    exact = lazy_cap(exact_dedup(quality, [text_col], id_col).select(*docs.columns))
     stages.append(("exact_dedup", exact))
     pairs = minhash_lsh_dedup_pairs(
         exact, id_col, text_col, threshold=near_dup_threshold
     )
     dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    near = _cap(exact.join(dup_ids, id_col, "left_anti"))
+    near = lazy_cap(exact.join(dup_ids, id_col, "left_anti"))
     stages.append(("near_dedup", near))
     contaminated = (
         decontaminate(near, eval_docs, id_col, text_col)
         .select(F.col("corpus_id").alias(id_col))
         .distinct()
     )
-    clean = _cap(near.join(contaminated, id_col, "left_anti"))
+    clean = lazy_cap(near.join(contaminated, id_col, "left_anti"))
     stages.append(("decontaminated", clean))
     if doc_vecs is not None and eval_vecs is not None:
         corpus_vecs = clean.select(F.col(id_col).alias("corpus_id")).join(
@@ -930,9 +857,9 @@ def build_training_mixture(
             .select(F.col("corpus_id").alias(id_col))
             .distinct()
         )
-        clean = _cap(clean.join(sem_flagged, id_col, "left_anti"))
+        clean = lazy_cap(clean.join(sem_flagged, id_col, "left_anti"))
         stages.append(("semantic_decontaminated", clean))
-    final = _cap(
+    final = lazy_cap(
         token_budget_sample(
             clean, id_col, [source_col], tokens_col, token_budget
         ).select(*docs.columns)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mlentory_etl_pipeline_spark.operators.capping import spread
+
 
 def exact_dedup(df: DataFrame, content_cols: list[str], keep_min_col: str) -> DataFrame:
     """Exact dedup: group by md5 of the concatenated content columns,
@@ -50,72 +52,6 @@ def _shingles_of_words(words: Column, n: int) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of ``lower(trim(text))`` as an array column.
-    Texts shorter than n words produce one shingle of all their words.
-    Prefer :func:`doc_shingles` in plans — it projects the tokenized
-    words first (see :func:`_shingles_of_words`)."""
-    return _shingles_of_words(F.split(F.lower(F.trim(text)), r"\s+"), n)
-
-
-#: Bytes of plan-stats input per spread task. The r11 width sweep on
-#: the heavy-map headliners (minhash shingling, ANN scoring, n-gram
-#: decontaminate, curation) measured widths {2,4,6,8,16,32} at
-#: local[32]/sf0.1: 4-6 tasks beat 32 by ~15% (5.2/4.9/4.8 s vs 5.7 s
-#: bucket total) — per-stage fan-out should follow data size, not core
-#: count (guide §2.2/§2.6; 32 tiny tasks cost more scheduling than the
-#: extra threads buy). 128 KiB/task puts the sf0.1 corpora (595 KB
-#: documents → 5, 799 KB embeddings → 7) in that sweet spot while any
-#: real corpus still reaches full parallelism (a 30 MB side input →
-#: 240 ≫ cores). Overridable per session via
-#: ``spark.mlentory.spread.targetPartitionBytes``.
-_SPREAD_TARGET_BYTES = 128 * 1024
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread a skinny input (one small parquet file → 1-2 partitions)
-    before per-row-heavy map work: shingling fans out ~wordcount
-    shingles per doc through interpreted HOF lambdas, so a 1-partition
-    scan would starve the executors (measured 2.6× on the minhash
-    pipeline at sf0.1/local[32]). The width is DATA-SIZED, not
-    core-count-sized: ceil(plan-stats bytes / 128 KiB) clamped to
-    [1, defaultParallelism] (r11: core-count-wide fan-out measured
-    ~15% slower — see ``_SPREAD_TARGET_BYTES``). On a real corpus
-    (thousands of input splits) the partition-count guard is false and
-    no shuffle is added."""
-    spark = df.sparkSession
-    limit = spark.sparkContext.defaultParallelism
-    try:
-        tgt = int(
-            spark.conf.get(
-                "spark.mlentory.spread.targetPartitionBytes",
-                str(_SPREAD_TARGET_BYTES),
-            )
-        )
-    except Exception:
-        tgt = _SPREAD_TARGET_BYTES
-    # Width from ANALYZED-plan stats (~1 ms driver-side — no optimizer
-    # run, no physical planning): r11 measured the former
-    # ``_jdf.rdd().getNumPartitions()`` probe at ~54 ms per fresh plan
-    # (it compiles the physical plan and builds the RDD, all thrown
-    # away once we wrap the input in a repartition), across ~18 guarded
-    # constructor paths. The partition-count probe is now paid ONLY on
-    # the width >= limit branch, i.e. for inputs big enough that they
-    # may already be split (the 100 TB corpus case, where it returns
-    # without adding a shuffle — same contract as before).
-    size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
-    width = max(1, min(limit, -(-size // max(1, tgt))))
-    if width >= limit:
-        if df._jdf.rdd().getNumPartitions() >= limit:
-            return df
-        return df.repartition(limit)
-    if width == 1:
-        # Below one target-size task of data the HOF fan-out is trivial;
-        # an exchange would cost more than it spreads (sf0.001 gates).
-        return df
-    return df.repartition(width)
-
-
 def doc_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, distinct: bool = True
 ) -> DataFrame:
@@ -126,7 +62,7 @@ def doc_shingles(
     # SQL text (one parse per projection; same split/transform/slice
     # nodes as the Column composition — the r10 construction-cost
     # pattern, bit-identity implied by the hard-oracled consumers)
-    words = _ensure_parallelism(df).selectExpr(
+    words = spread(df).selectExpr(
         f"`{id_col}`", f"split(lower(trim(`{text_col}`)), '\\\\s+') AS _w"
     )
     sh = words.selectExpr(
@@ -162,7 +98,7 @@ def duplicated_spans(
     `HAVING >= min_docs`. With ``top_k`` the result is a bounded
     TakeOrdered. Returns (span_hash, span, n_docs, n_occurrences).
     """
-    words = _ensure_parallelism(df).select(
+    words = spread(df).select(
         F.col(id_col).alias("_id"),
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
     )
@@ -335,32 +271,6 @@ def jaccard_pairs(
             (
                 F.col("inter")
                 / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-
-
-def jaccard_verify_candidates(
-    shingled: DataFrame, id_col: str, candidates: DataFrame
-) -> DataFrame:
-    """Exact Jaccard for a candidate pair list via per-doc shingle *sets*
-    (collect_set → two joins → ``array_intersect``). Cost scales with
-    |candidates| × avg shingle-set size — no inverted-index self-join.
-    This is the right verification shape when candidates ≪ co-shingled
-    pairs (the LSH regime). Returns (id_a, id_b, jaccard)."""
-    sets = shingled.groupBy(id_col).agg(F.collect_set("shingle").alias("sh"))
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                inter
-                / (F.size("sh_a") + F.size("sh_b") - inter).cast("double")
             ).alias("jaccard"),
         )
     )
@@ -762,7 +672,7 @@ def remove_duplicate_spans(
 
     Returns ``(id, text, n_tokens, n_removed)``.
     """
-    toks = _ensure_parallelism(df).select(
+    toks = spread(df).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_w")
     )
     occ = toks.select(

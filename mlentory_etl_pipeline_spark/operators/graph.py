@@ -32,20 +32,6 @@ def argmax_per_group(df: DataFrame, keys: list[str], order_cols: list[str]) -> D
     return agged.select(*keys, *[F.col(f"_p.{c}").alias(c) for c in payload_cols])
 
 
-def subject_pivot(triples: DataFrame) -> DataFrame:
-    """Q1 — fold triples into one row per subject with a
-    predicate→values map (``GraphHandlerForKG.py:269-281``). Two-level
-    agg, both map-side combinable."""
-    per_pred = triples.groupBy("subject", "predicate").agg(
-        F.array_sort(F.collect_set("object")).alias("objects")
-    )
-    return per_pred.groupBy("subject").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("predicate", "objects")))
-        ).alias("properties")
-    )
-
-
 def resolve_uris(
     triples: DataFrame,
     names: DataFrame,

@@ -45,71 +45,6 @@ def heavy_hitters(df: DataFrame, key_cols: list[str], k: int = 10) -> DataFrame:
     )
 
 
-def cooccurrence_lift(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    max_basket: int = 100,
-    k: int = 20,
-) -> DataFrame:
-    """Market-basket co-occurrence with lift — the pair-statistics pass
-    behind "related items" / co-citation / co-mention mining over a
-    grouped corpus. Returns the top-``k`` item pairs by co-occurrence
-    count with ``lift = P(a,b) / (P(a)·P(b))`` over baskets.
-
-    Scale posture: the quadratic step is the within-basket self-join,
-    bounded by ``max_basket`` — a basket with B items emits B·(B-1)/2
-    pairs, so the cap turns a pathological mega-basket (one crawler
-    session touching 10^5 pages) from an O(10^10)-row explosion into a
-    dropped row. Item totals ride in via two hash joins on the item key
-    (map-side combined counts), the basket total as a broadcast 1-row
-    aggregate, and the final top-k is a bounded TakeOrderedAndProject —
-    no full sort. AQE's skew-join split handles residual hot items.
-    """
-    items = df.select(basket_col, item_col).distinct()
-    sizes = items.groupBy(basket_col).agg(F.count(F.lit(1)).alias("_bsz"))
-    bounded = (
-        items.join(sizes.where(F.col("_bsz") <= max_basket), basket_col)
-        .drop("_bsz")
-    )
-    n_baskets = bounded.groupBy().agg(
-        F.count_distinct(F.col(basket_col)).alias("_n_baskets")
-    )
-    item_n = bounded.groupBy(item_col).agg(F.count(F.lit(1)).alias("_n"))
-    a = bounded.select(
-        F.col(basket_col).alias("_b"), F.col(item_col).alias("item_a")
-    )
-    b = bounded.select(
-        F.col(basket_col).alias("_b"), F.col(item_col).alias("item_b")
-    )
-    pairs = (
-        a.join(b, "_b")
-        .where(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_co"))
-    )
-    na = item_n.select(F.col(item_col).alias("item_a"), F.col("_n").alias("_na"))
-    nb = item_n.select(F.col(item_col).alias("item_b"), F.col("_n").alias("_nb"))
-    return (
-        pairs.join(na, "item_a")
-        .join(nb, "item_b")
-        .crossJoin(F.broadcast(n_baskets))
-        .select(
-            "item_a",
-            "item_b",
-            "n_co",
-            F.round(
-                F.col("n_co").cast("double")
-                * F.col("_n_baskets")
-                / (F.col("_na").cast("double") * F.col("_nb")),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("n_co"), F.asc("item_a"), F.asc("item_b"))
-        .limit(k)
-    )
-
-
 def profile_columns(
     df: DataFrame, cols: list[str], approx: bool = False
 ) -> DataFrame:

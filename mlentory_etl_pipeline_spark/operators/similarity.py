@@ -35,7 +35,7 @@ from mlentory_etl_pipeline_spark.functions.vectors import (
     l2_norm,
     l2_norm_sql,
 )
-from mlentory_etl_pipeline_spark.operators.dedup import _ensure_parallelism
+from mlentory_etl_pipeline_spark.operators.capping import spread
 
 
 def brute_force_topk(
@@ -56,14 +56,14 @@ def brute_force_topk(
     """
     # Precompute norms once per side — the cross join then evaluates a
     # single dot product per pair instead of re-deriving both norms.
-    # _ensure_parallelism: the per-pair HOF dot products evaluate
-    # interpreted on the corpus side's partitions; a one-file local
-    # corpus arrives as ONE partition and runs single-threaded (no-op
-    # on a real many-split corpus — same guard as dedup shingling).
+    # spread: the per-pair HOF dot products evaluate interpreted on
+    # the corpus side's partitions; a one-file local corpus arrives as
+    # ONE partition and runs single-threaded (no-op on a real
+    # many-split corpus — same guard as dedup shingling).
     # SQL-text projections (one parse each; the Column-composed HOF
     # builders cost dozens of Py4J round-trips per call — bit-identity
     # with the Column twins pinned by test_vector_sql_twins_bit_identical)
-    c = _ensure_parallelism(corpus).selectExpr(
+    c = spread(corpus).selectExpr(
         f"`{id_col}`", f"`{vec_col}`", f"{l2_norm_sql(f'`{vec_col}`')} AS _cn"
     )
     q = queries.selectExpr(
@@ -219,7 +219,7 @@ def lsh_bucket_topk(
     is still bucketed once, only the (tiny) query side fans out."""
     # corpus-side bucket signs are num_planes interpreted HOF dots per
     # vector — spread a one-partition local input first (no-op at scale)
-    c = rp_bucket(_ensure_parallelism(corpus), vec_col, dim, num_planes)
+    c = rp_bucket(spread(corpus), vec_col, dim, num_planes)
     if extra_probes > 0:
         planes = _hyperplanes(dim, num_planes)
         # Project per-plane dots first (expressions inside HOF lambdas
@@ -438,7 +438,7 @@ def ivf_topk(
     # (no-op on a many-split corpus; seeds keep the unspread corpus so
     # the id<n filter still pushes down to the scan)
     c = ivf_probe_cells(
-        _ensure_parallelism(corpus), cents, id_col, vec_col, nprobe=1, norm_alias="_cn"
+        spread(corpus), cents, id_col, vec_col, nprobe=1, norm_alias="_cn"
     )
     q = ivf_probe_cells(
         queries, cents, query_id_col, query_vec_col, nprobe=nprobe, norm_alias="_qn"
@@ -517,7 +517,7 @@ def _int8_coarse_ranked(
         quantize_int8_sql,
     )
 
-    corpus = _ensure_parallelism(corpus)  # int8 dot HOFs run corpus-side
+    corpus = spread(corpus)  # int8 dot HOFs run corpus-side
     # SQL-text projections (bit-identity with the Column twins pinned
     # by test_vector_sql_twins_bit_identical)
     c = corpus.selectExpr(
@@ -604,25 +604,12 @@ def _subspace_chunks(
     )
 
 
-def _l2sq(a, b, digits: int = 6):
-    """Rounded squared L2 distance between two float arrays (rounding
-    makes every argmin / shortlist engine-reproducible)."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                       * (x.cast("double") - y.cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        digits,
-    )
-
-
 def _l2sq_sql(a: str, b: str, digits: int = 6) -> str:
-    """SQL text of :func:`_l2sq` — same fold, same double casts, same
-    rounding (bit-identity pinned by test_vector_sql_twins_bit_identical;
-    used by the hot PQ constructors where the Column-composed lambda
-    costs dozens of Py4J round-trips per call)."""
+    """SQL text of the rounded squared L2 distance between two float
+    arrays: a double-cast ``zip_with`` fold, rounded so every argmin /
+    shortlist is engine-reproducible. SQL text rather than a
+    Column-composed lambda, which costs dozens of Py4J round-trips per
+    call in the hot PQ constructors."""
     return (
         f"round(aggregate(zip_with({a}, {b}, (x, y) -> "
         f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
@@ -694,10 +681,10 @@ def pq_adc_topk(
         )
 
     # encode corpus: nearest codeword per (vector, subspace) — spread a
-    # one-partition local input before the m×ksub interpreted _l2sq
+    # one-partition local input before the m×ksub interpreted _l2sq_sql
     # evals per vector (no-op on a many-split corpus; the seed-codebook
     # path above keeps the unspread corpus for filter pushdown)
-    cchunks = _subspace_chunks(_ensure_parallelism(corpus), id_col, vec_col, m, sub)
+    cchunks = _subspace_chunks(spread(corpus), id_col, vec_col, m, sub)
     codes = (
         cchunks.join(F.broadcast(codebook), "j")
         .groupBy(id_col, "j")
@@ -823,13 +810,13 @@ def ivf_pq_topk(
     )
 
     # corpus → (id, cell, residual); broadcast joins only, then pinned:
-    # the codebook training scans it several times. _ensure_parallelism
-    # spreads a one-partition local input across cores before the
+    # the codebook training scans it several times. spread fans a
+    # one-partition local input out across cores before the
     # interpreted per-cell HOF assignment (no-op on a real corpus);
     # c_res and every training iteration inherit the spread through the
     # localCheckpoint.
     c_cells = ivf_probe_cells(
-        _ensure_parallelism(corpus), cents, id_col, vec_col, nprobe=1, norm_alias="_cn"
+        spread(corpus), cents, id_col, vec_col, nprobe=1, norm_alias="_cn"
     )
     c_res = (
         c_cells.join(F.broadcast(cent_rows), "cell")
@@ -957,7 +944,7 @@ def kmeans_cluster(
     # spread a one-partition local input before the interpreted per-
     # centroid HOF assignment loop; the checkpoint pins the spread for
     # every Lloyd iteration (no-op on a many-split corpus)
-    vecs = _ensure_parallelism(df.select(id_col, vec_col)).localCheckpoint(eager=False)
+    vecs = spread(df.select(id_col, vec_col)).localCheckpoint(eager=False)
     centroids = _lloyd_centroids(vecs, id_col, vec_col, k, iters, round_digits)
     return _kmeans_assign(vecs, id_col, vec_col, centroids, round_digits).select(
         F.col(id_col), F.col("cluster")
@@ -1074,7 +1061,7 @@ def trained_centroids(
     registry queries are rows-only by declared design, with recall@k vs
     :func:`brute_force_topk` asserted in tests."""
     spark = corpus.sparkSession
-    vecs = _ensure_parallelism(corpus.select(id_col, vec_col)).localCheckpoint(
+    vecs = spread(corpus.select(id_col, vec_col)).localCheckpoint(
         eager=False
     )
     cents = _lloyd_centroids(vecs, id_col, vec_col, n_centroids, iters)
@@ -1115,7 +1102,7 @@ def train_pq_codebook(
         return spark.createDataFrame([], "j int, code int, cw array<float>")
     sub = dim_row[0].d // m
     chunks = _subspace_chunks(
-        _ensure_parallelism(corpus), id_col, vec_col, m, sub
+        spread(corpus), id_col, vec_col, m, sub
     ).localCheckpoint(eager=False)
     # ALL m subspace trainings run JOINTLY, keyed by j: one assignment
     # pass + one (j, cluster, dim) update shuffle per iteration instead

@@ -29,15 +29,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """A BPE-ish proxy: count word-piece units = words + intra-word
-    transitions between letters and digits/punctuation. Cheap, regex
-    based, deterministic — the standard pretraining-corpus sizing
-    heuristic when a real tokenizer is too expensive."""
-    pieces = F.split(F.trim(text), r"[\s]+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])")
-    return F.size(pieces)
-
-
 def stopword_hits(text: Column, words: list[str]) -> Column:
     """Number of tokens that are in ``words``."""
     wl = F.array(*[F.lit(w) for w in words])
@@ -114,35 +105,6 @@ def rolling_fingerprint(text: Column, gram: int = 8, pre_normalized: bool = Fals
             F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(gram - 1), F.lit(1))),
             lambda i: F.md5(F.substring(t, i, F.lit(gram))),
         )
-    )
-
-
-def token_entropy(df, id_col: str, text_col: str):
-    """Per-document Shannon entropy of the token distribution — the
-    gibberish/boilerplate detector that length and stopword ratios miss
-    (a 10k-token doc of one repeated word has entropy 0; natural prose
-    lands near ln(vocab)). Returns (id, n_tokens, n_distinct, entropy)
-    with ``entropy = ln n − (Σ c·ln c)/n`` in nats, rounded to 6 dp.
-
-    Plan shape: explode → count per (doc, token) → per-doc fold. Both
-    aggregations are map-side combined; the (doc, token) shuffle is the
-    dominant cost and is exactly the inverted-index shuffle, so at
-    corpus scale this pass piggybacks on the same partitioning. No
-    Python anywhere.
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok")
-    )
-    cnt = toks.groupBy(id_col, "_tok").agg(F.count(F.lit(1)).alias("_c"))
-    n = F.sum("_c")
-    return cnt.groupBy(id_col).agg(
-        n.cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.round(
-            F.log(n.cast("double"))
-            - F.sum(F.col("_c").cast("double") * F.log(F.col("_c").cast("double"))) / n,
-            6,
-        ).alias("entropy"),
     )
 
 

@@ -39,11 +39,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mlentory_etl_pipeline_spark.functions.hashing import (
-    extraction_info_hash,
-    triplet_hash,
-)
-
 TRIPLET_SCHEMA = "triplet_hash string, subject string, predicate string, object string"
 INFO_SCHEMA = (
     "info_hash string, extraction_method string, extraction_confidence double"
@@ -97,72 +92,19 @@ def empty_state(spark: SparkSession) -> StoreState:
     )
 
 
-def with_hashes(batch: DataFrame) -> DataFrame:
-    """Attach content-hash keys to a raw (s, p, o, method, confidence,
-    extraction_time) batch.
-
-    One ``select("*", …)`` instead of two ``withColumn`` calls: each
-    DataFrame op is a Py4J round-trip plus a JVM analysis pass over the
-    whole tree, and this constructor sits inside every SCD2 merge
-    (guide §1.2 "per-task work" applies to the driver too — measured
-    ~85 ms → ~45 ms per call). Expressions unchanged."""
-    return batch.select(
-        "*",
-        triplet_hash(
-            F.col("subject"), F.col("predicate"), F.col("object")
-        ).alias("triplet_hash"),
-        extraction_info_hash(
-            F.col("extraction_method"), F.col("confidence")
-        ).alias("info_hash"),
-    )
-
-
-def disambiguate_statements(batch: DataFrame) -> DataFrame:
-    """G9 statement-metadata disambiguation
-    (``MlentoryTransformWithGraphBuilder.py:466-487``): for duplicate
-    (s, p, o) keep the provenance with max confidence, ties broken by
-    max extraction_time.
-
-    ``max_by`` over a struct = single map-side-combinable aggregation —
-    one shuffle on ``triplet_hash``, no window sort.
-    """
-    prov = F.struct(
-        F.col("confidence"),
-        F.col("extraction_time"),
-        F.col("extraction_method"),
-        F.col("info_hash"),
-    )
-    return (
-        batch.groupBy("triplet_hash", "subject", "predicate", "object")
-        .agg(F.max(prov).alias("p"))
-        .selectExpr(
-            "triplet_hash",
-            "subject",
-            "predicate",
-            "object",
-            "p.extraction_method AS extraction_method",
-            "p.confidence AS confidence",
-            "p.extraction_time AS extraction_time",
-            "p.info_hash AS info_hash",
-        )
-    )
-
-
 # ---- merge_batch SQL bodies (r10 §2: one parse+analysis per output
 # table instead of ~28 chained DataFrame ops per merge, each of which
 # is a Py4J round-trip plus an eager JVM analysis over the growing
 # tree — measured 0.73 s of pure construction per 2-merge fold before,
 # ~0.2 s after, identical Catalyst expressions).
 #
-# The disambiguated-batch constructor (with_hashes +
-# disambiguate_statements fused into 4 ops of SQL text — same md5
-# content hashes, same max(struct) G9 argmax with the lexicographic
-# (confidence, extraction_time, extraction_method, info_hash)
-# tie-break) deliberately stays on the DataFrame API rather than a
+# The disambiguated-batch constructor (:func:`_disambiguated`, 4 ops
+# of SQL text) deliberately stays on the DataFrame API rather than a
 # temp-view SQL statement: its plan must be IDENTICAL across calls so
 # the CacheManager dedups repeated merges of the same batch (warm
-# bench runs, scenario folds). A per-call uuid view name inside the
-# plan defeats sameResult and forced a re-materialization of the
+# bench runs, scenario folds) and ``load_batch`` can evict the entry
+# by rebuilding the plan. A per-call uuid view name inside the plan
+# defeats sameResult and forced a re-materialization of the
 # shuffle+agg on every call (measured: flagship warm exec 0.7 → 1.6 s
 # before this was caught).
 _MERGE_HASH_PROV_EXPRS = (
@@ -265,6 +207,22 @@ _MERGE_RANGE_SQL_TOUCH = _MERGE_RANGE_SQL_TEMPLATE.replace(
 )
 
 
+def _disambiguated(batch: DataFrame) -> DataFrame:
+    """G9 statement-metadata disambiguation
+    (``MlentoryTransformWithGraphBuilder.py:466-487``) of a raw batch:
+    content-hash keys attached, and for duplicate (s, p, o) the
+    provenance with max confidence kept, ties broken by max
+    extraction_time, then method, then info_hash. ``max`` over a struct
+    is one map-side-combinable aggregation — one shuffle on
+    ``triplet_hash``, no window sort."""
+    return (
+        batch.selectExpr(*_MERGE_HASH_PROV_EXPRS)
+        .groupBy("triplet_hash", "subject", "predicate", "object")
+        .agg(F.expr("max(_prov)").alias("p"))
+        .selectExpr(*_MERGE_DISAMBIG_OUT_EXPRS)
+    )
+
+
 def _sql_on(spark: SparkSession, template: str, **dfs: DataFrame) -> DataFrame:
     """Run one SQL statement over DataFrame inputs, each exposed as a
     uuid-named GLOBAL temp view for the duration of the call.
@@ -335,15 +293,12 @@ def merge_batch(
     # The whole merge is FOUR spark.sql statements (r10 §2): one
     # parse+analysis per output table instead of ~28 chained DataFrame
     # ops, each of which was a Py4J round-trip plus an eager JVM
-    # analysis over the growing tree. The SQL bodies above reproduce
-    # the former per-op composition node for node:
-    #   - disambiguation = with_hashes + disambiguate_statements
-    #     (same md5 hashes, same max(struct) argmax);
+    # analysis over the growing tree:
     #   - V2/V3 anti-join appends (first() per info_hash is the exact
     #     ReplaceDeduplicateWithAggregate form of dropDuplicates);
-    #   - V4+V5+V6 single pass over the open ranges, with the same
-    #     out-of-order guard (the reference's ``vr.use_end <
-    #     curr_update_date``, GraphHandler.py:319-345): a late batch
+    #   - V4+V5+V6 single pass over the open ranges, with the
+    #     out-of-order guard of the reference's ``vr.use_end <
+    #     curr_update_date`` (GraphHandler.py:319-345): a late batch
     #     neither regresses use_end (greatest keeps it monotone) nor
     #     deprecates ranges its batch-time has not passed. batch_time
     #     stays IN-PLAN as a broadcast 1-row aggregate (no collect, a
@@ -351,13 +306,7 @@ def merge_batch(
     # The disambiguated batch feeds the batch-time scan plus four
     # joins: cache it so the shuffle+agg runs once.
     spark = batch.sparkSession
-    b = (
-        batch.selectExpr(*_MERGE_HASH_PROV_EXPRS)
-        .groupBy("triplet_hash", "subject", "predicate", "object")
-        .agg(F.expr("max(_prov)").alias("p"))
-        .selectExpr(*_MERGE_DISAMBIG_OUT_EXPRS)
-        .cache()
-    )
+    b = _disambiguated(batch).cache()
     triplet = _sql_on(spark, _MERGE_TRIPLET_SQL, b=b, st=state.triplet)
     extraction_info = _sql_on(spark, _MERGE_INFO_SQL, b=b, si=state.extraction_info)
     version_range = _sql_on(
@@ -734,6 +683,9 @@ class VersionedTripleStore:
     def load_batch(self, batch: DataFrame, touch_unchanged: bool = False) -> StoreState:
         new_state = merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)
         self._write(new_state)
+        # The written state no longer reads merge_batch's cached batch:
+        # evict it (the rebuilt plan sameResults the cached one).
+        _disambiguated(batch).unpersist()
         return self.state()
 
 

@@ -46,6 +46,7 @@ from mlentory_etl_pipeline_spark.operators import (
     textstats,
     versioned_store as vs,
 )
+from mlentory_etl_pipeline_spark.session import scoped_conf
 from mlentory_etl_pipeline_spark.sources.tpch import load_table
 from mlentory_etl_pipeline_spark.streaming import incremental
 
@@ -1279,6 +1280,8 @@ def scd2_point_in_time(spark, sf_dir):
 def scd2_stream_load_ranges(spark, sf_dir):
     import tempfile
 
+    from mlentory_etl_pipeline_spark.streaming.stateful import stream_into_store
+
     land = tempfile.mkdtemp(prefix="scd2-land-")
     ckpt = tempfile.mkdtemp(prefix="scd2-ckpt-")
     store = vs.VersionedTripleStore(
@@ -1290,7 +1293,7 @@ def scd2_stream_load_ranges(spark, sf_dir):
         # land new files, then drain exactly the unseen ones — the
         # reference's periodic incremental refresh (SURVEY §3.2)
         b.coalesce(1).write.mode("append").parquet(land)
-        q = incremental.scd2_stream_load(
+        q = stream_into_store(
             spark.readStream.schema(b1.schema).parquet(land), store, ckpt
         )
         _drain(q, 300)
@@ -3609,28 +3612,11 @@ def streaming_stateful_running_agg(spark, sf_dir):
     sink = f"stateful_out_{abs(hash(sf_dir)) % 10_000_000}"
     # state partitions sized to the drain (8) — the same per-checkpoint
     # deployment knob the sessions drain documents; 32 partitions × a
-    # Python stateful worker each is pure overhead at ~190 keys/part
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # one pandas chunk per state partition (see the sessions drain)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-    try:
-        q = (
-            running_entity_stats(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", old_arrow
-        )
+    # Python stateful worker each is pure overhead at ~190 keys/part —
+    # and one pandas chunk per state partition (see the sessions drain)
+    _drain_to_memory(
+        running_entity_stats(stream), sink, ckpt, "update", 120, _STATEFUL_DRAIN_CONF
+    )
     # final state per key = last update emitted (max n_events wins)
     out = spark.table(sink)
     return graph.argmax_per_group(out, ["user_id"], ["n_events", "last_ts"]).select(
@@ -5087,13 +5073,11 @@ def lm_perplexity_quality(spark, sf_dir):
     survey_ops=("text-repetition", "§2.9 aggregations"),
 )
 def corpus_top_bigrams(spark, sf_dir):
-    from mlentory_etl_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-        _shingles_of_words,
-    )
+    from mlentory_etl_pipeline_spark.operators.capping import spread
+    from mlentory_etl_pipeline_spark.operators.dedup import _shingles_of_words
 
     d = t(spark, sf_dir, "documents")
-    words = _ensure_parallelism(d).select(
+    words = spread(d).select(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("_w")
     )
     grams = words.select(F.explode(_shingles_of_words(F.col("_w"), 2)).alias("bigram"))
@@ -6634,12 +6618,10 @@ def inverted_index_postings(spark, sf_dir):
     survey_ops=("text-repetition", "§2.9 aggregations", "§2.9 joins"),
 )
 def bigram_pmi_collocations(spark, sf_dir):
-    from mlentory_etl_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-        _shingles_of_words,
-    )
+    from mlentory_etl_pipeline_spark.operators.capping import spread
+    from mlentory_etl_pipeline_spark.operators.dedup import _shingles_of_words
 
-    d = _ensure_parallelism(t(spark, sf_dir, "documents"))
+    d = spread(t(spark, sf_dir, "documents"))
     words = d.select(F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("_w"))
     uni = words.select(F.explode("_w").alias("tok"))
     ucnt = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
@@ -7295,6 +7277,37 @@ def _drain(q, timeout_s: int = 300) -> None:
         )
 
 
+#: Stream conf for the stateful drains: 8 state partitions and one
+#: pandas chunk per state partition (rationale at each drain site).
+_STATE_PARTS_CONF = {"spark.sql.shuffle.partitions": "8"}
+_STATEFUL_DRAIN_CONF = {
+    **_STATE_PARTS_CONF,
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "200000",
+}
+
+
+def _drain_to_memory(
+    df, sink: str, ckpt: str, mode: str, timeout_s: int, conf: dict[str, str]
+) -> None:
+    """Drain the streaming ``df`` into the in-memory table ``sink``
+    (availableNow, checkpointed at ``ckpt``) with ``conf`` scoped to the
+    ``.start()`` call only. StreamExecution clones the session at start,
+    so every micro-batch is planned under the clone's conf (the offset
+    log records its shuffle partitions) while the caller's session is
+    restored within milliseconds, not after a drain of up to
+    ``timeout_s``."""
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(df.sparkSession, conf):
+        q = writer.start()
+    _drain(q, timeout_s)
+
+
 def _write_time_ordered_slices(df, src: str, ts_col: str = "ts", rows=None):
     """Write ``df`` to ``src`` as one parquet file per calendar quarter,
     oldest quarter first, and explicitly stamp each slice's mtime via
@@ -7362,21 +7375,10 @@ def streaming_dedup_watermark(spark, sf_dir):
     sink = f"dedupstream_out_{abs(hash(sf_dir)) % 10_000_000}"
     # dedup state partitions: deployment knob, pinned small for the
     # gate/bench key volume (see stateful sessionizer rationale)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            dedup_within_watermark(stream, ["event_id"], "ts", "1 day")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _drain_to_memory(
+        dedup_within_watermark(stream, ["event_id"], "ts", "1 day"),
+        sink, ckpt, "append", 120, _STATE_PARTS_CONF,
+    )
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -9820,20 +9822,7 @@ def streaming_attribution_join(spark, sf_dir):
     # I/O is pure overhead at gate/bench key cardinality — measured
     # 6.0 -> 2.9 s warm at sf0.1. A 100 TB deployment sizes this to
     # O(executor-cores).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _drain_to_memory(joined, sink, ckpt, "append", 300, _STATE_PARTS_CONF)
     return spark.table(sink).agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.count_distinct(F.col("user_id")).alias("n_users"),
@@ -10393,26 +10382,10 @@ def streaming_stateful_sessions(spark, sf_dir):
     # arrives as ONE pandas chunk instead of 10k-row slivers —
     # measured 3.8 → 3.0 s warm drain; at 200k rows × ~50 B that is
     # ~10 MB per chunk, comfortably inside executor memory.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-    try:
-        q = (
-            sessionize_with_timeout(stream, "4 hours")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", old_arrow
-        )
+    _drain_to_memory(
+        sessionize_with_timeout(stream, "4 hours"),
+        sink, ckpt, "append", 300, _STATEFUL_DRAIN_CONF,
+    )
     return (
         spark.table(sink)
         .where("user_id >= 0")

@@ -9,8 +9,14 @@ kept modest locally but overridable via env for cluster parity.
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# Serializes every scoped conf flip in the process (see scoped_conf).
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(
@@ -72,3 +78,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set ``conf`` on ``spark`` for the body, then restore every key.
+
+    The restore runs in a ``finally`` (a raising body still restores),
+    and a key that was unset before is unset again. A module-level
+    reentrant lock is held while the keys are flipped, so two scoped
+    flips on different threads never interleave their save/restore and
+    leave a stale value behind; nesting on one thread is allowed.
+
+    Remaining assumption: the lock only orders scoped flips against each
+    other. A plan built OUTSIDE ``scoped_conf`` on another thread while
+    a flip is active still plans under the flipped values, so keep the
+    body to the few milliseconds of plan construction it exists for.
+    """
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -92,50 +92,6 @@ def tumbling_window_agg(
     )
 
 
-def scd2_stream_load(
-    stream: DataFrame,
-    store,
-    checkpoint_dir: str,
-):
-    """The reference's incremental refresh (SURVEY §3.2) as a real
-    Structured Streaming job: a stream of triple observations is folded
-    into the SCD2 store via ``foreachBatch`` — each micro-batch runs the
-    full V2–V7 merge choreography (``versioned_store.merge_batch``)
-    exactly once.
-
-    The checkpoint is the watermark: re-starting the query with the
-    same ``checkpoint_dir`` processes only files the source has not
-    seen, so a periodic ``trigger(availableNow=True)`` run IS the
-    reference's "fetch rows newer than max(last_modified)" loop
-    (``HFDatasetManager.py:216-218``) with exactly-once bookkeeping the
-    reference's hand-rolled watermark lacks (a crashed refresh there
-    re-fetches and re-merges; here the sink is idempotent AND the
-    source replays precisely the unprocessed files).
-
-    Returns the started ``StreamingQuery`` (availableNow trigger —
-    drains what exists, then stops; call in a loop for periodic
-    refresh).
-
-    At scale: each micro-batch costs the hash-keyed merge joins of
-    ``merge_batch`` — batch ≪ store, so AQE broadcasts the batch side;
-    store tables stay bucketed by ``triplet_hash``. State here lives in
-    the STORE, not the streaming state store — no watermark-horizon
-    memory, arbitrarily late data folds in as a new version.
-    """
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.load_batch(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def session_window_agg(
     df: DataFrame,
     ts_col: str,
@@ -385,7 +341,8 @@ def agg_state_stream_maintenance(
     and at lake scale the state table is a Delta MERGE target keyed by
     the group columns).
 
-    Exactly-once needs more than :func:`scd2_stream_load`'s argument:
+    Exactly-once needs more than
+    :func:`...stateful.stream_into_store`'s argument:
     the SCD2 merge is content-hash idempotent, but COUNTS DOUBLE on
     replay. Every fold runs the versioned write-ahead protocol of
     :func:`_fold_protocol`: the merged state lands in a NEW

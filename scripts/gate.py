@@ -8,7 +8,8 @@ run it before every end-of-round commit:
     python scripts/gate.py --fast     # skip pytest (oracle sweep + audits only)
 
 Steps:
-  1. pytest tests/ -q                          (full unit/golden suite)
+  1. pytest tests/ -q -m "slow or not slow"   (full suite: pytest.ini's
+                                               default deselects the slow tier)
   2. scripts/check_correctness.py sf0.01       (every oracle query vs DuckDB)
   3. scripts/audit_schemas.py                  (no complex-typed outputs)
   4. scripts/gen_coverage.py --check           (COVERAGE.md + README.md fresh)
@@ -37,7 +38,8 @@ def main() -> None:
     fast = "--fast" in sys.argv
     steps = []
     if not fast:
-        steps.append(("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"]))
+        steps.append(("pytest", [sys.executable, "-m", "pytest", "tests/", "-q",
+                                 "-m", "slow or not slow"]))
     steps += [
         ("correctness sf0.01",
          [sys.executable, "scripts/check_correctness.py", "/root/testdata/sf0.01"]),

@@ -164,7 +164,7 @@ def test_hash_split_is_map_only(spark):
 def test_chunking_is_map_only(spark):
     plan = _plan(spark, "chunk_documents_windows")
     # sequence+posexplode fan-out happens map-side; the conditional
-    # _ensure_parallelism round-robin repartition is the only permitted
+    # spread() round-robin repartition is the only permitted
     # Exchange — never a key shuffle, join, or sort.
     assert "Generate" in plan
     assert "hashpartitioning" not in plan and "rangepartitioning" not in plan

@@ -189,7 +189,7 @@ def test_scd2_stream_load_incremental_parity(spark, tmp_path):
     import datetime as dt
 
     from mlentory_etl_pipeline_spark.operators import versioned_store as vs
-    from mlentory_etl_pipeline_spark.streaming import incremental
+    from mlentory_etl_pipeline_spark.streaming.stateful import stream_into_store
 
     schema = (
         "subject string, predicate string, object string, "
@@ -214,7 +214,7 @@ def test_scd2_stream_load_incremental_parity(spark, tmp_path):
 
     def run_refresh():
         stream = spark.readStream.schema(schema).parquet(land)
-        q = incremental.scd2_stream_load(stream, store, ckpt)
+        q = stream_into_store(stream, store, ckpt)
         q.awaitTermination(120)
 
     spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(land)
@@ -256,11 +256,11 @@ def test_scd2_stream_load_crash_recovery(spark, tmp_path):
     content-hash-keyed merge absorbs it) and then drains the rest
     (checkpoint resume). Final store state must equal folding the same
     files sequentially through batch load_batch — the exactly-once
-    claim of scd2_stream_load, crash included."""
+    claim of stream_into_store, crash included."""
     import datetime as dt
 
     from mlentory_etl_pipeline_spark.operators import versioned_store as vs
-    from mlentory_etl_pipeline_spark.streaming import incremental
+    from mlentory_etl_pipeline_spark.streaming.stateful import stream_into_store
 
     schema = (
         "subject string, predicate string, object string, "
@@ -312,7 +312,7 @@ def test_scd2_stream_load_crash_recovery(spark, tmp_path):
 
     # restart through the REAL operator on the same checkpoint
     stream2 = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(land)
-    q2 = incremental.scd2_stream_load(stream2, store, ckpt)
+    q2 = stream_into_store(stream2, store, ckpt)
     q2.awaitTermination(120)
 
     ref = vs.VersionedTripleStore(spark, str(tmp_path / "ref_store"))

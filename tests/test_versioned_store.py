@@ -162,6 +162,22 @@ def test_persistence_roundtrip(spark, tmp_path):
     check_invariants(state)
 
 
+def test_load_batch_releases_its_cached_batch(spark, tmp_path):
+    """merge_batch caches the disambiguated batch for its four joins;
+    once load_batch has written the new state nothing reads that cache,
+    so repeated loads must not accumulate cached RDDs."""
+    def n_cached():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    before = n_cached()
+    store.load_batch(two_model_fixture(spark, T0))
+    store.load_batch(two_model_fixture(spark, T1))
+    store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
+    assert n_cached() <= before
+    assert store.state().triplet.count() == 17
+
+
 def test_vacuum_closed_ranges(spark, tmp_path):
     """Vacuum drops only deprecated-and-closed ranges; current graph,
     open history, and graph_at inside the horizon are untouched;
