@@ -507,7 +507,7 @@ def main():
             detail["local_warm"] = {**old, "history": hist}
     elif "local_warm" in prev:
         detail["local_warm"] = prev["local_warm"]
-    # stage_timings (scripts/stage_timings.py) is likewise a sidecar
+    # stage_timings (scripts/audit.py stages) is likewise a sidecar
     # block a plain bench run must not erase
     if "stage_timings" in prev:
         detail["stage_timings"] = prev["stage_timings"]

@@ -1557,19 +1557,6 @@ def chat_template_render(
     )
 
 
-def with_observation(df: DataFrame, name: str, *metrics: Column):
-    """Attach a named :class:`pyspark.sql.Observation` to ``df`` —
-    pipeline telemetry (row counts, null rates, filter pass rates)
-    collected AS A SIDE EFFECT of the action that already runs, zero
-    extra passes over the data: the at-scale alternative to a
-    separate ``count()`` job per metric. Returns ``(df, observation)``;
-    read ``observation.get`` after the first action completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs
-
-
 def kv_prefix_sharing(
     df: DataFrame,
     text_col: str = "text",

@@ -356,8 +356,7 @@ def sectionize_lateral(
 ) -> DataFrame:
     """N1 on Spark 4's Python UDTF surface: the sectionizer as a
     TABLE function consumed via ``LATERAL`` — the modern-API sibling
-    of :func:`sectionize` (same split logic, same rows), the way
-    :func:`sessionize_tws` siblings the GroupState sessionizer.
+    of :func:`sectionize` (same split logic, same rows).
 
     A UDTF emits the one-doc-to-N-sections fan-out DIRECTLY as rows —
     no array column + explode round-trip, no struct re-aliasing — and

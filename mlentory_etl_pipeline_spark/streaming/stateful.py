@@ -148,10 +148,9 @@ def _ts_us_array(values) -> "np.ndarray":
 
 
 def _fold_sessions(t_parts, c_parts, prev, gap_us):
-    """The shared VECTORIZED session fold behind both stateful APIs
-    (GroupState v1 and transformWithState v2 — one implementation, so
-    the v1 operator's hard oracle covers the core of both): gap breaks
-    via one array diff, per-session counts/totals via
+    """The VECTORIZED session fold behind :func:`make_session_update`
+    (the GroupState sessionizer, whose registry query carries the hard
+    oracle): gap breaks via one array diff, per-session counts/totals via
     ``np.add.reduceat`` segment sums. The first version iterated
     events row-at-a-time in Python and built a 1-row DataFrame per
     closed session — measured ~8 s of a 10 s stateful batch at sf0.1;
@@ -231,7 +230,7 @@ def _sessions_df(key, out_s, out_l, out_n, out_t) -> pd.DataFrame:
 def make_session_update(gap_us: int):
     """Build the per-key update function for
     :func:`sessionize_with_timeout` (gap captured by closure); the
-    session fold itself is the shared :func:`_fold_sessions`."""
+    session fold itself is :func:`_fold_sessions`."""
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
@@ -309,94 +308,4 @@ def sessionize_with_timeout(
         stateStructType=_SESSION_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def make_session_processor(gap_us: int):
-    """Build the :class:`StatefulProcessor` for
-    :func:`sessionize_tws` — the same per-key session fold as
-    :func:`make_session_update`, re-expressed on Spark 4's
-    ``transformWithState`` surface: an explicit named ValueState
-    replaces the implicit GroupState, and event-time TIMERS are
-    first-class (register/delete per key) instead of the single
-    ``setTimeoutTimestamp`` slot. Import is deferred so the module
-    stays importable on older PySpark."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.handle = handle
-            self.state = handle.getValueState("session", _SESSION_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            t_parts, c_parts = [], []
-            for pdf in rows:
-                if len(pdf):
-                    t_parts.append(_ts_us_array(pdf["ts"]))
-                    c_parts.append(pdf["_cents"].to_numpy(np.int64))
-            prev = tuple(self.state.get()) if self.state.exists() else None
-            # the fold is the SAME _fold_sessions the oracle-carrying
-            # v1 operator runs — only the state/timer plumbing differs
-            closed, new_state = _fold_sessions(t_parts, c_parts, prev, gap_us)
-            if new_state is None:
-                return
-            if closed and closed[0]:
-                yield _sessions_df(key, *closed)
-            self.state.update(tuple(int(v) for v in new_state))
-            # timers accumulate on this API (unlike setTimeoutTimestamp,
-            # which replaces): clear the key's previous timer first
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer(int(new_state[1]) // 1000 + gap_us // 1000)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if self.state.exists():
-                start_us, last_us, n, total = self.state.get()
-                self.state.clear()
-                yield _sessions_df(key, [start_us], [last_us], [n], [total])
-
-        def close(self):
-            pass
-
-    return SessionProcessor()
-
-
-def sessionize_tws(
-    events: DataFrame,
-    gap: str = "4 hours",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """The :func:`sessionize_with_timeout` semantics on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API
-    (SPARK-49564 "state v2"): named state variables (Value/List/Map)
-    instead of one tuple slot, first-class per-key timers, and a
-    RocksDB-backed state store (the caller must set
-    ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider — transformWithState requires it). Output is
-    bit-identical to the v1 operator and carries the same batch-parity
-    oracle; the drain recipe (sentinel pair advancing the watermark)
-    is unchanged. Runtime dependency: PySpark's transformWithState
-    driver worker speaks protobuf to the JVM — ``google.protobuf``
-    must be installed (it is absent in the build sandbox, where the
-    parity test self-skips; the v1 operator carries the oracle).
-
-    Scale posture: identical to v1 — state holds ACTIVE sessions only
-    (closed sessions emit and clear), shuffle is one user-keyed
-    exchange per micro-batch; RocksDB additionally spills state to
-    local disk, which is what lets 100 TB-scale key cardinalities
-    outgrow executor heap without OOM.
-    """
-    from mlentory_etl_pipeline_spark.streaming.incremental import _event_time
-
-    gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
-    prepared = (
-        _event_time(events, "ts")
-        .withColumn("_cents", F.floor(F.col("value") * 100).cast("long"))
-        .withWatermark("ts", watermark_delay)
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        make_session_processor(gap_us),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
     )

@@ -11,7 +11,8 @@ Steps:
   1. pytest tests/ -q -m "slow or not slow"   (full suite: pytest.ini's
                                                default deselects the slow tier)
   2. scripts/check_correctness.py sf0.01       (every oracle query vs DuckDB)
-  3. scripts/audit_schemas.py                  (no complex-typed outputs)
+  3. scripts/audit.py plan                     (plan shape + output schema;
+                                               rewrites PLAN_AUDIT.json)
   4. scripts/gen_coverage.py --check           (COVERAGE.md + README.md fresh)
 """
 
@@ -43,7 +44,7 @@ def main() -> None:
     steps += [
         ("correctness sf0.01",
          [sys.executable, "scripts/check_correctness.py", "/root/testdata/sf0.01"]),
-        ("schema audit", [sys.executable, "scripts/audit_schemas.py"]),
+        ("plan audit", [sys.executable, "scripts/audit.py", "plan"]),
         ("coverage/README fresh",
          [sys.executable, "scripts/gen_coverage.py", "--check"]),
     ]

@@ -1,6 +1,6 @@
 """Unit tests for the verification stack's value canonicalization
 (``scripts/check_correctness.canon``) — specifically the host-timezone
-invariance semantics the TZ audit (scripts/tz_audit.py) depends on.
+invariance semantics the TZ audit (``scripts/audit.py tz``) depends on.
 
 The two naive-datetime cases that MUST be kept apart:
 

@@ -752,28 +752,6 @@ def test_chat_template_render_orders_and_counts(spark):
     assert out[2] == (1, "<|user|>solo", 1)
 
 
-def test_with_observation_collects_metrics_in_one_pass(spark):
-    import pyspark.sql.functions as F
-
-    from mlentory_etl_pipeline_spark.operators.curation import (
-        with_observation,
-    )
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(100)], "id long, v double"
-    )
-    observed, obs = with_observation(
-        df,
-        "quality",
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("v") >= 50.0, 1).otherwise(0)).alias("passed"),
-    )
-    kept = observed.where(F.col("v") >= 50.0).count()
-    assert kept == 50
-    m = obs.get
-    assert m["rows"] == 100 and m["passed"] == 50
-
-
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(

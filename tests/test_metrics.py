@@ -28,6 +28,25 @@ def test_observed_metrics_no_extra_job(spark):
     assert got["null_v"] == 100
 
 
+def test_observed_collects_filter_pass_rate_in_one_pass(spark):
+    # count_rows=False: only the caller's metrics, here a row count and
+    # a filter pass count, collected by the one action that keeps rows
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(100)], "id long, v double"
+    )
+    inst, obs = observed(
+        df,
+        "quality",
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.when(F.col("v") >= 50.0, 1).otherwise(0)).alias("passed"),
+        count_rows=False,
+    )
+    kept = inst.where(F.col("v") >= 50.0).count()
+    assert kept == 50
+    m = obs.get
+    assert m["rows"] == 100 and m["passed"] == 50
+
+
 def test_observed_through_write(spark, tmp_path):
     # metrics also fire when the action is a sink write — the
     # load-pipeline use case (count what was merged without re-scanning)

@@ -327,7 +327,7 @@ def test_fold_protocol_crash_replay_interleavings(tmp_path_factory, data):
 
 
 # ---------------------------------------------------------------------
-# _fold_sessions (the shared vectorized session fold) vs a naive model
+# _fold_sessions (the vectorized session fold) vs a naive model
 # ---------------------------------------------------------------------
 
 @given(
