@@ -7,7 +7,7 @@ a compact headline JSON as the FINAL stdout line:
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
      "cold_total": N, "streaming": {...}, "streaming_total": N}
 
-Full detail (cold per-query, SCD2 scenarios, the 44-query extended
+Full detail (cold per-query, SCD2 scenarios, the ``EXTENDED_QUERIES``
 sweep) is written to ``BENCH_DETAIL.json`` next to this file, NOT to
 stdout — the driver's tail capture has a bounded buffer, and r4's
 single giant line got truncated from the front, losing the official
@@ -42,6 +42,169 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from mlentory_etl_pipeline_spark.plans.queries import REGISTRY
 from mlentory_etl_pipeline_spark.session import get_spark
 from perfbench.layers import descendants, proc_cpu_s
+
+
+# Extended (non-headline) coverage: one steady-state timing per
+# newer operator family. Kept OUT of headline_total so the
+# round-over-round comparison stays apples-to-apples; additive
+# evidence that the newer families hold the same perf discipline.
+EXTENDED_QUERIES = (
+    "record_linkage_blocked",
+    "setsim_prefix_jaccard",
+    "dsir_importance_weights",
+    "graph_triangle_counts",
+    "histogram_quantile_sketch",
+    "agg_state_incremental_rollup",
+    "stratified_split_counts",
+    "dedup_span_removal",
+    "semdedup_embeddings",
+    "zorder_orders_layout",
+    "compaction_plan_files",
+    "bloom_prune_semi_join",
+    "mg_frequent_tokens",
+    "nb_quality_bootstrap_scores",
+    "graph_kcore_customers",
+    "bpe_train_merges",
+    "bootstrap_ci_avg_quantity",
+    "kl_domain_drift_by_source",
+    "markov_event_transitions",
+    "rocchio_label_confusion",
+    "ivm_join_delta",
+    "ewma_user_value",
+    "trend_value_drift_by_type",
+    "schema_evolution_union",
+    "auc_event_value_purchase",
+    "graph_label_propagation",
+    "dp_noisy_event_counts",
+    "range_partition_plan",
+    "cohort_retention_weekly",
+    "ab_welch_value_test",
+    "pmi_top_collocations",
+    "corr_matrix_lineitem",
+    "golden_record_users",
+    "kaplan_meier_churn",
+    "zscore_volume_bursts",
+    "cusum_value_changepoint",
+    "copurchase_supplier_pairs",
+    "welch_value_by_weekday",
+    "privacy_k_anonymity_audit",
+    "oov_rate_by_source",
+    "quantile_normalize_scores",
+    "provenance_reified_export",
+    "scd2_reified_current_export",
+    "http_chunk_sink_receipts",
+    "holt_trend_forecast_users",
+    "aqp_revenue_estimate",
+    # cogroup_reconcile_order_totals is gate-verified but NOT
+    # benched: cogrouped applyInPandas pays one Python call per
+    # key (its documented price as a semantics surface), which
+    # at sf0.1's 150k orders is a per-key-overhead measurement,
+    # not an engine throughput number.
+    "nlp_sectionize_udtf",
+    "skew_join_key_profile",
+    "join_size_estimate",
+    "benford_price_audit",
+    "functional_dependency_audit",
+    "mutual_information_pairs",
+    "aqp_stratified_revenue",
+    "mann_kendall_user_trend",
+    "theil_sen_user_slope",
+    "robust_location_by_type",
+    "turtle_serialization",
+    "jsonld_serialization",
+    "dedup_minhash_recall_audit",
+    "hll_error_audit",
+    "cms_error_audit",
+    "ab_mann_whitney_values",
+    "ks_value_drift_halves",
+    "gini_order_value_by_priority",
+    "jackknife_source_mean_chars",
+    "acf_daily_event_counts",
+    "isotonic_purchase_rate_by_cohort",
+    "rfm_customer_segments",
+    "ntriples_datasource_roundtrip",
+    "embedding_gram_matrix",
+    "embedding_pca_spectrum",
+    "ols_value_on_hour_dom",
+    "transition_latency_events",
+    "association_rules_suppliers",
+    "ranking_quality_int8_coarse",
+    "hybrid_rrf_search",
+    "ranking_quality_truncated_dims",
+    "weekday_seasonality_events",
+    "graph_ppr_related_suppliers",
+    "sequence_trigrams_events",
+    "psi_value_drift_events",
+    "conformal_value_intervals",
+    "forecast_backtest_users",
+    "training_labels_churn",
+    "ccf_views_purchases",
+    "shannon_diversity_users",
+    "logrank_churn_payers",
+    "did_purchase_value",
+    "bollinger_daily_revenue",
+    "cohort_ltv_weekly",
+    "cuped_value_variance_reduction",
+    "link_prediction_suppliers",
+    "rate_ratio_purchases",
+    "rake_keywords_docs",
+    "mad_scale_by_type",
+    "hill_tail_index_prices",
+    "seasonal_adjusted_bursts_events",
+    "skyline_parts_price_size",
+    "weighted_percentiles_price",
+    "woe_iv_value_purchase",
+    "best_split_value_purchase",
+    "attribution_models_purchases",
+    "als_rank1_supplier_factors",
+    "fellegi_sunter_part_weights",
+    "croston_part_demand",
+    "variant_props_rollup",
+    "dbscan_embedding_clusters",
+    "dawid_skene_consensus_labels",
+    "unigram_lm_tokenizer_round",
+    "watermark_greenlist_detection",
+    "kneser_ney_bigram_lm",
+    "kv_prefix_sharing_docs",
+    "grpo_group_advantages",
+    "best_of_n_reward_curve",
+    "dpo_pair_mining",
+    "bcubed_simhash_vs_exact",
+    "kcenter_greedy_coreset",
+    "late_interaction_maxsim",
+    "injection_phrase_audit",
+    "token_budget_waterfill_sources",
+    "krippendorff_alpha_langs",
+    "bucketed_colocated_join",
+    "slice_finder_return_rate",
+    "vocab_overlap_sources",
+    "packing_efficiency_audit",
+    "ngram_novelty_val_vs_train",
+    "tv_distance_event_mix",
+    "holt_winters_event_volumes",
+    "capture_recapture_corpus_size",
+    "median_ci_event_values",
+    "shapley_source_vocab_value",
+    "monroe_log_odds_sources",
+    "mcnemar_paired_classifiers",
+    "jsd_source_unigrams",
+    "neyman_allocation_event_types",
+    "greedy_set_cover_docs",
+    "ab_sample_size_planning",
+    "trimmed_mean_event_values",
+    "effect_size_halves_by_type",
+    "runs_test_shuffle_order",
+    "spearman_value_hour_by_type",
+)
+
+# Streaming bucket: the stateful drains, timed twice each.
+STREAMING_QUERIES = (
+    "streaming_stateful_sessions",
+    "streaming_dedup_watermark",
+    "streaming_stateful_running_agg",
+    "agg_state_stream_rollup",
+    "streaming_attribution_join",
+)
 
 
 def scd2_scenarios(spark, sf_dir: str) -> dict[str, float]:
@@ -138,6 +301,9 @@ def _load_telemetry(
 
 
 def main():
+    unknown = [n for n in (*EXTENDED_QUERIES, *STREAMING_QUERIES) if n not in REGISTRY]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     stat_start = _proc_stat_snapshot()
     cpu_start = _bench_cpu_s(None)  # before the JVM exists
@@ -167,170 +333,12 @@ def main():
 
     scenarios = scd2_scenarios(spark, sf_dir)
 
-    # Extended (non-headline) coverage: one steady-state timing per
-    # newer operator family. Kept OUT of headline_total so the
-    # round-over-round comparison stays apples-to-apples; additive
-    # evidence that the newer families hold the same perf discipline.
-    extended_names = [
-        n
-        for n in (
-            "record_linkage_blocked",
-            "setsim_prefix_jaccard",
-            "dsir_importance_weights",
-            "graph_triangle_counts",
-            "histogram_quantile_sketch",
-            "agg_state_incremental_rollup",
-            "stratified_split_counts",
-            "dedup_span_removal",
-            "semdedup_embeddings",
-            "zorder_orders_layout",
-            "compaction_plan_files",
-            "bloom_prune_semi_join",
-            "mg_frequent_tokens",
-            "nb_quality_bootstrap_scores",
-            "graph_kcore_customers",
-            "bpe_train_merges",
-            "bootstrap_ci_avg_quantity",
-            "kl_domain_drift_by_source",
-            "markov_event_transitions",
-            "rocchio_label_confusion",
-            "ivm_join_delta",
-            "ewma_user_value",
-            "trend_value_drift_by_type",
-            "schema_evolution_union",
-            "auc_event_value_purchase",
-            "graph_label_propagation",
-            "dp_noisy_event_counts",
-            "range_partition_plan",
-            "cohort_retention_weekly",
-            "ab_welch_value_test",
-            "pmi_top_collocations",
-            "corr_matrix_lineitem",
-            "golden_record_users",
-            "kaplan_meier_churn",
-            "zscore_volume_bursts",
-            "cusum_value_changepoint",
-            "copurchase_supplier_pairs",
-            "welch_value_by_weekday",
-            "privacy_k_anonymity_audit",
-            "oov_rate_by_source",
-            "quantile_normalize_scores",
-            "provenance_reified_export",
-            "scd2_reified_current_export",
-            "http_chunk_sink_receipts",
-            "holt_trend_forecast_users",
-            "aqp_revenue_estimate",
-            # cogroup_reconcile_order_totals is gate-verified but NOT
-            # benched: cogrouped applyInPandas pays one Python call per
-            # key (its documented price as a semantics surface), which
-            # at sf0.1's 150k orders is a per-key-overhead measurement,
-            # not an engine throughput number.
-            "nlp_sectionize_udtf",
-            "skew_join_key_profile",
-            "join_size_estimate",
-            "benford_price_audit",
-            "functional_dependency_audit",
-            "mutual_information_pairs",
-            "aqp_stratified_revenue",
-            "mann_kendall_user_trend",
-            "theil_sen_user_slope",
-            "robust_location_by_type",
-            "turtle_serialization",
-            "jsonld_serialization",
-            "multimodal_arrow_digest",
-            "dedup_minhash_recall_audit",
-            "hll_error_audit",
-            "cms_error_audit",
-            "ab_mann_whitney_values",
-            "ks_value_drift_halves",
-            "gini_order_value_by_priority",
-            "jackknife_source_mean_chars",
-            "acf_daily_event_counts",
-            "isotonic_purchase_rate_by_cohort",
-            "rfm_customer_segments",
-            "ntriples_datasource_roundtrip",
-            "embedding_gram_matrix",
-            "embedding_pca_spectrum",
-            "ols_value_on_hour_dom",
-            "transition_latency_events",
-            "association_rules_suppliers",
-            "ranking_quality_int8_coarse",
-            "hybrid_rrf_search",
-            "ranking_quality_truncated_dims",
-            "weekday_seasonality_events",
-            "graph_ppr_related_suppliers",
-            "sequence_trigrams_events",
-            "psi_value_drift_events",
-            "conformal_value_intervals",
-            "forecast_backtest_users",
-            "training_labels_churn",
-            "ccf_views_purchases",
-            "shannon_diversity_users",
-            "logrank_churn_payers",
-            "did_purchase_value",
-            "bollinger_daily_revenue",
-            "cohort_ltv_weekly",
-            "cuped_value_variance_reduction",
-            "link_prediction_suppliers",
-            "rate_ratio_purchases",
-            "rake_keywords_docs",
-            "mad_scale_by_type",
-            "hill_tail_index_prices",
-            "seasonal_adjusted_bursts_events",
-            "skyline_parts_price_size",
-            "weighted_percentiles_price",
-            "woe_iv_value_purchase",
-            "best_split_value_purchase",
-            "attribution_models_purchases",
-            "als_rank1_supplier_factors",
-            "fellegi_sunter_part_weights",
-            "croston_part_demand",
-            "variant_props_rollup",
-            "dbscan_embedding_clusters",
-            "dawid_skene_consensus_labels",
-            "unigram_lm_tokenizer_round",
-            "watermark_greenlist_detection",
-            "kneser_ney_bigram_lm",
-            "kv_prefix_sharing_docs",
-            "grpo_group_advantages",
-            "best_of_n_reward_curve",
-            "dpo_pair_mining",
-            "bcubed_simhash_vs_exact",
-            "kcenter_greedy_coreset",
-            "late_interaction_maxsim",
-            "injection_phrase_audit",
-            "token_budget_waterfill_sources",
-            "krippendorff_alpha_langs",
-            "bucketed_colocated_join",
-            "slice_finder_return_rate",
-            "vocab_overlap_sources",
-            "packing_efficiency_audit",
-            "ngram_novelty_val_vs_train",
-            "tv_distance_event_mix",
-            "holt_winters_event_volumes",
-            "capture_recapture_corpus_size",
-            "median_ci_event_values",
-            "shapley_source_vocab_value",
-            "monroe_log_odds_sources",
-            "mcnemar_paired_classifiers",
-            "jsd_source_unigrams",
-            "neyman_allocation_event_types",
-            "greedy_set_cover_docs",
-            "multimodal_phash_buckets",
-            "ab_sample_size_planning",
-            "trimmed_mean_event_values",
-            "effect_size_halves_by_type",
-            "runs_test_shuffle_order",
-            "spearman_value_hour_by_type",
-        )
-        if n in REGISTRY
-    ]
     # extended timings COLLECT the result instead of count(): several
     # of these queries produce aggregate-only outputs whose expensive
     # value expressions count() would column-prune away (headline keeps
     # the count() methodology for round-over-round comparability).
     extended: dict[str, float] = {}
-    for name in extended_names:
+    for name in EXTENDED_QUERIES:
         REGISTRY[name].spark_fn(spark, sf_dir).collect()  # warm-up
         t0 = time.perf_counter()
         REGISTRY[name].spark_fn(spark, sf_dir).collect()
@@ -352,27 +360,20 @@ def main():
     streaming: dict[str, float] = {}
     streaming_run1: dict[str, float] = {}
     streaming_run2: dict[str, float] = {}
-    for name in (
-        "streaming_stateful_sessions",
-        "streaming_dedup_watermark",
-        "streaming_stateful_running_agg",
-        "agg_state_stream_rollup",
-        "streaming_attribution_join",
-    ):
-        if name in REGISTRY:
-            t0 = time.perf_counter()
-            REGISTRY[name].spark_fn(spark, sf_dir).count()
-            streaming_run1[name] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            REGISTRY[name].spark_fn(spark, sf_dir).count()
-            streaming_run2[name] = round(time.perf_counter() - t0, 3)
-            # METHODOLOGY (since r6; ADVICE r6): the bucket reports
-            # min(run1, run2). BENCH artifacts from r1-r5 recorded a
-            # SINGLE run, so cross-round comparisons of streaming /
-            # streaming_total spanning r6 are not apples-to-apples —
-            # compare streaming_cold_total (= run1, the old
-            # semantics), or per-run numbers in BENCH_DETAIL.json.
-            streaming[name] = min(streaming_run1[name], streaming_run2[name])
+    for name in STREAMING_QUERIES:
+        t0 = time.perf_counter()
+        REGISTRY[name].spark_fn(spark, sf_dir).count()
+        streaming_run1[name] = round(time.perf_counter() - t0, 3)
+        t0 = time.perf_counter()
+        REGISTRY[name].spark_fn(spark, sf_dir).count()
+        streaming_run2[name] = round(time.perf_counter() - t0, 3)
+        # METHODOLOGY (since r6; ADVICE r6): the bucket reports
+        # min(run1, run2). BENCH artifacts from r1-r5 recorded a
+        # SINGLE run, so cross-round comparisons of streaming /
+        # streaming_total spanning r6 are not apples-to-apples —
+        # compare streaming_cold_total (= run1, the old
+        # semantics), or per-run numbers in BENCH_DETAIL.json.
+        streaming[name] = min(streaming_run1[name], streaming_run2[name])
 
     # ANN quality telemetry in the benched run (VERDICT r8 №7): the
     # trained-quantizer recall audit at THIS bench's scale factor, so

@@ -9,8 +9,7 @@ A from-scratch, Spark-first re-expression of the capabilities of the
 - search-document build + prefix/facet search (§2.7)
 - extract-side filters / tag classification / pagination (§2.2/§2.3)
 - beyond-reference training-data ops: dedup (exact / MinHash-LSH /
-  SimHash / n-gram Jaccard), ANN similarity search, text stats,
-  multimodal column plumbing
+  SimHash / n-gram Jaccard), ANN similarity search, text stats
 
 Everything is declarative DataFrame/SQL so Catalyst handles pushdown,
 pruning, join selection and AQE; Python UDFs appear only where the

@@ -1,6 +1,6 @@
 """BMP (Windows DIB) decoder + encoder twin — stdlib + numpy.
 
-The fourth stdlib image path (after PNG, JPEG, GIF; reference anchor
+A standalone codec with no caller in the query registry (reference anchor
 ``HFDatasetManager.py:202-215`` — arbitrary HF dataset columns via
 ``load_dataset(...).to_pandas()``, no codec in the reference itself). BMP is uncompressed (or trivially
 RLE-compressed) and LOSSLESS, so the encoder twin gives bit-exact

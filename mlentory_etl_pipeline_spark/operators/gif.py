@@ -1,9 +1,9 @@
 """GIF87a/89a decoder + encoder twin — stdlib + numpy, no external codec.
 
-Completes the in-container image trio (PNG in round 6, JPEG earlier
-this round; reference anchor ``HFDatasetManager.py:202-215``
-materializes arbitrary HF dataset columns, image features included —
-the reference ships no codec of its own). GIF is LOSSLESS, so unlike JPEG the
+A standalone codec with no caller in the query registry (reference
+anchor ``HFDatasetManager.py:202-215`` materializes arbitrary HF
+dataset columns, image features included — the reference ships no
+codec of its own). GIF is LOSSLESS, so unlike JPEG the
 encoder twin gives bit-exact round-trip oracles: any palette image
 must survive encode -> decode unchanged, across interlacing, LZW code
 widths, dictionary resets, and multi-frame animations.
@@ -28,9 +28,8 @@ Anything else (disposal 3 "restore to previous") raises
 ``NotImplementedError`` (capability-gap taxonomy); malformed bytes
 raise ``ValueError``.
 
-Scale note: like the PNG/JPEG paths this decoder runs per-row inside
-Arrow-batched ``mapInPandas`` partitions — images are independent, so
-the parallel unit is the row and no cross-row state exists.
+Scale note: images are independent, so the parallel unit is the
+image and no cross-image state exists.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ import numpy as np
 # interlace pass grid: (start row, step)
 _INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
-# ITU-R 601-2 integer luma — the same contract as the PNG/JPEG paths
+# ITU-R 601-2 integer luma — the same contract as the JPEG/BMP decoders
 _LUMA = (299, 587, 114)
 
 
@@ -326,7 +325,7 @@ def decode_gif(content: bytes):
 
 def decode_gif_luma(content: bytes, frame: int = 0) -> np.ndarray:
     """Per-pixel 8-bit luminance of one composed frame — the same
-    601-2 integer luma contract as the PNG and JPEG paths."""
+    601-2 integer luma contract as the JPEG and BMP decoders."""
     frames, palettes, _delays, _w, _h = decode_gif(content)
     if not -len(frames) <= frame < len(frames):
         raise ValueError(f"GIF: frame {frame} out of range")

@@ -1,15 +1,13 @@
 """Baseline JPEG (ITU-T T.81) decoder + encoder twin — stdlib + numpy.
 
-Closes the last real-media capability gap in the multimodal family
-(reference anchor: ``HFDatasetManager.py:202-215`` materializes
-arbitrary HF dataset columns — image features included — via
+A standalone codec with no caller in the query registry (reference
+anchor: ``HFDatasetManager.py:202-215`` materializes arbitrary HF
+dataset columns — image features included — via
 ``datasets.load_dataset(...).to_pandas()``; the reference ships no
-codec of its own. PNG landed in round 6, JPEG lands here). Same design as
-the PNG pair in :mod:`.multimodal`: a from-scratch DECODER for the real
-path and an ENCODER twin so tests can round-trip without any external
-codec, plus hard-exactness fixtures (constant 8x8 blocks quantize and
-reconstruct bit-exactly through the real DCT path, see
-``tests/test_jpeg.py``).
+codec of its own): a from-scratch DECODER and an ENCODER twin so tests
+can round-trip without any external codec, plus hard-exactness
+fixtures (constant 8x8 blocks quantize and reconstruct bit-exactly
+through the real DCT path, see ``tests/test_jpeg.py``).
 
 Scope — baseline, extended-sequential, progressive DCT, AND lossless
 (Annex H) Huffman processes — essentially every non-arithmetic JPEG
@@ -36,20 +34,15 @@ in the wild:
 - lossless (SOF3): Annex H neighbor prediction (all 7 predictors,
   point transform, modulo-2^16 differences, category 16), precisions
   2-16 (scaled to the 8-bit plane contract above 8), bit-exact by
-  construction — so a lossless-JPEG and a PNG of the same pixels must
-  produce IDENTICAL features, which the tests assert on arbitrary
-  images.
+  construction.
 
 Hierarchical/differential (SOF5-15) and arithmetic coding raise
-``NotImplementedError`` — the same capability-gap taxonomy as the
-PNG/WAV gates, so ``decode_media``'s ``fallback_to_fake`` applies.
-Corrupt bytes raise ``ValueError``.
+``NotImplementedError`` (capability-gap taxonomy). Corrupt bytes raise
+``ValueError``.
 
 Scale note: JPEG entropy decode is inherently serial WITHIN one image
 (DC prediction chains through the scan), so the parallel unit is the
-image row, exactly how :func:`.multimodal.decode_media` batches them —
-Arrow moves whole binary columns and each executor decodes its
-partition's images independently; there is no cross-row state.
+image; there is no cross-image state.
 """
 
 from __future__ import annotations
@@ -828,8 +821,7 @@ def decode_jpeg(content: bytes):
             if ci not in sample_planes:
                 raise ValueError("JPEG: component missing from scan data")
             full = sample_planes[ci].astype(np.int64)
-            # 8-bit output contract: higher precisions scale like the
-            # PNG/TIFF 16-bit paths
+            # 8-bit output contract: higher precisions scale down to it
             if precision > 8:
                 full >>= precision - 8
             plane = np.clip(full, 0, 255).astype(np.uint8)
@@ -944,8 +936,8 @@ def decode_jpeg_luma(content: bytes):
 
     Grayscale frames pass Y through; color frames convert JFIF
     full-range YCbCr -> RGB (rounded, clamped) and then apply the same
-    ITU-R 601-2 integer luma as the PNG path, so the two stdlib image
-    decoders share one feature contract.
+    ITU-R 601-2 integer luma as the GIF and BMP decoders, so the stdlib
+    image decoders share one feature contract.
     """
     planes, width, height = decode_jpeg(content)
     if len(planes) == 1:

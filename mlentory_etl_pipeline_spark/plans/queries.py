@@ -39,7 +39,6 @@ from mlentory_etl_pipeline_spark.operators import (
     extract_ops,
     graph,
     melt as melt_ops,
-    multimodal,
     nlp,
     search,
     similarity,
@@ -2726,96 +2725,6 @@ def text_fingerprints(spark, sf_dir):
             "rolling_fp"
         ),
     )
-
-
-# =====================================================================
-# Multimodal plumbing (rows-only driver checks; full tests in pytest)
-# =====================================================================
-
-@register(
-    "multimodal_decode_features",
-    "binary media column → deterministic fake decode via mapInPandas "
-    "(real Spark plumbing, stubbed codec) — now under a HARD oracle: "
-    "the synthetic payloads are printable ASCII, so DuckDB can rebuild "
-    "each blob char-by-char, sha256 it, and replicate the stub's "
-    "features (digest bytes → float32(b/255) → micro-quantized long; "
-    "float32 cast parity verified EXHAUSTIVELY over all 256 byte "
-    "values); hex digits decode via instr digit arithmetic, not "
-    "'0x' casts",
-    oracle="""
-    WITH chars AS (
-      SELECT i, j, CHR(CAST((i * 37 + j) % 95 + 32 AS INTEGER)) AS c
-      FROM range(0, 64) r(i) CROSS JOIN range(0, 128) s(j)
-      WHERE j < 64 + i
-    ),
-    m AS (
-      SELECT i AS media_id,
-             CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS media_type,
-             STRING_AGG(c, '' ORDER BY j) AS content
-      FROM chars GROUP BY i
-    ),
-    d AS (
-      SELECT media_id, media_type,
-             CAST(LEN(content) AS BIGINT) AS n_bytes,
-             SHA256(content) AS digest
-      FROM m
-    ),
-    f AS (
-      SELECT media_id,
-             STRING_AGG(CAST(CAST(ROUND(CAST(CAST(
-                 ((INSTR('0123456789abcdef',
-                         SUBSTR(digest, 2 * k + 1, 1)) - 1) * 16 +
-                  (INSTR('0123456789abcdef',
-                         SUBSTR(digest, 2 * k + 2, 1)) - 1)
-               ) / 255.0 AS FLOAT) AS DOUBLE) * 1000000, 0) AS BIGINT)
-               AS VARCHAR), '|' ORDER BY k) AS features
-      FROM d CROSS JOIN range(0, 8) t(k)
-      GROUP BY media_id
-    )
-    SELECT d.media_id, d.media_type, d.n_bytes,
-           d.digest AS content_sha, f.features
-    FROM d JOIN f USING (media_id)
-    ORDER BY d.media_id
-    """,
-    survey_ops=("multimodal-decode",),
-)
-def multimodal_decode_features(spark, sf_dir):
-    media = multimodal.synthetic_media(spark, n=64)
-    decoded = multimodal.decode_media(media, fake=True)
-    # Flatten the float feature vector to scaled-int strings at the
-    # registry surface (driver canonicalizer can't hash list cells).
-    return decoded.select(
-        "media_id",
-        "media_type",
-        "n_bytes",
-        "content_sha",
-        F.array_join(
-            F.transform(
-                "features",
-                lambda x: F.round(x.cast("double") * 1000000, 0).cast("long").cast("string"),
-            ),
-            "|",
-        ).alias("features"),
-    )
-
-
-@register(
-    "multimodal_frame_sample",
-    "video frame-sampling plan: sequence+explode fan-out JVM-side — "
-    "pure metadata (no blob hashing), so unlike the decode queries it "
-    "carries a hard SQL oracle replicating the synthetic media table's "
-    "video rows and the sampling grid",
-    oracle="""
-    SELECT v.media_id, s.frame_ts_ms
-    FROM (SELECT i AS media_id FROM range(0, 64) t(i) WHERE i % 3 = 2) v,
-         UNNEST(RANGE(0, 3000, 500)) AS s(frame_ts_ms)
-    """,
-    survey_ops=("multimodal-frames",),
-)
-def multimodal_frame_sample(spark, sf_dir):
-    media = multimodal.synthetic_media(spark, n=64)
-    return multimodal.frame_sample_plan(media, every_ms=500)
 
 
 # =====================================================================
@@ -8277,54 +8186,6 @@ def ann_trained_recall_audit(spark, sf_dir):
 
 
 @register(
-    "multimodal_real_wav_decode",
-    "REAL (non-stub) media decode: genuine PCM16 WAV bytes parsed by "
-    "the stdlib wave codec inside the same Arrow mapInPandas plumbing "
-    "as the fake path — per-segment RMS audio fingerprints. HARD "
-    "oracle through the real decode: the integer-lattice payload "
-    "(planted peak 128 = 2^7, 14-bit dyadic squared samples) makes "
-    "every RMS exact binary arithmetic up to ONE division and ONE "
-    "IEEE sqrt, which the oracle reproduces from the same lattice "
-    "formula — including the float32 feature-column cast",
-    oracle="""
-    WITH ids AS (SELECT UNNEST(RANGE(0, 16)) AS media_id),
-    samp AS (
-      SELECT media_id, i,
-             CASE WHEN i = 0 THEN 128
-                  ELSE ((media_id * 37 + i * 13) % 255) - 127 END AS a
-      FROM ids, UNNEST(RANGE(0, 800)) AS t(i)
-    ),
-    seg AS (
-      SELECT media_id, i // 100 AS g,
-             SQRT(CAST(SUM(a * a) AS DOUBLE) / 16384.0 / 100.0) AS rms
-      FROM samp GROUP BY 1, 2
-    )
-    SELECT media_id, 'audio' AS media_type, CAST(1644 AS BIGINT) AS n_bytes,
-           STRING_AGG(
-             CAST(CAST(ROUND(CAST(CAST(rms AS REAL) AS DOUBLE) * 1000000, 0)
-                       AS BIGINT) AS VARCHAR), '|' ORDER BY g) AS features
-    FROM seg GROUP BY media_id
-    """,
-    survey_ops=("multimodal-decode",),
-)
-def multimodal_real_wav_decode(spark, sf_dir):
-    media = multimodal.synthetic_wav_media(spark, n=16)
-    decoded = multimodal.decode_media(media, fake=False, feature_dim=8)
-    return decoded.select(
-        "media_id",
-        "media_type",
-        "n_bytes",
-        F.array_join(
-            F.transform(
-                "features",
-                lambda x: F.round(x.cast("double") * 1000000, 0).cast("long").cast("string"),
-            ),
-            "|",
-        ).alias("features"),
-    )
-
-
-@register(
     "dsir_importance_weights",
     "DSIR importance resampling (hashed bag-of-words): every document "
     "scored by mean per-word log-likelihood-ratio of a smoothed "
@@ -12415,33 +12276,6 @@ def turtle_serialization(spark, sf_dir):
 )
 def jsonld_serialization(spark, sf_dir):
     return graph.to_jsonld(_supplier_triples(spark, sf_dir))
-
-
-@register(
-    "multimodal_arrow_digest",
-    "binary-payload digest via mapInArrow — the lowest-overhead "
-    "Python path (raw pyarrow RecordBatches, zero-copy buffers, no "
-    "pandas conversion, no per-row objects): the byte-level surface "
-    "for digests/magic-byte sniffing over huge binary columns; "
-    "payloads here are utf-8 encodings of document text, so "
-    "md5(binary) == SQL md5(text) and the Arrow path carries a HARD "
-    "oracle",
-    oracle="""
-    SELECT doc_id, CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
-           MD5(text) AS md5_hex
-    FROM documents ORDER BY doc_id
-    """,
-    survey_ops=("multimodal", "N4-plumbing"),
-)
-def multimodal_arrow_digest(spark, sf_dir):
-    from mlentory_etl_pipeline_spark.operators.multimodal import (
-        digest_binary_arrow,
-    )
-
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "utf-8").alias("payload")
-    )
-    return digest_binary_arrow(d, "doc_id", "payload").orderBy("doc_id")
 
 
 def _minhash_recall_oracle(num_hashes=12, bands=4, threshold=0.5) -> str:
@@ -20142,166 +19976,6 @@ def greedy_set_cover_docs(spark, sf_dir):
         "doc_id", F.col("shingle").alias("token")
     )
     return curation.greedy_set_cover(pairs, "doc_id", "token", k=8)
-
-
-@register(
-    "multimodal_phash_buckets",
-    "perceptual-hash (aHash) near-dup bucketing over decoded media "
-    "features: the REAL mapInPandas decode plumbing (fake codec over "
-    "utf-8 payloads, so sha256(binary) == SQL sha256(text) and the "
-    "whole pipeline carries a HARD oracle — upgrading the multimodal "
-    "family beyond rows-only checks); bit i set iff 8*b_i > sum(b) "
-    "(exact integer comparison after recovering digest bytes from "
-    "the float features), bucket sizes by hash equality",
-    oracle="""
-    WITH h AS (SELECT doc_id, SHA256(text) AS hx FROM documents),
-    b AS (
-      SELECT doc_id,
-             LIST_TRANSFORM(RANGE(0, 8),
-               i -> CAST(('0x' || SUBSTR(hx, i * 2 + 1, 2)) AS INT))
-               AS bs
-      FROM h
-    ),
-    s AS (
-      SELECT doc_id, bs, CAST(LIST_SUM(bs) AS INT) AS tot FROM b
-    ),
-    a AS (
-      SELECT doc_id,
-             CAST(LIST_SUM(LIST_TRANSFORM(RANGE(0, 8),
-               i -> CASE WHEN 8 * bs[i + 1] > tot
-                    THEN CAST(POWER(2, i) AS INT) ELSE 0 END))
-               AS BIGINT) AS ahash
-      FROM s
-    ),
-    c AS (SELECT ahash, COUNT(*) AS bucket_size FROM a GROUP BY ahash)
-    SELECT a.doc_id, a.ahash, c.bucket_size
-    FROM a JOIN c USING (ahash) ORDER BY a.doc_id
-    """,
-    survey_ops=("multimodal", "dedup-clustering"),
-)
-def multimodal_phash_buckets(spark, sf_dir):
-    d = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        F.lit("png").alias("format"),
-        F.encode("text", "utf-8").alias("content"),
-    )
-    decoded = multimodal.decode_media(d, fake=True)
-    bytes_ = F.transform(
-        "features",
-        lambda f: F.round(f.cast("double") * 255).cast("int"),
-    )
-    withb = decoded.select(
-        F.col("media_id").alias("doc_id"), bytes_.alias("_b")
-    ).select(
-        "doc_id",
-        "_b",
-        F.aggregate(
-            "_b", F.lit(0), lambda a, v: a + v
-        ).alias("_tot"),
-    )
-    bit_terms = [
-        F.when(
-            F.element_at(F.col("_b"), i + 1) * 8 > F.col("_tot"),
-            F.lit(1 << i).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for i in range(8)
-    ]
-    ahash = bit_terms[0]
-    for term in bit_terms[1:]:
-        ahash = ahash + term
-    hashed = withb.select("doc_id", ahash.alias("ahash"))
-    sizes = hashed.groupBy("ahash").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    )
-    return hashed.join(sizes, "ahash").select(
-        "doc_id", "ahash", "bucket_size"
-    ).orderBy("doc_id")
-
-
-@register(
-    "multimodal_png_luminance",
-    "REAL image decode under a HARD oracle: each doc becomes a genuine "
-    "8x6 grayscale PNG (pixels = md5(doc_id) bytes tiled, encoded with "
-    "scanline filter doc_id%5 so every unfilter path 0-4 runs), the "
-    "stdlib zlib-inflate+unfilter decoder (multimodal._decode_png — "
-    "no Pillow) extracts 8 per-segment luminance means via "
-    "mapInPandas, and integer segment sums recovered from the float32 "
-    "features must equal the oracle's direct md5 hex-pair arithmetic "
-    "— the encode->deflate->inflate->unfilter->segment round-trip is "
-    "verified END TO END, closing the round-5 'real image decode is "
-    "rows-only' gap (reference media payloads arrive via "
-    "HFDatasetManager.py:202-215 load_dataset->to_pandas)",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, MD5(CAST(doc_id AS VARCHAR)) AS hx
-      FROM documents WHERE doc_id < 64
-    ),
-    px AS (
-      SELECT doc_id, p.p AS p,
-             CAST(('0x' || SUBSTR(hx, 2 * (p.p % 16) + 1, 2)) AS BIGINT)
-               AS v
-      FROM d, UNNEST(RANGE(0, 48)) AS p(p)
-    )
-    SELECT doc_id, CAST(p // 6 AS INTEGER) AS seg,
-           CAST(SUM(v) AS BIGINT) AS lum_sum
-    FROM px GROUP BY doc_id, p // 6
-    ORDER BY doc_id, seg
-    """,
-    survey_ops=("multimodal", "N4 embeddings"),
-)
-def multimodal_png_luminance(spark, sf_dir):
-    import hashlib
-
-    import pandas as pd_  # noqa: N813 - local alias, matches operators
-
-    from mlentory_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        png_encode_gray,
-    )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-
-    def build(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            pngs = []
-            for i in ids:
-                digest = hashlib.md5(str(i).encode()).digest()
-                pixels = bytes(digest[p % 16] for p in range(48))
-                pngs.append(
-                    png_encode_gray(pixels, 8, 6, filter_type=i % 5)
-                )
-            yield pd_.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": ["image"] * len(ids),
-                    "content": pngs,
-                    "format": ["png"] * len(ids),
-                    "width": [8] * len(ids),
-                    "height": [6] * len(ids),
-                    "duration_ms": pd_.array(
-                        [None] * len(ids), dtype="Int64"
-                    ),
-                }
-            )
-
-    media = d.mapInPandas(build, MEDIA_SCHEMA)
-    decoded = multimodal.decode_media(media, fake=False, feature_dim=8)
-    # each segment holds 6 pixels: mean/255 * 6*255 recovers the exact
-    # integer luminance sum (float32 carries <=1530 exactly)
-    return decoded.select(
-        F.col("media_id").alias("doc_id"),
-        F.posexplode("features").alias("seg", "_f"),
-    ).select(
-        "doc_id",
-        "seg",
-        F.round(F.col("_f").cast("double") * 1530).cast("long").alias(
-            "lum_sum"
-        ),
-    ).orderBy("doc_id", "seg")
 
 
 @register(

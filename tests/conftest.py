@@ -58,7 +58,6 @@ _SLOW_BY_NAME = {
     "test_connected_components_long_chain_logarithmic",
     "test_banded_lsh_single_corpus_scan",
     "test_http_chunk_upload_entity_aligned_and_finalize",
-    "test_decode_media_real_jpeg",
     "test_changed_values_deprecate_old_ranges",
     "test_vacuum_closed_ranges",
     "test_arxiv_version_normalization",

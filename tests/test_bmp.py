@@ -1,5 +1,5 @@
 """Tests for the BMP decoder + lossless encoder twin
-(``operators/bmp.py``) and its ``decode_media`` integration."""
+(``operators/bmp.py``)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import struct
 import numpy as np
 import pytest
 
-from mlentory_etl_pipeline_spark.operators import bmp, multimodal
+from mlentory_etl_pipeline_spark.operators import bmp
 
 
 def test_rgb24_roundtrip_exact_both_orientations():
@@ -121,18 +121,3 @@ def test_taxonomy_and_fuzz():
             bmp.decode_bmp(bytes(buf))
         except (ValueError, NotImplementedError):
             pass
-
-
-def test_decode_media_real_bmp(spark):
-    rng = np.random.default_rng(13)
-    rgb = rng.integers(0, 256, size=(24, 32, 3)).astype(np.uint8)
-    enc = bmp.bmp_encode_rgb(rgb.tobytes(), 32, 24)
-    media = spark.createDataFrame(
-        [(0, "image", enc, "bmp", 32, 24, None)], multimodal.MEDIA_SCHEMA
-    )
-    [got] = multimodal.decode_media(media, fake=False, feature_dim=6).collect()
-    r = rgb.astype(np.int64)
-    lum = ((r[..., 0] * 299 + r[..., 1] * 587 + r[..., 2] * 114) // 1000)
-    lum = lum.reshape(-1) / 255.0
-    want = [float(s.mean()) for s in np.array_split(lum, 6)]
-    assert all(abs(float(a) - b) < 1e-6 for a, b in zip(got.features, want))

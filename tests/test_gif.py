@@ -1,10 +1,10 @@
 """Tests for the from-scratch GIF decoder + encoder twin
-(``operators/gif.py``) and its ``decode_media`` integration. GIF is
-lossless, so every round trip asserts BIT-EXACT equality.
+(``operators/gif.py``). GIF is lossless, so every round trip asserts
+BIT-EXACT equality.
 
 Reference anchor: ``HFDatasetManager.py:202-215`` (arbitrary HF dataset
 columns, image features included, via load_dataset -> to_pandas;
-PNG/JPEG/GIF now decode without Pillow).
+GIF decodes here without Pillow).
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from mlentory_etl_pipeline_spark.operators import gif, multimodal
+from mlentory_etl_pipeline_spark.operators import gif
 
 
 def test_roundtrip_exact_across_palette_sizes():
@@ -136,76 +136,6 @@ def test_corrupt_and_unsupported_taxonomy():
         gif.decode_gif(raw)
 
 
-def test_decode_video_frames_real_gif(spark):
-    """Animated GIF through decode_video_frames: samples at every_ms
-    map to the frame whose display interval covers the timestamp, and
-    per-frame features equal the first-principles luma means."""
-    rng = np.random.default_rng(29)
-    pal = np.stack([np.arange(16)] * 3, axis=1).astype(np.uint8) * 17
-    fs = [rng.integers(0, 16, size=(8, 8)).astype(np.uint8) for _ in range(3)]
-    enc = gif.gif_encode(fs, pal, 8, 8, delays_ms=[100, 200, 100])
-    media = spark.createDataFrame(
-        [(7, "video", enc, "gif", 8, 8, 400)], multimodal.MEDIA_SCHEMA
-    )
-    rows = sorted(
-        multimodal.decode_video_frames(media, every_ms=100, feature_dim=4)
-        .collect(),
-        key=lambda r: r.frame_ts_ms,
-    )
-    # intervals: f0 [0,100), f1 [100,300), f2 [300,400) -> samples at
-    # 0,100,200,300 hit frames 0,1,1,2
-    assert [(r.frame_ts_ms, r.frame_index) for r in rows] == [
-        (0, 0), (100, 1), (200, 1), (300, 2),
-    ]
-    for r in rows:
-        rgb = pal[fs[r.frame_index]].astype(np.int64)
-        lum = (
-            (rgb[..., 0] * 299 + rgb[..., 1] * 587 + rgb[..., 2] * 114) // 1000
-        ).reshape(-1) / 255.0
-        want = [float(s.mean()) for s in np.array_split(lum, 4)]
-        assert all(
-            abs(float(a) - b) < 1e-6 for a, b in zip(r.features, want)
-        )
-    # all-zero delays: a single sample of the FINAL frame (the one a
-    # renderer leaves on screen after instantaneous flips)
-    enc0 = gif.gif_encode(fs, pal, 8, 8)
-    media0 = spark.createDataFrame(
-        [(8, "video", enc0, "gif", 8, 8, None)], multimodal.MEDIA_SCHEMA
-    )
-    rows0 = multimodal.decode_video_frames(media0, every_ms=100).collect()
-    assert [(r.frame_ts_ms, r.frame_index) for r in rows0] == [(0, 2)]
-    # non-GIF video: capability gap taxonomy
-    import pytest
-
-    mediam = spark.createDataFrame(
-        [(9, "video", b"\x00\x00\x00 ftypmp42", "mp4", 8, 8, 1000)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_video_frames(mediam).collect()
-    assert "real media decode" in str(exc.value)
-
-
-def test_decode_media_real_gif(spark):
-    """Real GIF bytes through the Arrow-batched decode_media path:
-    lossless decode means the features equal the first-principles
-    segment means of the palette-mapped luminance exactly."""
-    rng = np.random.default_rng(19)
-    img = rng.integers(0, 64, size=(24, 32)).astype(np.uint8)
-    pal = rng.integers(0, 256, size=(64, 3)).astype(np.uint8)
-    enc = gif.gif_encode([img], pal, 32, 24)
-    media = spark.createDataFrame(
-        [(0, "image", enc, "gif", 32, 24, None)], multimodal.MEDIA_SCHEMA
-    )
-    [got] = multimodal.decode_media(media, fake=False, feature_dim=6).collect()
-    rgb = pal[img].astype(np.int64)
-    lum = (
-        (rgb[..., 0] * 299 + rgb[..., 1] * 587 + rgb[..., 2] * 114) // 1000
-    ).reshape(-1) / 255.0
-    want = [float(s.mean()) for s in np.array_split(lum, 6)]
-    assert all(abs(float(a) - b) < 1e-6 for a, b in zip(got.features, want))
-
-
 def test_bg_index_out_of_range_substituted():
     """ADVICE r7: a logical-screen bg_index past the global color table
     (real-world files do this) must not leave out-of-range indices on
@@ -224,25 +154,3 @@ def test_bg_index_out_of_range_substituted():
     # uncovered screen area got the substituted index 0, in-range
     assert int(frames[0][4:, :].max()) < pals[0].shape[0]
     gif.decode_gif_luma(bytes(raw))  # must not raise
-
-
-def test_decode_video_frames_rejects_nonpositive_stride(spark):
-    """ADVICE r7: every_ms <= 0 would never advance the sample clock —
-    validated at plan-construction time, before any executor spins."""
-    media = spark.createDataFrame([], multimodal.MEDIA_SCHEMA)
-    for bad in (0, -100):
-        with pytest.raises(ValueError, match="every_ms"):
-            multimodal.decode_video_frames(media, every_ms=bad)
-
-
-def test_decode_video_frames_corrupt_bytes_taxonomy(spark):
-    """ADVICE r7: corrupt GIF bytes inside decode_video_frames surface
-    as the documented 'media decode failed' ValueError taxonomy (same
-    as decode_media), not a raw decoder exception."""
-    media = spark.createDataFrame(
-        [(1, "video", b"GIF89a\x00\x00", "gif", 8, 8, 100)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_video_frames(media, every_ms=100).collect()
-    assert "media decode failed (video/gif)" in str(exc.value)

@@ -1,10 +1,10 @@
 """Tests for the from-scratch baseline JPEG decoder + encoder twin
-(``operators/jpeg.py``) and its ``decode_media`` integration.
+(``operators/jpeg.py``).
 
 Reference anchor: ``HFDatasetManager.py:202-215`` (the reference
 materializes arbitrary HF dataset columns — image features included —
-via load_dataset -> to_pandas; this repo's stdlib decoders cover
-PNG + baseline JPEG without any external codec).
+via load_dataset -> to_pandas; this repo's stdlib decoder covers
+JPEG without any external codec).
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import struct
 import numpy as np
 import pytest
 
-from mlentory_etl_pipeline_spark.operators import jpeg, multimodal
+from mlentory_etl_pipeline_spark.operators import jpeg
 
 
 def _gradient(width: int, height: int) -> np.ndarray:
@@ -249,26 +249,6 @@ def test_lossless_all_predictors_bit_exact():
     assert np.array_equal(jpeg.decode_jpeg(enc)[0][0], want)
 
 
-def test_lossless_features_equal_png_for_arbitrary_images():
-    """The strongest cross-codec invariant: lossless JPEG and PNG of
-    the SAME arbitrary pixels produce bit-identical features (no
-    constant-block fixture needed — both decodes are exact)."""
-    rng = np.random.default_rng(21)
-    for _ in range(3):
-        h, w = int(rng.integers(1, 40)), int(rng.integers(1, 40))
-        img = rng.integers(0, 256, size=(h, w)).astype(np.uint8)
-        f_jls = multimodal._decode_jpeg(
-            jpeg.jpeg_encode_gray_lossless(
-                img.tobytes(), w, h, predictor=int(rng.integers(1, 8))
-            ),
-            8,
-        )
-        f_png = multimodal._decode_png(
-            multimodal.png_encode_gray(img.tobytes(), w, h), 8
-        )
-        assert f_jls == f_png
-
-
 def test_16bit_dqt_precision_path():
     """Rewrite the encoder's 8-bit DQT segment as a 16-bit-precision
     one (Pq=1); the decoder must parse it and produce identical pixels."""
@@ -355,58 +335,6 @@ def test_pillow_cross_check_if_available():
     theirs = np.asarray(Image.open(io.BytesIO(enc)).convert("L"), dtype=int)
     ours, _, _ = jpeg.decode_jpeg(enc)
     assert np.abs(theirs - ours[0].astype(int)).max() <= 1
-
-
-# -------------------------------------------------------- Spark plumbing
-
-
-def test_decode_media_real_jpeg(spark):
-    """Real JPEG bytes through the Arrow-batched decode_media path:
-    features equal the locally-computed decoder output exactly (same
-    float64 pipeline, float32 column tolerance)."""
-    # constant 8x8 blocks with even offsets under a flat 16 quantizer:
-    # the bit-exact fixture, so the features are first-principles exact
-    gray = np.zeros((24, 32), dtype=np.uint8)
-    for k, (by, bx) in enumerate((b, x) for b in range(3) for x in range(4)):
-        gray[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (k * 22) % 256
-    enc_gray = jpeg.jpeg_encode_gray(
-        gray.tobytes(), 32, 24, quant_override=[16] * 64
-    )
-    rgb = np.zeros((16, 16, 3), dtype=np.uint8)
-    rgb[..., 0], rgb[..., 1], rgb[..., 2] = 10, 250, 90
-    enc_rgb = jpeg.jpeg_encode_rgb(rgb.tobytes(), 16, 16, subsampling=(2, 2))
-    enc_prog = jpeg.jpeg_encode_gray(
-        gray.tobytes(), 32, 24, quant_override=[16] * 64, progressive=True
-    )
-    rows = [
-        (0, "image", enc_gray, "jpeg", 32, 24, None),
-        (1, "image", enc_rgb, "jpg", 16, 16, None),
-        (2, "image", enc_prog, "jpeg", 32, 24, None),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {
-        r.media_id: r
-        for r in multimodal.decode_media(media, fake=False, feature_dim=6).collect()
-    }
-    for media_id, content in ((0, enc_gray), (1, enc_rgb), (2, enc_prog)):
-        want = multimodal._decode_jpeg(content, 6)
-        assert len(got[media_id].features) == 6
-        assert all(
-            abs(float(a) - b) < 1e-6
-            for a, b in zip(got[media_id].features, want)
-        )
-    # the constant-block gray fixture's features are exactly its
-    # segment means (bit-exact decode), computable from first principles
-    lum = gray.astype(np.float64).reshape(-1) / 255.0
-    segs = np.array_split(lum, 6)
-    want_exact = [float(s.mean()) for s in segs]
-    assert all(
-        abs(float(a) - b) < 1e-6
-        for a, b in zip(got[0].features, want_exact)
-    )
-    # and the PROGRESSIVE encoding of the same image decodes to the
-    # same exact features through the Spark path
-    assert list(got[2].features) == list(got[0].features)
 
 
 def test_fill_bytes_before_markers_skipped():

@@ -13,7 +13,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mlentory_etl_pipeline_spark.operators import bmp, gif, jpeg, multimodal, tiff
+from mlentory_etl_pipeline_spark.operators import bmp, gif, jpeg
 
 
 @st.composite
@@ -29,19 +29,6 @@ def _image(draw, max_side: int = 24, levels: int = 256):
         .reshape(h, w)
     )
     return arr
-
-
-@settings(max_examples=40, deadline=None)
-@given(img=_image(), filter_type=st.integers(0, 4), interlace=st.booleans())
-def test_png_roundtrip_property(img, filter_type, interlace):
-    h, w = img.shape
-    enc = multimodal.png_encode_gray(
-        img.tobytes(), w, h, filter_type=filter_type, interlace=interlace
-    )
-    feats = multimodal._decode_png(enc, 1)
-    # decoder emits luminance means; for grayscale the mean of the
-    # segment equals the pixel mean exactly in float64
-    assert abs(feats[0] - float(img.mean()) / 255.0) < 1e-12
 
 
 @settings(max_examples=40, deadline=None)
@@ -65,24 +52,6 @@ def test_bmp_roundtrip_property(img, top_down):
         bmp.bmp_encode_rgb(rgb.tobytes(), w, h, top_down=top_down)
     )
     assert np.array_equal(got, rgb)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    img=_image(),
-    big_endian=st.booleans(),
-    packbits=st.booleans(),
-    rps=st.one_of(st.none(), st.integers(1, 8)),
-)
-def test_tiff_roundtrip_property(img, big_endian, packbits, rps):
-    h, w = img.shape
-    got, _, _ = tiff.decode_tiff(
-        tiff.tiff_encode(
-            img.tobytes(), w, h, "gray",
-            big_endian=big_endian, packbits=packbits, rows_per_strip=rps,
-        )
-    )
-    assert np.array_equal(got[:, :, 0], img)
 
 
 @settings(max_examples=25, deadline=None)

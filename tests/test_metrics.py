@@ -68,28 +68,6 @@ def test_phase_timer_report(spark):
     assert set(t.timings) == {"extract", "load"}
 
 
-def test_map_in_arrow_digest_matches_hashlib(spark):
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from mlentory_etl_pipeline_spark.operators.multimodal import (
-        digest_binary_arrow,
-    )
-
-    payloads = [(1, b"abc"), (2, b""), (3, bytes(range(256)) * 3)]
-    df = spark.createDataFrame(payloads, "id long, payload binary")
-    out = {r.id: r for r in digest_binary_arrow(df, "id", "payload").collect()}
-    for i, b in payloads:
-        assert out[i].n_bytes == len(b)
-        assert out[i].md5_hex == hashlib.md5(b).hexdigest()
-    # partition invariance (zero-copy buffers per partition)
-    again = {r.id: tuple(r) for r in digest_binary_arrow(
-        df.repartition(3), "id", "payload"
-    ).collect()}
-    assert again == {i: tuple(r) for i, r in out.items()}
-
-
 def test_kneser_ney_probabilities_sum_to_one_per_context(spark):
     from mlentory_etl_pipeline_spark.operators.textstats import (
         kneser_ney_bigram_lm,

@@ -1,6 +1,6 @@
 """Unit tests for operators not (or only partially) covered by the
-oracle registry: multimodal plumbing, approximate-ANN recall, BFS crawl
-loop, graph serialization details, melt/range-dispatch typing."""
+oracle registry: approximate-ANN recall, BFS crawl loop, graph
+serialization details, melt/range-dispatch typing."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ from mlentory_etl_pipeline_spark.operators import (
     dedup,
     extract_ops,
     graph,
-    multimodal,
     similarity,
     skew,
 )
@@ -28,287 +27,6 @@ def test_edge_ngram_prefixes(spark):
     rows = df.select(edge_ngram_prefixes(F.col("name")).alias("p")).collect()
     assert rows[0].p == ["ber", "bert", "bert-", "bert-b", "bert-ba", "bert-bas", "bert-base"]
     assert rows[1].p == []  # shorter than min_len
-
-
-def test_multimodal_decode_plumbing(spark):
-    media = multimodal.synthetic_media(spark, n=32)
-    feats = multimodal.decode_media(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 32
-    by_id = {r.media_id: r for r in rows}
-    assert by_id[0].n_bytes == 64
-    assert len(by_id[0].features) == 8
-    assert all(0.0 <= x <= 1.0 for x in by_id[0].features)
-    # Deterministic: same content → same sha and features.
-    feats2 = {r.media_id: r for r in multimodal.decode_media(media, fake=True).collect()}
-    assert feats2[5].content_sha == by_id[5].content_sha
-    assert feats2[5].features == by_id[5].features
-
-
-def test_multimodal_full_byte_range_roundtrip(spark):
-    """Full 0-255 payloads (NUL, 0x80-0xFF, every byte value) through
-    the binary-column/Arrow/mapInPandas plumbing (ADVICE r6: the
-    registry fixture narrowed to printable ASCII for its oracle — this
-    oracle-FREE test keeps non-UTF-8 binary coverage so a UTF-8-lossy
-    roundtrip bug in the Arrow path cannot pass silently)."""
-    import hashlib
-
-    payloads = {
-        0: bytes(range(256)),                   # every byte value, in order
-        1: bytes(range(255, -1, -1)),           # reversed
-        2: b"\x00" * 64 + b"\xff" * 64,         # NUL runs + high-bit runs
-        3: bytes([(i * 193 + 7) % 256 for i in range(300)]),  # scrambled
-    }
-    rows = [
-        (i, "image", payloads[i], "png", 8, 8, None) for i in payloads
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.decode_media(media, fake=True).collect()}
-    assert got.keys() == payloads.keys()
-    for i, content in payloads.items():
-        # sha computed INSIDE the executor must match the local bytes:
-        # any lossy transcoding (UTF-8 replacement, NUL truncation)
-        # in the Arrow hop changes the digest
-        assert got[i].content_sha == hashlib.sha256(content).hexdigest()
-        assert got[i].n_bytes == len(content)
-        want = multimodal._fake_features(content, 8)
-        assert all(
-            abs(float(a) - b) < 1e-6 for a, b in zip(got[i].features, want)
-        )  # float32 column vs float64 model: 1e-6 ≫ f32 eps at ≤ 1.0
-
-
-def test_multimodal_real_decode_raises_without_codec(spark):
-    import pytest
-
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("Pillow present — the no-codec path can't trigger")
-    except ImportError:
-        pass
-    # PNG and baseline JPEG now decode via stdlib paths, so the
-    # codec-absent branch needs a format with no built-in decoder
-    # (webp requires Pillow)
-    rows = [(i, "image", bytes([i] * 32), "webp", 8, 4, None) for i in range(3)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(media, fake=False).collect()
-    assert "real media decode" in str(exc.value)
-    # graceful degrade: fallback_to_fake reproduces the stub exactly
-    fb = multimodal.decode_media(media, fake=False, fallback_to_fake=True)
-    want = multimodal.decode_media(media, fake=True)
-    assert fb.collect() == want.collect()
-
-
-def test_multimodal_corrupt_bytes_raise(spark):
-    import pytest
-
-    # synthetic_media audio rows claim format=wav but carry garbage —
-    # the REAL decoder must surface that, not mask it
-    media = multimodal.synthetic_media(spark, n=6).where("media_type = 'audio'")
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(media, fake=False).collect()
-    assert "media decode failed" in str(exc.value)
-
-
-def test_multimodal_real_wav_decode(spark):
-    """REAL decode, no skip: stdlib wave parses genuine PCM16 WAV bytes
-    and the per-segment RMS features behave like audio features."""
-    media = multimodal.synthetic_wav_media(spark, n=6)
-    rows = multimodal.decode_media(media, fake=False, feature_dim=8).collect()
-    assert len(rows) == 6
-    by_id = {r.media_id: r for r in rows}
-    for r in rows:
-        assert len(r.features) == 8
-        assert all(0.0 <= x <= 1.0 for x in r.features)
-        # a normalized steady sine has RMS well above silence
-        assert sum(r.features) / len(r.features) > 0.3
-    # different tones -> different fingerprints; same input -> identical
-    assert by_id[0].features != by_id[5].features
-    again = {r.media_id: r for r in multimodal.decode_media(media, fake=False).collect()}
-    assert again[3].features == by_id[3].features
-
-
-def test_multimodal_real_image_decode(spark):
-    """REAL PNG decode, no skip: the stdlib zlib+unfilter decoder
-    (multimodal._decode_png) handles genuine PNG bytes in any
-    environment — the former Pillow-only skip is gone."""
-
-    def png(shade):
-        return multimodal.png_encode_gray(bytes([shade] * 256), 16, 16)
-
-    rows = [
-        (0, "image", png(0), "png", 16, 16, None),
-        (1, "image", png(255), "png", 16, 16, None),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.decode_media(media, fake=False).collect()}
-    assert all(x < 0.01 for x in got[0].features)  # black
-    assert all(x > 0.99 for x in got[1].features)  # white
-
-
-def test_png_decode_roundtrip_every_filter_type(spark):
-    """Encode one deterministic gradient under each PNG scanline
-    filter (0–4): identical pixels in, so the decoded features must be
-    identical across filters AND equal to the directly-computed
-    per-segment means — proving the unfilter paths, not just filter 0."""
-    import numpy as np
-
-    w, h = 16, 12
-    pixels = bytes(((x * 7 + y * 13) % 256) for y in range(h) for x in range(w))
-    rows = [
-        (f, "image", multimodal.png_encode_gray(pixels, w, h, filter_type=f),
-         "png", w, h, None)
-        for f in range(5)
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.decode_media(media, fake=False).collect()}
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64) / 255.0
-    want = [float(s.mean()) for s in np.array_split(arr, 8)]
-    for f in range(5):
-        assert got[f].features == pytest_approx_list(want)
-
-
-def pytest_approx_list(vals):
-    import pytest
-
-    return pytest.approx(vals, abs=1e-6)
-
-
-def test_png_decode_16bit_and_adam7_roundtrip(spark):
-    """Round-7 decoder breadth: 16-bit depth and Adam7 interlace are
-    REAL paths now — encode the same pixels linear/interlaced at both
-    depths and the features must match the directly-computed means."""
-    import struct as _struct
-
-    import numpy as np
-
-    w, h = 16, 12
-    vals = [((x * 251 + y * 997) * 57) % 65536 for y in range(h) for x in range(w)]
-    pix16 = b"".join(_struct.pack(">H", v) for v in vals)
-    pix8 = bytes(v >> 8 for v in vals)
-    rows = [
-        (0, "image", multimodal.png_encode_gray(pix16, w, h, depth=16), "png", w, h, None),
-        (1, "image", multimodal.png_encode_gray(pix16, w, h, filter_type=4, depth=16, interlace=True), "png", w, h, None),
-        (2, "image", multimodal.png_encode_gray(pix8, w, h, filter_type=3, interlace=True), "png", w, h, None),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.decode_media(media, fake=False).collect()}
-    want16 = [
-        float(s.mean())
-        for s in np.array_split(np.array(vals, dtype=np.float64) / 65535.0, 8)
-    ]
-    want8 = [
-        float(s.mean())
-        for s in np.array_split(
-            np.frombuffer(pix8, np.uint8).astype(np.float64) / 255.0, 8
-        )
-    ]
-    assert got[0].features == pytest_approx_list(want16)
-    assert got[1].features == pytest_approx_list(want16)  # Adam7 ≡ linear
-    assert got[2].features == pytest_approx_list(want8)
-
-
-def test_png_decode_sub_byte_depths_roundtrip(spark):
-    """Round-7 breadth: bit-packed depths 1/2/4 are REAL paths —
-    MSB-first row unpacking with per-scanline byte padding, linear
-    and Adam7, features equal the directly-computed means."""
-    import numpy as np
-
-    w, h = 13, 9  # odd sizes: rows don't fill whole bytes
-    rows = []
-    wants = {}
-    for i, depth in enumerate((1, 2, 4)):
-        mxv = (1 << depth) - 1
-        pix = bytes(((x * 3 + y * 5) % (mxv + 1)) for y in range(h) for x in range(w))
-        rows.append(
-            (i, "image",
-             multimodal.png_encode_gray(
-                 pix, w, h, filter_type=depth, depth=depth, interlace=(i % 2 == 0)
-             ),
-             "png", w, h, None)
-        )
-        arr = np.frombuffer(pix, np.uint8).astype(np.float64) / mxv
-        wants[i] = [float(s.mean()) for s in np.array_split(arr, 8)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.decode_media(media, fake=False).collect()}
-    for i, want in wants.items():
-        assert got[i].features == pytest_approx_list(want)
-
-
-def test_png_decode_failure_taxonomy(spark):
-    """Corrupt PNG bytes → ValueError (quarantine, never masked);
-    capability gaps (an image FORMAT with no available codec) →
-    NotImplementedError, which fallback_to_fake degrades gracefully."""
-    import struct as _struct
-
-    import pytest
-
-    good = multimodal.png_encode_gray(bytes(range(64)), 8, 8)
-    corrupt = good[:-8] + b"\x00\x00\x00\x00" + good[-4:]  # break IEND CRC
-    media = spark.createDataFrame(
-        [(0, "image", corrupt, "png", 8, 8, None)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(media, fake=False).collect()
-    assert "media decode failed" in str(exc.value)
-
-    # every IHDR-valid (depth, ctype, interlace) combination decodes
-    # now, and baseline JPEG decodes via the stdlib path, so the image
-    # capability gap is a FORMAT with no codec in this container
-    # (webp without Pillow): NotImplementedError without fallback,
-    # deterministic stub with it
-    try:
-        import PIL  # noqa: F401
-
-        has_pillow = True
-    except ImportError:
-        has_pillow = False
-    if not has_pillow:
-        mediaw = spark.createDataFrame(
-            [(0, "image", b"RIFF\x00\x00\x00\x00WEBPfake", "webp", 8, 8, None)],
-            multimodal.MEDIA_SCHEMA,
-        )
-        with pytest.raises(Exception) as exc:
-            multimodal.decode_media(mediaw, fake=False).collect()
-        assert "real media decode" in str(exc.value)
-        fb = multimodal.decode_media(mediaw, fake=False, fallback_to_fake=True)
-        assert len(fb.collect()[0].features) == 8
-    # corrupt JPEG bytes are ValueError (bad data), not a capability gap
-    mediaj = spark.createDataFrame(
-        [(0, "image", b"\xff\xd8\xff\xe0fakejpeg", "jpeg", 8, 8, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediaj, fake=False).collect()
-    assert "media decode failed" in str(exc.value)
-    # ... while an ARITHMETIC-coded JPEG is a capability gap inside the
-    # codec: NotImplementedError taxonomy, so fallback_to_fake applies
-    # (progressive is a real decode path now — tests/test_jpeg.py)
-    sofa_only = (
-        b"\xff\xd8"
-        + bytes([0xFF, 0xCA, 0, 11, 8, 0, 8, 0, 8, 1, 1, 0x11, 0])
-        + b"\xff\xd9"
-    )
-    mediap = spark.createDataFrame(
-        [(0, "image", sofa_only, "jpeg", 8, 8, None)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediap, fake=False).collect()
-    assert "real media decode" in str(exc.value)
-    fbp = multimodal.decode_media(mediap, fake=False, fallback_to_fake=True)
-    assert len(fbp.collect()[0].features) == 8
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    frames = multimodal.frame_sample_plan(media, every_ms=1000).collect()
-    # videos have duration 3000ms → samples at 0, 1000, 2000.
-    per_vid = {}
-    for r in frames:
-        per_vid.setdefault(r.media_id, []).append(r.frame_ts_ms)
-    assert all(sorted(v) == [0, 1000, 2000] for v in per_vid.values())
-    assert len(per_vid) == 3  # ids 2, 5, 8 are videos
 
 
 def test_lsh_bucket_recall_vs_brute_force(spark):
@@ -1066,280 +784,6 @@ def test_dsir_scores_favor_target_vocabulary(spark):
     }
     assert got[200] > got[202] > got[201]
     assert got[200] > 0 > got[201]
-
-
-def _riff_wav(audio_fmt, nchannels, bits, data, extensible=False):
-    """Hand-rolled RIFF writer for the formats stdlib wave can't emit."""
-    import struct as _struct
-
-    block_align = max(1, nchannels * bits // 8)
-    if extensible:
-        sub_guid = (
-            _struct.pack("<H", audio_fmt)
-            + b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-        )
-        fmt = (
-            _struct.pack(
-                "<HHIIHH", 0xFFFE, nchannels, 8000, 8000 * block_align,
-                block_align, bits,
-            )
-            + _struct.pack("<HHI", 22, bits, 0x4)
-            + sub_guid
-        )
-    else:
-        fmt = _struct.pack(
-            "<HHIIHH", audio_fmt, nchannels, 8000, 8000 * block_align,
-            block_align, bits,
-        )
-
-    def chunk(tag, body):
-        return tag + _struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    payload = b"WAVE" + chunk(b"fmt ", fmt) + chunk(b"data", data)
-    return b"RIFF" + _struct.pack("<I", len(payload)) + payload
-
-
-def test_g711_decode_tables_match_ccitt_pins():
-    """Known G.711 vectors: mu-law 0x00 -> -32124, 0x80 -> +32124,
-    0xFF/0x7F -> 0; A-law 0xD5 -> +8, 0x55 -> -8, 0xAA -> +32256.
-    Plus sign symmetry and per-half monotonicity across all 256 codes."""
-    import numpy as np
-
-    ulaw, alaw = multimodal._g711_tables()
-    assert ulaw[0x00] == -32124 and ulaw[0x80] == 32124
-    assert ulaw[0xFF] == 0 and ulaw[0x7F] == 0
-    assert alaw[0xD5] == 8 and alaw[0x55] == -8
-    assert alaw[0xAA] == 32256 and alaw[0x2A] == -32256
-    # mu-law sign symmetry: flipping the (pre-complement) sign bit
-    # negates the sample
-    codes = np.arange(256)
-    assert (ulaw[codes] == -ulaw[codes ^ 0x80]).all()
-    assert (alaw[codes] == -alaw[codes ^ 0x80]).all()
-    # within the positive half, magnitude decreases as the mu-law code
-    # increases (0x80 is the largest magnitude, 0xFF is zero)
-    assert (np.diff(ulaw[0x80:0x100]) <= 0).all()
-
-
-def test_multimodal_nonpcm_wav_formats(spark):
-    """IEEE-float, mu-law, A-law and EXTENSIBLE WAVs decode for real:
-    stdlib wave rejects them, the RIFF extension walker takes over."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest
-
-    ulaw, _alaw = multimodal._g711_tables()
-    # float32: alternating +/-0.5 -> normalized |sample| = 1 everywhere
-    f32 = _riff_wav(
-        3, 1, 32,
-        b"".join(
-            _struct.pack("<f", 0.5 if i % 2 == 0 else -0.5) for i in range(800)
-        ),
-    )
-    # float64 via the 64-bit branch: same signal
-    f64 = _riff_wav(
-        3, 1, 64,
-        b"".join(
-            _struct.pack("<d", 0.25 if i % 2 == 0 else -0.25)
-            for i in range(800)
-        ),
-    )
-    # mu-law: the two max-magnitude codes -> constant |32124|
-    mu = _riff_wav(7, 1, 8, bytes([0x00, 0x80] * 400))
-    # A-law: max-magnitude codes 0xAA/0x2A -> constant |32256|
-    al = _riff_wav(6, 1, 8, bytes([0xAA, 0x2A] * 400))
-    # EXTENSIBLE wrapper around plain PCM16
-    pcm = b"".join(
-        _struct.pack("<h", 1000 if i % 2 == 0 else -1000) for i in range(800)
-    )
-    ext = _riff_wav(1, 1, 16, pcm, extensible=True)
-    rows = [
-        (0, "audio", f32, "wav", None, None, 100),
-        (1, "audio", f64, "wav", None, None, 100),
-        (2, "audio", mu, "wav", None, None, 100),
-        (3, "audio", al, "wav", None, None, 100),
-        (4, "audio", ext, "wav", None, None, 100),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {
-        r.media_id: r
-        for r in multimodal.decode_media(media, fake=False).collect()
-    }
-    # constant-magnitude signals: every per-segment normalized RMS is 1
-    for media_id in range(5):
-        feats = got[media_id].features
-        assert len(feats) == 8
-        assert all(abs(x - 1.0) < 1e-6 for x in feats), (media_id, feats)
-    # a mu-law ramp through ALL codes must match the table-decoded RMS
-    ramp_codes = bytes(range(256)) * 4
-    ramp = _riff_wav(7, 1, 8, ramp_codes)
-    samples = ulaw[np.frombuffer(ramp_codes, dtype=np.uint8)].astype(
-        np.float64
-    )
-    samples = samples / np.abs(samples).max()
-    want = [
-        float(np.sqrt((s * s).mean()))
-        for s in np.array_split(samples, 8)
-    ]
-    mediar = spark.createDataFrame(
-        [(9, "audio", ramp, "wav", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    [gr] = multimodal.decode_media(mediar, fake=False).collect()
-    assert all(abs(float(a) - b) < 1e-6 for a, b in zip(gr.features, want))
-    # unknown format code (2 = ADPCM): capability gap taxonomy
-    adpcm = _riff_wav(2, 1, 4, bytes(400))
-    mediaa = spark.createDataFrame(
-        [(5, "audio", adpcm, "wav", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediaa, fake=False).collect()
-    assert "audio format 2 unsupported" in str(exc.value)
-    fb = multimodal.decode_media(mediaa, fake=False, fallback_to_fake=True)
-    assert len(fb.collect()[0].features) == 8
-    # truncated chunk: corrupt bytes, ValueError taxonomy
-    mediat = spark.createDataFrame(
-        [(6, "audio", f32[:40], "wav", None, None, 100)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediat, fake=False).collect()
-    assert "media decode failed" in str(exc.value)
-
-
-def test_multimodal_aiff_and_au_formats(spark):
-    """AIFF (big-endian IFF) and Sun AU decode for real — constant-
-    magnitude signals give all-ones RMS features, cross-checked
-    against the identical signal shipped as WAV."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest
-
-    # AIFF: +/-1000 int16 big-endian square wave
-    frames = b"".join(
-        _struct.pack(">h", 1000 if i % 2 == 0 else -1000) for i in range(800)
-    )
-    comm = _struct.pack(">HIH", 1, 800, 16) + bytes(10)  # 80-bit rate unused
-    ssnd = _struct.pack(">II", 0, 0) + frames
-
-    def chunk(tag, body):
-        return tag + _struct.pack(">I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    payload = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    aiff = b"FORM" + _struct.pack(">I", len(payload)) + payload
-    # AU: same signal, encoding 3 (int16 BE), plus a mu-law variant
-    au = (
-        b".snd" + _struct.pack(">IIIII", 24, len(frames), 3, 8000, 1) + frames
-    )
-    au_ulaw = (
-        b".snd"
-        + _struct.pack(">IIIII", 24, 800, 1, 8000, 1)
-        + bytes([0x00, 0x80] * 400)
-    )
-    rows = [
-        (0, "audio", aiff, "aiff", None, None, 100),
-        (1, "audio", au, "au", None, None, 100),
-        (2, "audio", au_ulaw, "snd", None, None, 100),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {
-        r.media_id: r
-        for r in multimodal.decode_media(media, fake=False).collect()
-    }
-    for media_id in range(3):
-        feats = got[media_id].features
-        assert all(abs(x - 1.0) < 1e-6 for x in feats), (media_id, feats)
-    # compressed AIFC: capability gap taxonomy
-    payload_c = (
-        b"AIFC"
-        + chunk(b"COMM", comm + b"ima4" + b"\x00")
-        + chunk(b"SSND", ssnd)
-    )
-    aifc = b"FORM" + _struct.pack(">I", len(payload_c)) + payload_c
-    mediac = spark.createDataFrame(
-        [(3, "audio", aifc, "aifc", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediac, fake=False).collect()
-    assert "real media decode" in str(exc.value)
-    # unknown AU encoding (23 = G.721 ADPCM): capability gap
-    au_bad = b".snd" + _struct.pack(">IIIII", 24, 400, 23, 8000, 1) + bytes(400)
-    mediab = spark.createDataFrame(
-        [(4, "audio", au_bad, "au", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediab, fake=False).collect()
-    assert "real media decode" in str(exc.value)
-    # truncated AIFF: corrupt-bytes taxonomy
-    mediat = spark.createDataFrame(
-        [(5, "audio", aiff[:30], "aiff", None, None, 100)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(mediat, fake=False).collect()
-    assert "media decode failed" in str(exc.value)
-
-
-def test_multimodal_8bit_wav_and_unsupported_width(spark):
-    import io as _io
-    import wave as _wave
-
-    import pytest
-
-    def wav_bytes(sampwidth, frames):
-        buf = _io.BytesIO()
-        with _wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(sampwidth)
-            w.setframerate(8000)
-            w.writeframes(frames)
-        return buf.getvalue()
-
-    # 8-bit WAV is UNSIGNED: 0x80 bytes are digital silence -> ~0 RMS
-    silence8 = wav_bytes(1, bytes([0x80] * 800))
-    rows = [(0, "audio", silence8, "wav", None, None, 100)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    [got] = multimodal.decode_media(media, fake=False).collect()
-    assert all(x == 0.0 for x in got.features), got.features
-
-    # 24-bit packed PCM is a REAL path now (round-7): alternating
-    # +v/-v square wave, sign extension must recover the negatives
-    import struct as _struct
-
-    v = 0x123456
-    frames24 = b"".join(
-        _struct.pack("<i", v if i % 2 == 0 else -v)[:3] for i in range(800)
-    )
-    wav24 = wav_bytes(3, frames24)
-    media24 = spark.createDataFrame(
-        [(1, "audio", wav24, "wav", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    [g24] = multimodal.decode_media(media24, fake=False).collect()
-    # |sample| constant -> every segment's normalized RMS is exactly 1
-    assert all(abs(x - 1.0) < 1e-6 for x in g24.features), g24.features
-
-    # width 5+ stays a capability gap: NotImplementedError without
-    # fallback, deterministic stub with it. The stdlib writer caps at
-    # width 4, so patch a width-1 file's fmt chunk (the reader
-    # tolerates it) to reach the unsupported-width branch.
-    raw1 = bytearray(wav_bytes(1, bytes(800)))
-    fmt_at = raw1.find(b"fmt ")
-    _struct.pack_into("<H", raw1, fmt_at + 8 + 12, 5)   # block align
-    _struct.pack_into("<H", raw1, fmt_at + 8 + 14, 40)  # bits/sample
-    wav5 = bytes(raw1)
-    media5 = spark.createDataFrame(
-        [(2, "audio", wav5, "wav", None, None, 100)], multimodal.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception) as exc:
-        multimodal.decode_media(media5, fake=False).collect()
-    assert "sample width 5 unsupported" in str(exc.value)
-    fb = multimodal.decode_media(media5, fake=False, fallback_to_fake=True)
-    want = multimodal.decode_media(media5, fake=True)
-    assert fb.collect() == want.collect()
 
 
 def test_remove_duplicate_spans_semantics(spark):
