@@ -31,7 +31,9 @@ class QueryInterface:
     ----------
     store:
         a :class:`~mlentory_etl_pipeline_spark.operators.versioned_store.
-        VersionedTripleStore` (or anything with ``.state()``).
+        VersionedTripleStore` (or anything with ``.state()`` and
+        ``.commit(state)``). Reads reuse the store's committed state, so
+        building one runs no job.
     search_docs:
         optional prebuilt ``model_search`` DataFrame (Q4,
         ``search_ops.build_search_docs``); required only for the
@@ -111,6 +113,4 @@ class QueryInterface:
     def vacuum(self, cutoff):
         """Apply the retention vacuum and persist (see
         ``versioned_store.vacuum_closed_ranges``)."""
-        new_state = vs.vacuum_closed_ranges(self._store.state(), cutoff)
-        self._store._write(new_state)
-        return self._store.state()
+        return self._store.commit(vs.vacuum_closed_ranges(self._store.state(), cutoff))

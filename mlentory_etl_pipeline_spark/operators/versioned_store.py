@@ -30,14 +30,18 @@ on a real lake these writes become ``MERGE INTO`` on Delta/Iceberg).
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import tempfile
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TRIPLET_SCHEMA = "triplet_hash string, subject string, predicate string, object string"
 INFO_SCHEMA = (
@@ -47,6 +51,12 @@ RANGE_SCHEMA = (
     "triplet_hash string, info_hash string, subject string, "
     "use_start timestamp, use_end timestamp, deprecated boolean"
 )
+
+
+def _columns(schema: str) -> list[tuple[str, str]]:
+    """``"a string, b double"`` → ``[("a", "string"), ("b", "double")]``."""
+    return [tuple(c.rsplit(" ", 1)) for c in schema.split(", ")]
+
 
 BATCH_COLUMNS = (
     "subject",
@@ -77,10 +87,7 @@ def _empty_df(spark: SparkSession, schema: str):
     LocalRelation (OptimizeLimitZero), and PropagateEmptyRelation then
     collapses first-load joins to nothing.
     """
-    cols = ", ".join(
-        f"CAST(NULL AS {c.rsplit(' ', 1)[1]}) AS {c.rsplit(' ', 1)[0]}"
-        for c in schema.split(", ")
-    )
+    cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in _columns(schema))
     return spark.sql(f"SELECT {cols} LIMIT 0")
 
 
@@ -585,6 +592,48 @@ def counts(state: StoreState) -> DataFrame:
 
 # ---------------------------------------------------------- persistence
 
+# Committed bytes per file beyond which a commit writes more files
+# (Spark's default read split size).
+_FILE_BYTES = 128 << 20
+
+# Parquet footer types a store column may have: Spark writes timestamps
+# as INT96 or TIMESTAMP_MICROS/MILLIS, which pyarrow reads as timestamp.
+_FOOTER_TYPES = {
+    "string": lambda t: pa.types.is_string(t) or pa.types.is_large_string(t),
+    "double": pa.types.is_float64,
+    "boolean": pa.types.is_boolean,
+    "timestamp": pa.types.is_timestamp,
+}
+
+
+def _check_footers(table_dir: str, schema: str) -> None:
+    """Every parquet footer under ``table_dir`` holds exactly the columns
+    of ``schema`` with compatible types. Reads footers only (pyarrow,
+    driver-side): no Spark job. The store then reads with the explicit
+    schema, so a mismatch must fail here rather than be read wrongly."""
+    files = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
+    if not files:
+        raise ValueError(f"store table {table_dir} has no parquet files")
+    want = dict(_columns(schema))
+    for f in files:
+        got = pq.read_schema(os.path.join(table_dir, f))
+        bad = sorted(set(want) ^ set(got.names)) + [
+            f"{n} {got.field(n).type} (want {t})"
+            for n, t in want.items()
+            if n in got.names and not _FOOTER_TYPES[t](got.field(n).type)
+        ]
+        if bad:
+            raise ValueError(f"store table {table_dir}/{f} has the wrong schema: {bad}")
+
+
+def _check_analyzed(df_schema: StructType, schema: str, what: str) -> None:
+    """A merge output's analyzed schema (no job) matches a table schema
+    in column names, order and types."""
+    got = [(f.name, f.dataType.simpleString()) for f in df_schema.fields]
+    if got != _columns(schema):
+        raise TypeError(f"commit: {what} has columns {got}, the store needs {schema!r}")
+
+
 class VersionedTripleStore:
     """Parquet-backed persistence for :class:`StoreState`.
 
@@ -592,9 +641,23 @@ class VersionedTripleStore:
     stand-in for Delta/Iceberg ACID commits (SURVEY §7.0 decision 3).
     At lake scale, swap this class for ``MERGE INTO`` statements; the
     pure merge logic above is unchanged.
+
+    Single-writer contract: one handle commits to a store path, and
+    every reader of that path goes through the same handle. The handle
+    keeps the :class:`StoreState` of its last commit and hands it out
+    from :meth:`state` until the next :meth:`commit`, so a read builds
+    its plan without listing files or running a job. A second handle
+    (or another process) writing the same path leaves this handle's
+    state pointing at swapped-out files, and so does a read that runs
+    while a commit swaps the files (read after the commit returns, e.g.
+    after a stream drain terminates). Tables are read with their
+    explicit schemas; the footers are checked once when a handle first
+    opens an existing store, and each commit checks the merge output's
+    analyzed schema, so a store with the wrong schema fails loudly.
     """
 
     TABLE_NAMES = ("triplet", "extraction_info", "version_range")
+    TABLE_SCHEMAS = (TRIPLET_SCHEMA, INFO_SCHEMA, RANGE_SCHEMA)
 
     def __init__(self, spark: SparkSession, path: str, keep_snapshots: int = 0):
         """``keep_snapshots > 0`` archives that many previous table
@@ -607,6 +670,7 @@ class VersionedTripleStore:
         self.spark = spark
         self.path = path
         self.keep_snapshots = keep_snapshots
+        self._state: StoreState | None = None
         os.makedirs(path, exist_ok=True)
 
     def _table_path(self, name: str) -> str:
@@ -615,12 +679,30 @@ class VersionedTripleStore:
     def _snap_root(self) -> str:
         return os.path.join(self.path, "snapshots")
 
-    def state(self) -> StoreState:
-        if not os.path.exists(self._table_path("triplet")):
-            return empty_state(self.spark)
+    def _read(self, base: str) -> StoreState:
+        """The three tables under ``base``, read with their explicit
+        schemas: listing the files is driver-side, no schema inference
+        job."""
         return StoreState(
-            *(self.spark.read.parquet(self._table_path(n)) for n in self.TABLE_NAMES)
+            *(
+                self.spark.read.schema(schema).parquet(os.path.join(base, name))
+                for name, schema in zip(self.TABLE_NAMES, self.TABLE_SCHEMAS)
+            )
         )
+
+    def _open(self, base: str) -> StoreState:
+        for name, schema in zip(self.TABLE_NAMES, self.TABLE_SCHEMAS):
+            _check_footers(os.path.join(base, name), schema)
+        return self._read(base)
+
+    def state(self) -> StoreState:
+        """The committed state: the same DataFrames until the next commit."""
+        if self._state is None:
+            if os.path.exists(self._table_path("triplet")):
+                self._state = self._open(self.path)
+            else:
+                self._state = empty_state(self.spark)
+        return self._state
 
     def versions(self) -> list[int]:
         """Archived snapshot versions, oldest first (empty when
@@ -639,26 +721,45 @@ class VersionedTripleStore:
             raise ValueError(
                 f"no snapshot v{version}; available: {self.versions()}"
             )
-        return StoreState(
-            *(self.spark.read.parquet(os.path.join(base, n)) for n in self.TABLE_NAMES)
-        )
+        return self._open(base)
 
-    def _write(self, state: StoreState) -> None:
-        # Two-phase commit: materialize EVERY table to a temp dir first
-        # (the new plans still read the old files — e.g. the new
-        # version_range joins the old triplet table), then swap all.
+    def _width(self, name: str) -> int:
+        """Files to write for table ``name``: as many as it has now, or
+        one per ``_FILE_BYTES`` of them if that is more. Sized from the
+        committed files alone, so the write runs no job (a partition-
+        count probe ran the merge's shuffle stages once more). A first
+        commit writes one file per 8 shuffle partitions, or one per
+        partition when the merge output has fewer. Keeps files chunky;
+        at lake scale partition by hash prefix instead."""
+        table = self._table_path(name)
+        if not os.path.isdir(table):
+            return max(1, int(self.spark.conf.get("spark.sql.shuffle.partitions")) // 8)
+        sizes = [
+            os.path.getsize(os.path.join(table, f))
+            for f in os.listdir(table)
+            if f.endswith(".parquet")
+        ]
+        return max(1, len(sizes), math.ceil(sum(sizes) / _FILE_BYTES))
+
+    def commit(self, state: StoreState) -> StoreState:
+        """Persist ``state`` as the store's next version and return the
+        state read back from it (also what :meth:`state` returns until
+        the next commit).
+
+        Two-phase: materialize EVERY table to a temp dir first (the new
+        plans still read the old files — e.g. the new version_range
+        joins the old triplet table), then swap all."""
+        tables = (state.triplet, state.extraction_info, state.version_range)
+        for name, schema, df in zip(self.TABLE_NAMES, self.TABLE_SCHEMAS, tables):
+            _check_analyzed(df.schema, schema, name)
         tmps = []
-        for name, df in zip(
-            self.TABLE_NAMES,
-            (state.triplet, state.extraction_info, state.version_range),
-        ):
+        for name, df in zip(self.TABLE_NAMES, tables):
             tmp = os.path.join(tempfile.gettempdir(), f"vts-{name}-{uuid.uuid4().hex}")
-            # Keep files chunky: the store tables are small relative to
-            # the cluster; at lake scale partition by hash prefix instead.
-            df.coalesce(max(1, df.rdd.getNumPartitions() // 8)).write.mode(
-                "overwrite"
-            ).parquet(tmp)
+            df.coalesce(self._width(name)).write.mode("overwrite").parquet(tmp)
             tmps.append((name, tmp))
+        # From here the handle's state reads files that are about to
+        # move: drop it first, so a failed swap never serves it.
+        self._state = None
         snap_dir = None
         if self.keep_snapshots > 0 and os.path.exists(self._table_path("triplet")):
             version = (self.versions() or [-1])[-1] + 1
@@ -679,14 +780,18 @@ class VersionedTripleStore:
             shutil.rmtree(
                 os.path.join(self._snap_root(), f"v{v}"), ignore_errors=True
             )
+        # the files were written from schema-checked plans: no footer check
+        self._state = self._read(self.path)
+        return self._state
 
     def load_batch(self, batch: DataFrame, touch_unchanged: bool = False) -> StoreState:
-        new_state = merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)
-        self._write(new_state)
+        committed = self.commit(
+            merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)
+        )
         # The written state no longer reads merge_batch's cached batch:
         # evict it (the rebuilt plan sameResults the cached one).
         _disambiguated(batch).unpersist()
-        return self.state()
+        return committed
 
 
 def entity_chunking(

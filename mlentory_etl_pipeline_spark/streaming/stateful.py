@@ -119,6 +119,9 @@ def stream_into_store(
     """
 
     def merge(batch_df: DataFrame, _batch_id: int) -> None:
+        # The guard is one job (~0.1 s on local[4]) per micro-batch; an
+        # empty batch merged and committed instead costs 12 jobs (~2.8 s
+        # on a 6k-triplet store) and archives a snapshot version.
         if batch_df.isEmpty():
             return
         store.load_batch(batch_df)

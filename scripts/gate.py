@@ -8,8 +8,10 @@ run it before every end-of-round commit:
     python scripts/gate.py --fast     # skip pytest (oracle sweep + audits only)
 
 Steps:
-  1. pytest tests/ -q -m "slow or not slow"   (full suite: pytest.ini's
-                                               default deselects the slow tier)
+  1. pytest tests/ -q -m "not integration"    (full offline suite: pytest.ini's
+                                               default deselects the slow tier;
+                                               integration tests send network
+                                               requests and stay opt-in)
   2. scripts/check_correctness.py sf0.01       (every oracle query vs DuckDB)
   3. scripts/audit.py plan                     (plan shape + output schema;
                                                rewrites PLAN_AUDIT.json)
@@ -40,7 +42,7 @@ def main() -> None:
     steps = []
     if not fast:
         steps.append(("pytest", [sys.executable, "-m", "pytest", "tests/", "-q",
-                                 "-m", "slow or not slow"]))
+                                 "-m", "not integration"]))
     steps += [
         ("correctness sf0.01",
          [sys.executable, "scripts/check_correctness.py", "/root/testdata/sf0.01"]),

@@ -59,17 +59,33 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_bench(path: str):
+    """(file name, the artifact as written: a round artifact wraps the
+    bench line under 'parsed' next to run fields such as 'cpus')."""
     with open(path) as f:
-        d = json.load(f)
-    return os.path.basename(path), d.get("parsed", d)
+        return os.path.basename(path), json.load(f)
+
+
+_ROUND_BENCH = re.compile(r"BENCH_r(\d+)(?:_c(\d+))?\.json")
+
+
+def _bench_order(name: str):
+    """Sort key of a bench artifact name: round artifacts
+    ``BENCH_r<N>[_c<k>].json`` by round N, the core-count variant
+    ``_c<k>`` after the plain run of its round; anything else (the
+    local BENCH_DETAIL.json) before every round artifact."""
+    m = _ROUND_BENCH.fullmatch(name)
+    if not m:
+        return (0, 0, 0)
+    return (1, int(m.group(1)), int(m.group(2) or 0))
 
 
 def _latest_bench():
-    """Newest VALID bench artifact: driver BENCH_r*.json (bench line
-    wrapped under 'parsed' — skipped when the tail capture truncated
-    it to null, the r4 failure) or the builder-side BENCH_DETAIL.json,
-    whichever is most recent. Falls back to none when no bench has
-    run yet."""
+    """Newest VALID bench artifact by name, never by mtime (a checkout or
+    copy rewrites mtimes): the BENCH_r<N>[_c<k>].json of the latest
+    round, its bench line wrapped under 'parsed' — skipped when the tail
+    capture truncated it to null, the r4 failure. The local
+    BENCH_DETAIL.json is used only when no round artifact is valid.
+    Falls back to none when no bench has run yet."""
     cands = []
     paths = glob.glob(os.path.join(ROOT, "BENCH_r*.json")) + [
         os.path.join(ROOT, "BENCH_DETAIL.json")
@@ -78,12 +94,13 @@ def _latest_bench():
         if not os.path.exists(p):
             continue
         name, d = _load_bench(p)
-        if isinstance(d, dict) and d.get("queries"):
-            cands.append((os.path.getmtime(p), name, d))
+        line = d.get("parsed", d)
+        if isinstance(line, dict) and line.get("queries"):
+            cands.append((_bench_order(name), name, d))
     if not cands:
         return None, None
-    cands.sort()
-    return cands[-1][1], cands[-1][2]
+    _, name, d = max(cands, key=lambda c: c[:2])
+    return name, d
 
 
 def _cited_bench(current: str):
@@ -112,10 +129,14 @@ def render_readme(current: str, pin_cited: bool = False) -> str:
     if b is None:
         fname, b = _latest_bench()
     if b:
+        # a round artifact records its core count at the top level;
+        # the bench line itself sits under 'parsed'
+        cpus = b.get("cpus", "?")
+        b = b.get("parsed", b)
         qs = b["queries"]
         slowest = max(qs, key=qs.get)
         sent = (
-            f"Bench headline ({len(qs)} queries, sf{b['sf']}, local[32]): "
+            f"Bench headline ({len(qs)} queries, sf{b['sf']}, local[{cpus}]): "
             f"{b['value']:.1f} s steady-state (slowest `{slowest}` "
             f"{qs[slowest]:.2f} s), cold total {b['cold_total']:.1f} s"
         )

@@ -29,7 +29,7 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "integration: touches real external services; skips cleanly offline",
+        "integration: sends real network requests; opt in with -m integration",
     )
 
 
@@ -98,7 +98,7 @@ def pytest_collection_modifyitems(config, items):
         if item.originalname in _SLOW_BY_NAME or item.name in _SLOW_BY_NAME:
             seen.add(item.originalname or item.name)
             item.add_marker(pytest.mark.slow)
-        if "slow" not in item.keywords:
+        if "slow" not in item.keywords and "integration" not in item.keywords:
             item.add_marker(pytest.mark.fast)
     # by-name list maintained apart from the test files (ADVICE r6):
     # a renamed/deleted test must not silently drop to the fast tier

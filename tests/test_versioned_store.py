@@ -5,7 +5,12 @@ style) plus the interval invariants SURVEY §5 calls for."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,6 +38,34 @@ def two_model_fixture(spark, t=T0):
         for i in range(8):
             rows.append((model, f"p{i}", f"{model}-v{i}", "Parsed_from_HF_dataset", 1.0, t))
     return make_batch(spark, rows)
+
+
+def catalog_batch(spark, day: int, changed: int = 0, models: int = 500, preds: int = 12):
+    """``models × preds`` triples (6k by default) observed on day ``day``
+    after T0; the first ``changed`` models get a new ``p0`` value."""
+    return spark.range(models * preds).selectExpr(
+        f"concat('m', CAST(id DIV {preds} AS STRING)) AS subject",
+        f"concat('p', CAST(id % {preds} AS STRING)) AS predicate",
+        f"concat('v', CAST(id % {preds} AS STRING), CASE WHEN id DIV {preds} < {changed} "
+        f"AND id % {preds} = 0 THEN '-{day}' ELSE '' END) AS object",
+        "'Parsed_from_HF_dataset' AS extraction_method",
+        "1.0D AS confidence",
+        f"TIMESTAMP '2024-01-01 00:00:00' + INTERVAL {day} DAYS AS extraction_time",
+    )
+
+
+def jobs_in(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"vts-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def state_counts(state):
@@ -282,4 +315,125 @@ def test_snapshot_time_travel(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
+        store.state_at_version(0)
+
+
+def test_committed_state_reads_run_no_jobs(spark, tmp_path):
+    """After a commit the handle keeps the committed state: state() and
+    the build of every QueryInterface store read reuse it and run no
+    job (no schema inference, no file probe)."""
+    from mlentory_etl_pipeline_spark.api import QueryInterface
+
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    store.load_batch(two_model_fixture(spark, T0))
+    committed = store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
+    state, jobs = jobs_in(spark, store.state)
+    assert jobs == 0 and state is committed
+
+    qi = QueryInterface(store)
+    reads = {
+        "current_graph": (),
+        "deprecated_graph": (),
+        "graph_at": (T0,),
+        "changes_between": (T0, T1),
+        "counts": (),
+        "history": ("m1",),
+    }
+    for kind, args in reads.items():
+        _, jobs = jobs_in(spark, lambda: getattr(qi, kind)(*args))
+        assert jobs == 0, kind
+    assert qi.current_graph().count() == 9
+
+    # the vacuum commits through the same path and swaps the state in
+    vacuumed = qi.vacuum(dt.datetime(2024, 1, 15))
+    assert store.state() is vacuumed
+    assert qi.current_graph().count() == 9
+
+
+def test_warm_load_batch_jobs_and_file_counts(spark, tmp_path):
+    """A warm load on a 6k-triplet store runs 16 jobs (33 with a
+    schema-inferring state() and a partition-count probe), and each
+    table keeps the file count the probed width gave it at the default
+    32 shuffle partitions: 4 / 1 / 4."""
+    from mlentory_etl_pipeline_spark.session import scoped_conf
+
+    path = tmp_path / "store"
+    store = vs.VersionedTripleStore(spark, str(path))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
+        store.load_batch(catalog_batch(spark, 0))
+        # a second provenance adds an extraction_info row
+        warm = catalog_batch(spark, 1, changed=75).unionByName(
+            make_batch(spark, [("m500", "p0", "v0", "card", 0.5, T0 + dt.timedelta(days=1))])
+        )
+        state, jobs = jobs_in(spark, lambda: store.load_batch(warm))
+    assert jobs <= 16, jobs
+    files = {
+        t: len(glob.glob(str(path / t / "*.parquet"))) for t in store.TABLE_NAMES
+    }
+    assert files == {"triplet": 4, "extraction_info": 1, "version_range": 4}
+    assert state.triplet.count() == 6000 + 75 + 1
+    assert state.extraction_info.count() == 2
+    assert state.version_range.where("deprecated").count() == 75
+
+
+def test_commit_width_follows_committed_files(spark, tmp_path, monkeypatch):
+    """The write width is read off the committed files: a table keeps
+    its file count and gains one file per ``_FILE_BYTES`` beyond it."""
+    path = tmp_path / "store"
+    store = vs.VersionedTripleStore(spark, str(path))
+    assert store._width("triplet") == 1  # conftest: 8 shuffle partitions
+    store.load_batch(two_model_fixture(spark, T0))
+    files = glob.glob(str(path / "triplet" / "*.parquet"))
+    assert store._width("triplet") == len(files) == 1
+    size = sum(os.path.getsize(f) for f in files)
+    monkeypatch.setattr(vs, "_FILE_BYTES", size // 3)
+    assert store._width("triplet") == -(-size // (size // 3)) >= 3
+
+
+def test_open_rejects_wrong_footer_type(spark, tmp_path):
+    """Tables are read with explicit schemas, so a footer that disagrees
+    must fail when a handle opens the store, not be read wrongly."""
+    path = str(tmp_path / "store")
+    vs.VersionedTripleStore(spark, path).load_batch(two_model_fixture(spark, T0))
+    for f in glob.glob(os.path.join(path, "version_range", "*.parquet")):
+        t = pq.read_table(f)
+        i = t.schema.get_field_index("use_start")
+        pq.write_table(t.set_column(i, "use_start", t.column(i).cast(pa.string())), f)
+    with pytest.raises(ValueError, match="use_start"):
+        vs.VersionedTripleStore(spark, path).state()
+
+
+def test_commit_rejects_wrong_analyzed_schema(spark, tmp_path):
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    state = vs.merge_batch(vs.empty_state(spark), two_model_fixture(spark, T0))
+    bad = vs.StoreState(
+        state.triplet,
+        state.extraction_info,
+        state.version_range.withColumn("use_start", F.col("use_start").cast("string")),
+    )
+    with pytest.raises(TypeError, match="version_range"):
+        store.commit(bad)
+    assert not os.path.exists(tmp_path / "store" / "triplet")
+
+
+def test_state_at_version_reads_explicit_schema(spark, tmp_path):
+    """Archived snapshots go through the same explicit-schema reader:
+    no job to open, the store's column types, and a footer check."""
+    path = str(tmp_path / "s")
+    store = vs.VersionedTripleStore(spark, path, keep_snapshots=1)
+    store.load_batch(two_model_fixture(spark, T0))
+    store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
+    v0, jobs = jobs_in(spark, lambda: store.state_at_version(0))
+    assert jobs == 0
+    for df, schema in zip(
+        (v0.triplet, v0.extraction_info, v0.version_range), store.TABLE_SCHEMAS
+    ):
+        assert [
+            (f.name, f.dataType.simpleString()) for f in df.schema.fields
+        ] == vs._columns(schema)
+    assert v0.triplet.count() == 16
+    f = glob.glob(os.path.join(path, "snapshots", "v0", "extraction_info", "*.parquet"))[0]
+    t = pq.read_table(f)
+    pq.write_table(t.drop(["extraction_confidence"]), f)
+    with pytest.raises(ValueError, match="extraction_confidence"):
         store.state_at_version(0)
