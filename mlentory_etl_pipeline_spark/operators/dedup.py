@@ -175,9 +175,13 @@ def minhash_signatures(shingled: DataFrame, id_col: str, num_hashes: int = 12) -
 
 
 def _banded_long(
-    signatures: DataFrame, id_col: str, num_hashes: int, bands: int
+    signatures: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, band_idx, band_hash) long form: band the signature
+    """(id, *carry, band_idx, band_hash) long form: band the signature
     (rows_per_band = num_hashes // bands) and md5 each band so the LSH
     join key is one column pair."""
     rows_per_band = num_hashes // bands
@@ -187,10 +191,10 @@ def _banded_long(
         + f")) AS band{b}"
         for b in range(bands)
     ]
-    banded = signatures.selectExpr(id_col, *band_sqls)
+    banded = signatures.selectExpr(id_col, *carry, *band_sqls)
     stack_expr = ", ".join(f"'{b}', band{b}" for b in range(bands))
     return banded.selectExpr(
-        id_col, f"stack({bands}, {stack_expr}) as (band_idx, band_hash)"
+        id_col, *carry, f"stack({bands}, {stack_expr}) as (band_idx, band_hash)"
     )
 
 
@@ -205,32 +209,6 @@ def lsh_candidate_pairs(
     return (
         a.join(b, ["band_idx", "band_hash"])
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def incremental_lsh_candidates(
-    stored_sigs: DataFrame,
-    new_sigs: DataFrame,
-    id_col: str,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
-    """Candidates between a NEW batch and the STORED signature table —
-    the production-incremental shape: the store's banded table persists
-    (pay its shuffle once at write, bucket by (band_idx, band_hash) on
-    a lake); each arriving batch bands map-locally and BROADCASTS into
-    the join, so the 10⁹-doc store never re-shuffles per batch. Returns
-    (id_a=stored, id_b=new) distinct pairs."""
-    stored_long = _banded_long(stored_sigs, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
-    )
-    new_long = _banded_long(new_sigs, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash"
-    )
-    return (
-        stored_long.join(F.broadcast(new_long), ["band_idx", "band_hash"])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -349,15 +327,30 @@ def minhash_incremental_pairs(
             *_minhash_agg_exprs(num_hashes),
         )
 
+    # The production-incremental shape: the store's banded table
+    # persists (pay its shuffle once at write, bucket by (band_idx,
+    # band_hash) on a lake); each arriving batch bands map-locally and
+    # BROADCASTS into the join, so the 10⁹-doc store never re-shuffles
+    # per batch. The batch's shingle sets ride its band table to the
+    # candidate pairs, so the batch is read and aggregated once and
+    # needs no cache (a cached batch was never released: one entry
+    # leaked per call).
     stored_doc = per_doc(stored)
-    new_doc = per_doc(new).cache()
-    cand = incremental_lsh_candidates(stored_doc, new_doc, id_col, num_hashes, bands)
+    stored_long = _banded_long(stored_doc, id_col, num_hashes, bands).select(
+        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
+    )
+    new_long = _banded_long(per_doc(new), id_col, num_hashes, bands, carry=("sh",)).select(
+        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"), "band_idx", "band_hash"
+    )
+    cand = (
+        stored_long.join(F.broadcast(new_long), ["band_idx", "band_hash"])
+        .select("id_a", "id_b", "sh_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
     sa = stored_doc.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = new_doc.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         cand.join(sa, "id_a")
-        .join(F.broadcast(sb), "id_b")
         .select(
             "id_a",
             "id_b",

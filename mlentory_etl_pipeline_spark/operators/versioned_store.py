@@ -230,6 +230,41 @@ def _disambiguated(batch: DataFrame) -> DataFrame:
     )
 
 
+def _cache_leaf(df: DataFrame) -> DataFrame:
+    """A frame whose plan is the InMemoryRelation of ``df``'s cache
+    entry itself, a leaf (``df`` must be cached).
+
+    The CacheManager swaps a cached plan in by ``sameResult`` after
+    analysis. When a statement references a frame whose plan holds an
+    ``Expand`` (``unpivot``, so ``melt``; cube, rollup, grouping sets)
+    more than once, the analyzer gives the second and later references
+    fresh Expand output attributes, and on PySpark 4.1 those no longer
+    match the cached plan: only the first reference reads the cache and
+    the others re-run the batch's shuffle and aggregation. A leaf has
+    nothing for the analyzer to rewrite (each reference is a new
+    instance of the same InMemoryRelation, reading the same buffers).
+
+    A leaf hides ``df``'s plan, so a query over it alone does not
+    complete an ``Observation`` attached to ``df`` (Spark completes one
+    from the CollectMetrics nodes of the query's logical plan): give it
+    only to a statement that references ``df`` more than once.
+
+    The entry stays owned by the CacheManager, which the sessions of a
+    Spark application share, so it is found from the stream's cloned
+    session too and ``df.unpersist()`` (or the same plan rebuilt) still
+    evicts it. Frames built on the leaf read the buffers: evict only
+    when nothing will execute them again."""
+    spark = df.sparkSession
+    jspark = spark._jsparkSession
+    entry = jspark.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if entry.isEmpty():  # evicted meanwhile by another thread: plain plan
+        return df
+    leaf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jspark, entry.get().cachedRepresentation()
+    )
+    return DataFrame(leaf, spark)
+
+
 def _sql_on(spark: SparkSession, template: str, **dfs: DataFrame) -> DataFrame:
     """Run one SQL statement over DataFrame inputs, each exposed as a
     uuid-named GLOBAL temp view for the duration of the call.
@@ -247,7 +282,10 @@ def _sql_on(spark: SparkSession, template: str, **dfs: DataFrame) -> DataFrame:
     the Catalog-API wrapper also UNCACHES any cache entry whose plan
     sameResults the dropped view, which silently evicted the merge's
     cached disambiguated batch (measured as a re-materialization of
-    its shuffle+agg on every downstream action)."""
+    its shuffle+agg on every downstream action). ``merge_batch`` hands
+    the range statement, which references ``{b}`` three times, the
+    batch as a :func:`_cache_leaf`, so every reference scans the one
+    cache entry."""
     names: dict[str, str] = {}
     try:
         for k, df in dfs.items():
@@ -311,7 +349,11 @@ def merge_batch(
     #     stays IN-PLAN as a broadcast 1-row aggregate (no collect, a
     #     fold of N batches issues no blocking job per batch).
     # The disambiguated batch feeds the batch-time scan plus four
-    # joins: cache it so the shuffle+agg runs once.
+    # joins: cache it so the shuffle+agg runs once. The V2 and V3
+    # statements reference it once each, which always reads the cache;
+    # the range statement references it three times and gets the cache
+    # entry's leaf, so that all three read the cache whatever the
+    # batch's plan holds.
     spark = batch.sparkSession
     b = _disambiguated(batch).cache()
     triplet = _sql_on(spark, _MERGE_TRIPLET_SQL, b=b, st=state.triplet)
@@ -319,7 +361,7 @@ def merge_batch(
     version_range = _sql_on(
         spark,
         _MERGE_RANGE_SQL_TOUCH if touch_unchanged else _MERGE_RANGE_SQL,
-        b=b,
+        b=_cache_leaf(b),
         vr=state.version_range,
     )
 
@@ -724,22 +766,28 @@ class VersionedTripleStore:
         return self._open(base)
 
     def _width(self, name: str) -> int:
-        """Files to write for table ``name``: as many as it has now, or
-        one per ``_FILE_BYTES`` of them if that is more. Sized from the
-        committed files alone, so the write runs no job (a partition-
-        count probe ran the merge's shuffle stages once more). A first
-        commit writes one file per 8 shuffle partitions, or one per
-        partition when the merge output has fewer. Keeps files chunky;
-        at lake scale partition by hash prefix instead."""
+        """Files to write for table ``name``: one per ``_FILE_BYTES`` of
+        its committed bytes, so a table is rewritten as byte-sized files
+        whatever partition count the plan that wrote it had (a small
+        table that a wide first commit or a cache-wide merge output
+        spread over several files comes back as one). Sized from the
+        committed files alone, so the write runs no job: a partition-
+        count probe ran the merge's shuffle stages once more, and plan
+        statistics are no guide (for a 6k-triplet range table of about
+        0.2 MB the optimized plan's ``sizeInBytes`` read 3.7 MB on a
+        first merge and 255 GB on the second). A first commit, with no
+        bytes to go by, writes one file per 8 shuffle partitions, or one
+        per partition when the merge output has fewer. At lake scale
+        partition by hash prefix instead."""
         table = self._table_path(name)
         if not os.path.isdir(table):
             return max(1, int(self.spark.conf.get("spark.sql.shuffle.partitions")) // 8)
-        sizes = [
+        size = sum(
             os.path.getsize(os.path.join(table, f))
             for f in os.listdir(table)
             if f.endswith(".parquet")
-        ]
-        return max(1, len(sizes), math.ceil(sum(sizes) / _FILE_BYTES))
+        )
+        return max(1, math.ceil(size / _FILE_BYTES))
 
     def commit(self, state: StoreState) -> StoreState:
         """Persist ``state`` as the store's next version and return the

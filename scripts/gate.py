@@ -16,10 +16,16 @@ Steps:
   3. scripts/audit.py plan                     (plan shape + output schema;
                                                rewrites PLAN_AUDIT.json)
   4. scripts/gen_coverage.py --check           (COVERAGE.md + README.md fresh)
+  5. perfbench/run.py --workload refresh|serve (seed 1, untraced: the spine
+                                               end to end, melt into load_batch
+                                               and stream drains, every op
+                                               checked against its reference;
+                                               fails unless correct and 0 failed)
 """
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -28,13 +34,35 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(label: str, cmd: list[str]) -> bool:
+def perfbench_verdict(stdout: str) -> str | None:
+    """Why a perfbench run's last output line (its result JSON) fails
+    the gate, or None when every op was correct."""
+    lines = stdout.strip().splitlines()
+    try:
+        result = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        return "no result line"
+    if result.get("correct") is not True or result.get("failed") != 0:
+        return (f"correct={result.get('correct')} failed={result.get('failed')} "
+                f"of {result.get('attempted')}")
+    return None
+
+
+def run(label: str, cmd: list[str], verdict=None) -> bool:
+    """Run ``cmd`` from the repository root; it passes on exit 0 and,
+    with ``verdict``, when ``verdict(stdout)`` finds nothing wrong."""
     print(f"\n=== gate: {label}: {' '.join(cmd)}", flush=True)
     t0 = time.time()
-    rc = subprocess.call(cmd, cwd=ROOT)
-    print(f"=== gate: {label}: {'OK' if rc == 0 else f'FAILED rc={rc}'} "
+    if verdict is None:
+        rc = subprocess.call(cmd, cwd=ROOT)
+        why = None if rc == 0 else f"rc={rc}"
+    else:
+        proc = subprocess.run(cmd, cwd=ROOT, stdout=subprocess.PIPE, text=True)
+        print(*proc.stdout.strip().splitlines()[-1:], flush=True)
+        why = f"rc={proc.returncode}" if proc.returncode else verdict(proc.stdout)
+    print(f"=== gate: {label}: {'OK' if why is None else f'FAILED {why}'} "
           f"({time.time() - t0:.0f}s)", flush=True)
-    return rc == 0
+    return why is None
 
 
 def main() -> None:
@@ -50,7 +78,14 @@ def main() -> None:
         ("coverage/README fresh",
          [sys.executable, "scripts/gen_coverage.py", "--check"]),
     ]
-    failed = [label for label, cmd in steps if not run(label, cmd)]
+    steps += [
+        (f"perfbench {w}",
+         [sys.executable, "perfbench/run.py", "--workload", w, "--seed", "1",
+          "--seconds", "20", "--trace", "0"],
+         perfbench_verdict)
+        for w in ("refresh", "serve")
+    ]
+    failed = [step[0] for step in steps if not run(*step)]
     if failed:
         print(f"\nGATE FAILED: {', '.join(failed)}")
         sys.exit(1)

@@ -269,11 +269,8 @@ def test_curation_chain_streams_identically(spark, tmp_path):
     assert all("[EMAIL]" in r.redacted for r in got.values())
 
 
-def test_incremental_minhash_equals_full_cross_pairs(spark):
-    # Incremental (stored ⋈ new) must find exactly the cross pairs the
-    # full self-join finds — no more, no fewer.
-    from mlentory_etl_pipeline_spark.operators import dedup
-
+def _incremental_corpus(spark):
+    """(stored, new): 40 stored docs and 15 near copies of them."""
     base = spark.createDataFrame(
         [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(30))) for i in range(40)],
         "doc_id long, text string",
@@ -282,9 +279,24 @@ def test_incremental_minhash_equals_full_cross_pairs(spark):
         (F.col("doc_id") + 1000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" tail")).alias("text"),
     )
-    inc = dedup.minhash_incremental_pairs(
+    return base, new
+
+
+def _incremental_pairs(base, new):
+    from mlentory_etl_pipeline_spark.operators import dedup
+
+    return dedup.minhash_incremental_pairs(
         base, new, "doc_id", "text", n=3, num_hashes=12, bands=4, threshold=0.5
     )
+
+
+def test_incremental_minhash_equals_full_cross_pairs(spark):
+    # Incremental (stored ⋈ new) must find exactly the cross pairs the
+    # full self-join finds — no more, no fewer.
+    from mlentory_etl_pipeline_spark.operators import dedup
+
+    base, new = _incremental_corpus(spark)
+    inc = _incremental_pairs(base, new)
     full = dedup.minhash_lsh_dedup_pairs(
         base.unionByName(new), "doc_id", "text", n=3, num_hashes=12, bands=4,
         threshold=0.5,
@@ -292,6 +304,29 @@ def test_incremental_minhash_equals_full_cross_pairs(spark):
     inc_pairs = {(r.id_a, r.id_b) for r in inc.collect()}
     full_pairs = {(r.id_a, r.id_b) for r in full.collect()}
     assert inc_pairs == full_pairs and len(inc_pairs) >= 15
+
+
+def test_incremental_minhash_caches_nothing(spark):
+    """Repeated incremental checks leave the cached RDDs as they were
+    (the batch side is read once, not cached), and every call finds the
+    same 15 near copies: each new doc pairs with the stored doc it
+    copies (its stored-side twins too where the corpus repeats)."""
+    base, new = _incremental_corpus(spark)
+
+    def cached_ids():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    # no NEW cached RDD: an earlier test's asynchronous unpersist may
+    # still drop entries meanwhile
+    before = cached_ids()
+    runs = [
+        {(r.id_a, r.id_b) for r in _incremental_pairs(base, new).collect()}
+        for _ in range(2)
+    ]
+    assert cached_ids() - before == set()
+    assert runs[0] == runs[1]
+    assert {b - 1000 for _, b in runs[0]} == set(range(15))
+    assert all((b - 1000, b) in runs[0] for b in range(1000, 1015))
 
 
 def test_negative_samples_invariants(spark):

@@ -350,38 +350,48 @@ def test_committed_state_reads_run_no_jobs(spark, tmp_path):
     assert qi.current_graph().count() == 9
 
 
+def file_counts(store):
+    return {
+        t: len(glob.glob(os.path.join(store.path, t, "*.parquet")))
+        for t in store.TABLE_NAMES
+    }
+
+
 def test_warm_load_batch_jobs_and_file_counts(spark, tmp_path):
     """A warm load on a 6k-triplet store runs 16 jobs (33 with a
-    schema-inferring state() and a partition-count probe), and each
-    table keeps the file count the probed width gave it at the default
-    32 shuffle partitions: 4 / 1 / 4."""
+    schema-inferring state() and a partition-count probe). At the
+    default 32 shuffle partitions the first commit writes 4 / 1 / 4
+    files; the warm commit rewrites each table, far below
+    ``_FILE_BYTES``, as one file."""
     from mlentory_etl_pipeline_spark.session import scoped_conf
 
-    path = tmp_path / "store"
-    store = vs.VersionedTripleStore(spark, str(path))
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
         store.load_batch(catalog_batch(spark, 0))
+        assert file_counts(store) == {"triplet": 4, "extraction_info": 1, "version_range": 4}
         # a second provenance adds an extraction_info row
         warm = catalog_batch(spark, 1, changed=75).unionByName(
             make_batch(spark, [("m500", "p0", "v0", "card", 0.5, T0 + dt.timedelta(days=1))])
         )
         state, jobs = jobs_in(spark, lambda: store.load_batch(warm))
     assert jobs <= 16, jobs
-    files = {
-        t: len(glob.glob(str(path / t / "*.parquet"))) for t in store.TABLE_NAMES
-    }
-    assert files == {"triplet": 4, "extraction_info": 1, "version_range": 4}
+    assert file_counts(store) == {"triplet": 1, "extraction_info": 1, "version_range": 1}
     assert state.triplet.count() == 6000 + 75 + 1
     assert state.extraction_info.count() == 2
     assert state.version_range.where("deprecated").count() == 75
 
 
 def test_commit_width_follows_committed_files(spark, tmp_path, monkeypatch):
-    """The write width is read off the committed files: a table keeps
-    its file count and gains one file per ``_FILE_BYTES`` beyond it."""
+    """The write width is read off the committed files: one file per
+    ``_FILE_BYTES`` of them. A first commit writes one file per 8
+    shuffle partitions."""
+    from mlentory_etl_pipeline_spark.session import scoped_conf
+
     path = tmp_path / "store"
     store = vs.VersionedTripleStore(spark, str(path))
     assert store._width("triplet") == 1  # conftest: 8 shuffle partitions
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "48"}):
+        assert store._width("triplet") == 6
     store.load_batch(two_model_fixture(spark, T0))
     files = glob.glob(str(path / "triplet" / "*.parquet"))
     assert store._width("triplet") == len(files) == 1
@@ -437,3 +447,77 @@ def test_state_at_version_reads_explicit_schema(spark, tmp_path):
     pq.write_table(t.drop(["extraction_confidence"]), f)
     with pytest.raises(ValueError, match="extraction_confidence"):
         store.state_at_version(0)
+
+
+def melted_catalog(spark, day: int, models: int = 200, preds: int = 6):
+    """A ``models × preds`` batch built the way the pipeline builds one:
+    a wide frame of model cards, ``melt``-ed to triples (its plan holds
+    an unpivot, an Expand)."""
+    from mlentory_etl_pipeline_spark.operators.melt import melt
+
+    props = [f"p{i}" for i in range(preds)]
+    wide = spark.range(models).selectExpr(
+        "concat('m', CAST(id AS STRING)) AS subject",
+        *[f"concat('v{i}-', CAST(id % 7 AS STRING)) AS p{i}" for i in range(preds)],
+    )
+    return melt(wide, ["subject"], props, "predicate", "object").selectExpr(
+        "subject",
+        "predicate",
+        "object",
+        "'harvested_from_card' AS extraction_method",
+        "1.0D AS confidence",
+        f"TIMESTAMP '2024-01-01 00:00:00' + INTERVAL {day} DAYS AS extraction_time",
+    )
+
+
+def plan_nodes(df):
+    """``(name, is_leaf)`` for each node of ``df``'s optimized logical
+    plan. An InMemoryRelation is a leaf: the plan it caches is not
+    walked."""
+    nodes, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        nodes.append((node.nodeName(), kids.isEmpty()))
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_melted_batch_merge_reads_the_batch_only_through_the_cache(spark, tmp_path):
+    """A batch whose plan holds an Expand (``melt`` is an unpivot) is
+    read by all three merge outputs through its one cache entry: no
+    Expand and no batch source outside an InMemoryRelation. Referencing
+    the cached frame by its plan, only the first reference of a
+    statement hit the cache on PySpark 4.1, so the range write re-ran
+    the melt and the batch's shuffle and aggregation. An Observation
+    on the batch still completes in the load."""
+    import threading
+
+    from mlentory_etl_pipeline_spark.metrics import observed
+
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    store.load_batch(melted_catalog(spark, 0))
+    batch = melted_catalog(spark, 1)
+    merged = vs.merge_batch(store.state(), batch)
+    try:
+        for name, df in zip(store.TABLE_NAMES, (merged.triplet, merged.extraction_info,
+                                                merged.version_range)):
+            nodes = plan_nodes(df)
+            assert "Expand" not in {n for n, _ in nodes}, name
+            leaves = {n for n, leaf in nodes if leaf}
+            assert "InMemoryRelation" in leaves, (name, leaves)
+            assert leaves <= {"InMemoryRelation", "LogicalRelation"}, (name, leaves)
+    finally:
+        vs._disambiguated(batch).unpersist()
+    inst, obs = observed(batch, "melted_load")
+    state, jobs = jobs_in(spark, lambda: store.load_batch(inst))
+    assert jobs <= 16, jobs  # 18 when the range write re-ran the melt
+    assert state.version_range.where("use_end > use_start").count() == 1200
+    # Observation.get blocks until a query whose logical plan holds the
+    # batch's CollectMetrics has run: read it on a thread, with a bound
+    got = {}
+    reader = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+    reader.start()
+    reader.join(60)
+    assert not reader.is_alive(), "the load never completed the batch's Observation"
+    assert got["n_rows"] == 1200
