@@ -267,9 +267,13 @@ def minhash_lsh_dedup_pairs(
     join → exact-Jaccard verification of the candidates ≥ threshold.
 
     The per-doc signature AND shingle set come out of ONE groupBy (the
-    shingle explode is shuffled once, not once per consumer); the tiny
-    per-doc table is cached because the band self-join and the two
-    verification joins all read it."""
+    shingle explode is shuffled once, not once per consumer), and the
+    shingle sets ride the band table into the band self-join, so each
+    candidate is verified where it is found; both sides of the
+    self-join are the same exchange, which Spark runs once and reuses.
+    A pair that shares several bands is scored once per band and the
+    scored pairs are deduplicated, so nothing is cached (a cached
+    per-doc table was never released: one entry leaked per call)."""
     # Only the 60-bit shingle hashes leave the map side — signature mins
     # AND the Jaccard sets work on them, so the shuffle carries 8-byte
     # longs instead of multi-word shingle strings. Jaccard over hashed
@@ -282,14 +286,17 @@ def minhash_lsh_dedup_pairs(
     per_doc = sh.groupBy(id_col).agg(
         F.collect_set("_h").alias("sh"),
         *_minhash_agg_exprs(num_hashes),
-    ).cache()
-    cand = lsh_candidate_pairs(per_doc, id_col, num_hashes, bands)
-    sa = per_doc.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = per_doc.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    )
+    long = _banded_long(per_doc, id_col, num_hashes, bands, carry=("sh",))
+    a, b = (
+        long.select(F.col(id_col).alias(f"id_{s}"), F.col("sh").alias(f"sh_{s}"),
+                    "band_idx", "band_hash")
+        for s in "ab"
+    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        a.join(b, ["band_idx", "band_hash"])
+        .where(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
             "id_b",
@@ -298,6 +305,7 @@ def minhash_lsh_dedup_pairs(
             ),
         )
         .where(F.col("jaccard") >= threshold)
+        .distinct()
     )
 
 

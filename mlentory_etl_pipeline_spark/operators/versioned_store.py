@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from mlentory_etl_pipeline_spark.session import scoped_conf
+
 TRIPLET_SCHEMA = "triplet_hash string, subject string, predicate string, object string"
 INFO_SCHEMA = (
     "info_hash string, extraction_method string, extraction_confidence double"
@@ -214,6 +216,10 @@ _MERGE_RANGE_SQL_TOUCH = _MERGE_RANGE_SQL_TEMPLATE.replace(
 )
 
 
+# Lets AQE coalesce the shuffle under a cached plan (see merge_batch).
+_CACHED_PLAN_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
 def _disambiguated(batch: DataFrame) -> DataFrame:
     """G9 statement-metadata disambiguation
     (``MlentoryTransformWithGraphBuilder.py:466-487``) of a raw batch:
@@ -354,8 +360,25 @@ def merge_batch(
     # the range statement references it three times and gets the cache
     # entry's leaf, so that all three read the cache whatever the
     # batch's plan holds.
+    #
+    # The cache is built with canChangeCachedPlanOutputPartitioning on.
+    # With it off (the default), the CacheManager plans a cached query
+    # with AQE's final-stage coalescing disabled, so the entry kept all
+    # shuffle.partitions partitions of the groupBy (32 for a delta of
+    # ~900 rows) and each of the five stages that scan it (V3 and the
+    # bt, touched, bsubj and anti-join branches) ran one task per
+    # partition: about 200 tasks in a warm load of a 6k-triplet store,
+    # 192 of them on the cache. With it on, AQE sizes the entry by
+    # bytes like any other shuffle output (one partition for a small
+    # batch, advisoryPartitionSizeInBytes each for a large one), and a
+    # warm load runs one task per stage bar the batch's own source
+    # scan. The flag is read when the cache entry's plan is built,
+    # which runs no job; it is set on the batch's own session (the
+    # stream's clone inside foreachBatch) and only around that call,
+    # so no other cached plan changes.
     spark = batch.sparkSession
-    b = _disambiguated(batch).cache()
+    with scoped_conf(spark, {_CACHED_PLAN_PARTITIONING: "true"}):
+        b = _disambiguated(batch).cache()
     triplet = _sql_on(spark, _MERGE_TRIPLET_SQL, b=b, st=state.triplet)
     extraction_info = _sql_on(spark, _MERGE_INFO_SQL, b=b, si=state.extraction_info)
     version_range = _sql_on(
@@ -777,8 +800,10 @@ class VersionedTripleStore:
         0.2 MB the optimized plan's ``sizeInBytes`` read 3.7 MB on a
         first merge and 255 GB on the second). A first commit, with no
         bytes to go by, writes one file per 8 shuffle partitions, or one
-        per partition when the merge output has fewer. At lake scale
-        partition by hash prefix instead."""
+        per partition when the merge output has fewer, as it usually
+        does: the merge reads a cached batch that AQE coalesced by bytes
+        (one partition up to 64 MiB of it). At lake scale partition by
+        hash prefix instead."""
         table = self._table_path(name)
         if not os.path.isdir(table):
             return max(1, int(self.spark.conf.get("spark.sql.shuffle.partitions")) // 8)
@@ -833,13 +858,16 @@ class VersionedTripleStore:
         return self._state
 
     def load_batch(self, batch: DataFrame, touch_unchanged: bool = False) -> StoreState:
-        committed = self.commit(
-            merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)
-        )
-        # The written state no longer reads merge_batch's cached batch:
-        # evict it (the rebuilt plan sameResults the cached one).
-        _disambiguated(batch).unpersist()
-        return committed
+        try:
+            return self.commit(
+                merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)
+            )
+        finally:
+            # The written state no longer reads merge_batch's cached
+            # batch, and a failed merge or commit leaves nothing that
+            # will: evict it (the rebuilt plan sameResults the cached
+            # one).
+            _disambiguated(batch).unpersist()
 
 
 def entity_chunking(

@@ -282,6 +282,10 @@ def _incremental_corpus(spark):
     return base, new
 
 
+def _cached_ids(spark):
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def _incremental_pairs(base, new):
     from mlentory_etl_pipeline_spark.operators import dedup
 
@@ -312,21 +316,42 @@ def test_incremental_minhash_caches_nothing(spark):
     same 15 near copies: each new doc pairs with the stored doc it
     copies (its stored-side twins too where the corpus repeats)."""
     base, new = _incremental_corpus(spark)
-
-    def cached_ids():
-        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
     # no NEW cached RDD: an earlier test's asynchronous unpersist may
     # still drop entries meanwhile
-    before = cached_ids()
+    before = _cached_ids(spark)
     runs = [
         {(r.id_a, r.id_b) for r in _incremental_pairs(base, new).collect()}
         for _ in range(2)
     ]
-    assert cached_ids() - before == set()
+    assert _cached_ids(spark) - before == set()
     assert runs[0] == runs[1]
     assert {b - 1000 for _, b in runs[0]} == set(range(15))
     assert all((b - 1000, b) in runs[0] for b in range(1000, 1015))
+
+
+def test_full_minhash_caches_nothing(spark):
+    """Repeated full near-dup runs leave the cached RDDs as they were
+    (the per-doc shingle sets ride the band table, nothing is cached)
+    and return the same pairs: the 15 planted near copies among them."""
+    from mlentory_etl_pipeline_spark.operators import dedup
+
+    base, new = _incremental_corpus(spark)
+    corpus = base.unionByName(new)
+    before = _cached_ids(spark)
+    runs = [
+        {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_dedup_pairs(
+                corpus, "doc_id", "text", n=3, num_hashes=12, bands=4, threshold=0.5
+            ).collect()
+        }
+        for _ in range(2)
+    ]
+    assert _cached_ids(spark) - before == set()
+    assert runs[0] == runs[1]
+    pairs = {(a, b) for a, b, _ in runs[0]}
+    assert len(pairs) == len(runs[0])  # one row per pair
+    assert all((b - 1000, b) in pairs for b in range(1000, 1015))
 
 
 def test_negative_samples_invariants(spark):

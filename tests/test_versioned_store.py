@@ -55,7 +55,9 @@ def catalog_batch(spark, day: int, changed: int = 0, models: int = 500, preds: i
 
 
 def jobs_in(spark, fn):
-    """``(fn(), number of Spark jobs it ran)``, counted by job group."""
+    """``(fn(), jobs, tasks)``: the Spark jobs ``fn`` ran, counted by job
+    group, and the tasks of their stages that ran (a stage a job reuses
+    from an earlier one is skipped and runs none)."""
     sc = spark.sparkContext
     group = f"vts-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -64,8 +66,16 @@ def jobs_in(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    stages = {sid for j in jobs for sid in sc.statusTracker().getJobInfo(j).stageIds}
+    tasks = 0
+    for sid in stages:
+        stage = jsc.statusStore().lastStageAttempt(sid)
+        if stage.status().toString() != "SKIPPED":
+            tasks += stage.numTasks()
+    return out, len(jobs), tasks
 
 
 def state_counts(state):
@@ -327,7 +337,7 @@ def test_committed_state_reads_run_no_jobs(spark, tmp_path):
     store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
     store.load_batch(two_model_fixture(spark, T0))
     committed = store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
-    state, jobs = jobs_in(spark, store.state)
+    state, jobs, _ = jobs_in(spark, store.state)
     assert jobs == 0 and state is committed
 
     qi = QueryInterface(store)
@@ -340,7 +350,7 @@ def test_committed_state_reads_run_no_jobs(spark, tmp_path):
         "history": ("m1",),
     }
     for kind, args in reads.items():
-        _, jobs = jobs_in(spark, lambda: getattr(qi, kind)(*args))
+        _, jobs, _ = jobs_in(spark, lambda: getattr(qi, kind)(*args))
         assert jobs == 0, kind
     assert qi.current_graph().count() == 9
 
@@ -358,27 +368,79 @@ def file_counts(store):
 
 
 def test_warm_load_batch_jobs_and_file_counts(spark, tmp_path):
-    """A warm load on a 6k-triplet store runs 16 jobs (33 with a
-    schema-inferring state() and a partition-count probe). At the
-    default 32 shuffle partitions the first commit writes 4 / 1 / 4
-    files; the warm commit rewrites each table, far below
-    ``_FILE_BYTES``, as one file."""
+    """A warm load on a 6k-triplet store runs 14 jobs (33 with a
+    schema-inferring state() and a partition-count probe, 16 with the
+    cached batch kept at 32 partitions) and one task per stage, bar the
+    batch's source scan: merge_batch's cached batch is one AQE-coalesced
+    partition, so none of the five stages that scan it fans out (about
+    210 tasks when each ran one task per shuffle partition). The first
+    commit writes 1 / 1 / 1 files: a first commit's width is one file
+    per 8 shuffle partitions (4 here), but the merge outputs of a batch
+    this small have one partition (4 / 1 / 4 files when the cache kept
+    32); the warm commit rewrites each table, far below ``_FILE_BYTES``,
+    as one file."""
     from mlentory_etl_pipeline_spark.session import scoped_conf
 
     store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
         store.load_batch(catalog_batch(spark, 0))
-        assert file_counts(store) == {"triplet": 4, "extraction_info": 1, "version_range": 4}
+        assert file_counts(store) == {"triplet": 1, "extraction_info": 1, "version_range": 1}
         # a second provenance adds an extraction_info row
         warm = catalog_batch(spark, 1, changed=75).unionByName(
             make_batch(spark, [("m500", "p0", "v0", "card", 0.5, T0 + dt.timedelta(days=1))])
         )
-        state, jobs = jobs_in(spark, lambda: store.load_batch(warm))
-    assert jobs <= 16, jobs
+        sources = warm.rdd.getNumPartitions()
+        state, jobs, tasks = jobs_in(spark, lambda: store.load_batch(warm))
+    assert jobs <= 14, jobs
+    assert tasks <= jobs + sources, (jobs, tasks, sources)
     assert file_counts(store) == {"triplet": 1, "extraction_info": 1, "version_range": 1}
     assert state.triplet.count() == 6000 + 75 + 1
     assert state.extraction_info.count() == 2
     assert state.version_range.where("deprecated").count() == 75
+
+
+def test_merge_cache_is_sized_by_bytes(spark, tmp_path):
+    """merge_batch caches the disambiguated batch with AQE's coalescing
+    on: the 6k-triplet batch, far below the 64 MiB advisory size, is one
+    partition at 32 shuffle partitions (all 32 when the cache was
+    planned with coalescing off), and a small enough advisory size
+    splits its few hundred KiB of shuffle output into more. Building the
+    cache leaves the session's conf as it was."""
+    from mlentory_etl_pipeline_spark.session import scoped_conf
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    before = spark.conf.get(key, None)
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    store.load_batch(catalog_batch(spark, 0))
+    for advisory, check in (("64m", lambda n: n == 1), ("128k", lambda n: 1 < n < 32)):
+        batch = catalog_batch(spark, 1, changed=75)
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32",
+                                 "spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory,
+                                 # AQE's floor (1 MiB) would otherwise win
+                                 "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k"}):
+            vs.merge_batch(store.state(), batch)
+            try:
+                n = vs._disambiguated(batch).rdd.getNumPartitions()
+            finally:
+                vs._disambiguated(batch).unpersist()
+        assert check(n), (advisory, n)
+    assert spark.conf.get(key, None) == before
+
+
+def test_load_batch_evicts_its_cached_batch_when_commit_raises(spark, tmp_path, monkeypatch):
+    """A merge or commit that raises leaves no cache entry behind."""
+    from pyspark import StorageLevel
+
+    store = vs.VersionedTripleStore(spark, str(tmp_path / "store"))
+    batch = two_model_fixture(spark, T0)
+
+    def failing_commit(state):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(store, "commit", failing_commit)
+    with pytest.raises(OSError, match="disk full"):
+        store.load_batch(batch)
+    assert vs._disambiguated(batch).storageLevel == StorageLevel.NONE
 
 
 def test_commit_width_follows_committed_files(spark, tmp_path, monkeypatch):
@@ -433,7 +495,7 @@ def test_state_at_version_reads_explicit_schema(spark, tmp_path):
     store = vs.VersionedTripleStore(spark, path, keep_snapshots=1)
     store.load_batch(two_model_fixture(spark, T0))
     store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
-    v0, jobs = jobs_in(spark, lambda: store.state_at_version(0))
+    v0, jobs, _ = jobs_in(spark, lambda: store.state_at_version(0))
     assert jobs == 0
     for df, schema in zip(
         (v0.triplet, v0.extraction_info, v0.version_range), store.TABLE_SCHEMAS
@@ -510,7 +572,7 @@ def test_melted_batch_merge_reads_the_batch_only_through_the_cache(spark, tmp_pa
     finally:
         vs._disambiguated(batch).unpersist()
     inst, obs = observed(batch, "melted_load")
-    state, jobs = jobs_in(spark, lambda: store.load_batch(inst))
+    state, jobs, _ = jobs_in(spark, lambda: store.load_batch(inst))
     assert jobs <= 16, jobs  # 18 when the range write re-ran the melt
     assert state.version_range.where("use_end > use_start").count() == 1200
     # Observation.get blocks until a query whose logical plan holds the
