@@ -341,7 +341,7 @@ def merge_batch(
             "(raw parquet ns-timestamps read as long? route through "
             "sources.tpch.load_table or cast explicitly)"
         )
-    # The whole merge is FOUR spark.sql statements (r10 §2): one
+    # The whole merge is THREE spark.sql statements (r10 §2): one
     # parse+analysis per output table instead of ~28 chained DataFrame
     # ops, each of which was a Py4J round-trip plus an eager JVM
     # analysis over the growing tree:
@@ -354,8 +354,10 @@ def merge_batch(
     #     deprecates ranges its batch-time has not passed. batch_time
     #     stays IN-PLAN as a broadcast 1-row aggregate (no collect, a
     #     fold of N batches issues no blocking job per batch).
-    # The disambiguated batch feeds the batch-time scan plus four
-    # joins: cache it so the shuffle+agg runs once. The V2 and V3
+    # The disambiguated batch feeds the batch-time scan plus five
+    # joins (the V2 and V3 anti-joins and the range statement's
+    # touched, bsubj and anti-join branches): cache it so the
+    # shuffle+agg runs once. The V2 and V3
     # statements reference it once each, which always reads the cache;
     # the range statement references it three times and gets the cache
     # entry's leaf, so that all three read the cache whatever the
@@ -821,15 +823,24 @@ class VersionedTripleStore:
 
         Two-phase: materialize EVERY table to a temp dir first (the new
         plans still read the old files — e.g. the new version_range
-        joins the old triplet table), then swap all."""
+        joins the old triplet table), then swap all. A write that
+        raises removes this call's temp copies and leaves the committed
+        store and :meth:`state` untouched."""
         tables = (state.triplet, state.extraction_info, state.version_range)
         for name, schema, df in zip(self.TABLE_NAMES, self.TABLE_SCHEMAS, tables):
             _check_analyzed(df.schema, schema, name)
         tmps = []
-        for name, df in zip(self.TABLE_NAMES, tables):
-            tmp = os.path.join(tempfile.gettempdir(), f"vts-{name}-{uuid.uuid4().hex}")
-            df.coalesce(self._width(name)).write.mode("overwrite").parquet(tmp)
-            tmps.append((name, tmp))
+        try:
+            for name, df in zip(self.TABLE_NAMES, tables):
+                tmp = os.path.join(tempfile.gettempdir(), f"vts-{name}-{uuid.uuid4().hex}")
+                tmps.append((name, tmp))
+                df.coalesce(self._width(name)).write.mode("overwrite").parquet(tmp)
+        except BaseException:
+            # A failed write leaves the store as it was: drop the full
+            # table copies this call already wrote (or began to).
+            for _, tmp in tmps:
+                shutil.rmtree(tmp, ignore_errors=True)
+            raise
         # From here the handle's state reads files that are about to
         # move: drop it first, so a failed swap never serves it.
         self._state = None
@@ -858,6 +869,16 @@ class VersionedTripleStore:
         return self._state
 
     def load_batch(self, batch: DataFrame, touch_unchanged: bool = False) -> StoreState:
+        """Merge ``batch`` into the committed state (:func:`merge_batch`)
+        and commit the result as the store's next version; returns the
+        committed state. The merge's cached batch is evicted even when
+        the merge or the commit raises.
+
+        An empty batch changes no row but still commits a new version:
+        all three tables are rewritten, and a snapshot is archived when
+        ``keep_snapshots > 0``. That is why ``stream_into_store`` skips
+        empty micro-batches; a direct caller with a possibly empty
+        batch should check first."""
         try:
             return self.commit(
                 merge_batch(self.state(), batch, touch_unchanged=touch_unchanged)

@@ -13,7 +13,9 @@ Scale posture:
   the whole corpus twice and silently widens types between runs —
   never acceptable at 100 TB. Corrupt records are kept in a side
   column (PERMISSIVE mode) so one bad line in 10¹⁰ quarantines, not
-  kills; `quarantine()` splits good/bad declaratively.
+  kills; `quarantine()` splits good/bad behind a lazy local
+  checkpoint (the reader needs a barrier before the corrupt-column
+  filter) that leaves no cache entry behind.
 - `compact` rewrites a directory of many small files into
   size-targeted files. Small files are the classic lake killer: a
   10⁶-file input costs 10⁶ scheduler tasks and metadata round-trips.
@@ -46,10 +48,12 @@ def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
 
 def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(good_rows_without_corrupt_col, bad_raw_lines). Spark requires a
-    cache/materialization barrier before filtering on the corrupt
-    column (documented JSON-reader behavior: the filter would
-    otherwise push into the parser and drop the raw line)."""
-    df = df.cache()
+    materialization barrier before filtering on the corrupt column
+    (documented JSON-reader behavior: the filter would otherwise push
+    into the parser and drop the raw line). The barrier is a lazy local
+    checkpoint, not a cache: it registers nothing with the
+    CacheManager, so no entry outlives the two frames."""
+    df = df.localCheckpoint(eager=False)
     good = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, bad

@@ -20,12 +20,17 @@ def test_jsonl_corrupt_quarantine(spark, tmp_path):
         '{"id": "NOT_A_NUMBER", "name": "bad-type"}\n'
     )
     schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    df = files_src.read_jsonl(spark, str(p), schema)
-    good, bad = files_src.quarantine(df)
-    assert sorted(r.id for r in good.collect()) == [1, 2]
-    bad_lines = [r[files_src.CORRUPT_COL] for r in bad.collect()]
-    assert len(bad_lines) == 2
-    assert "this is not json at all" in bad_lines[0] or "this is not json at all" in bad_lines[1]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(3):
+        df = files_src.read_jsonl(spark, str(p), schema)
+        good, bad = files_src.quarantine(df)
+        assert sorted(r.id for r in good.collect()) == [1, 2]
+        bad_lines = [r[files_src.CORRUPT_COL] for r in bad.collect()]
+        assert len(bad_lines) == 2
+        assert "this is not json at all" in bad_lines[0] or "this is not json at all" in bad_lines[1]
+        # The barrier before the corrupt-column filter leaves no cache
+        # entry behind.
+        assert cache.lookupCachedData(df._jdf).isEmpty()
 
 
 def test_compact_small_files(spark, tmp_path):

@@ -206,7 +206,7 @@ def test_persistence_roundtrip(spark, tmp_path):
 
 
 def test_load_batch_releases_its_cached_batch(spark, tmp_path):
-    """merge_batch caches the disambiguated batch for its four joins;
+    """merge_batch caches the disambiguated batch for its five joins;
     once load_batch has written the new state nothing reads that cache,
     so repeated loads must not accumulate cached RDDs."""
     def n_cached():
@@ -441,6 +441,52 @@ def test_load_batch_evicts_its_cached_batch_when_commit_raises(spark, tmp_path, 
     with pytest.raises(OSError, match="disk full"):
         store.load_batch(batch)
     assert vs._disambiguated(batch).storageLevel == StorageLevel.NONE
+
+
+def test_commit_removes_its_temp_copies_when_a_write_raises(spark, tmp_path, monkeypatch):
+    """A table write that raises leaves no ``vts-*`` temp copy of the
+    tables written before it, and the committed store reads as before."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    path = str(tmp_path / "store")
+    store = vs.VersionedTripleStore(spark, path)
+    store.load_batch(two_model_fixture(spark, T0))
+
+    def rows(state):
+        return [sorted(tuple(r) for r in df.collect())
+                for df in (state.triplet, state.extraction_info, state.version_range)]
+
+    before = rows(store.state())
+    width = store._width
+
+    def failing_width(name):
+        if name == "version_range":
+            raise OSError("disk full")
+        return width(name)
+
+    monkeypatch.setattr(store, "_width", failing_width)
+    with pytest.raises(OSError, match="disk full"):
+        store.load_batch(make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
+    assert [d for d in os.listdir(tmp) if d.startswith("vts-")] == []
+    assert rows(store.state()) == before
+    assert rows(vs.VersionedTripleStore(spark, path).state()) == before
+
+
+@pytest.mark.parametrize("touch_unchanged", [False, True])
+def test_merge_of_an_empty_batch_changes_no_row(spark, touch_unchanged):
+    """An empty batch has no batch time, opens no range, deprecates
+    nothing and, with ``touch_unchanged``, advances no ``use_end``."""
+    s1 = vs.merge_batch(vs.empty_state(spark), two_model_fixture(spark, T0))
+    s1 = vs.merge_batch(s1, make_batch(spark, [("m1", "p0", "NEW", "m2", 1.0, T1)]))
+    s2 = vs.merge_batch(
+        s1, two_model_fixture(spark, T1).where("false"), touch_unchanged=touch_unchanged
+    )
+    for name in vs.VersionedTripleStore.TABLE_NAMES:
+        want = sorted(tuple(r) for r in getattr(s1, name).collect())
+        assert sorted(tuple(r) for r in getattr(s2, name).collect()) == want, name
 
 
 def test_commit_width_follows_committed_files(spark, tmp_path, monkeypatch):
