@@ -93,8 +93,6 @@ EXTENDED_QUERIES = (
     "provenance_reified_export",
     "scd2_reified_current_export",
     "http_chunk_sink_receipts",
-    "holt_trend_forecast_users",
-    "aqp_revenue_estimate",
     # cogroup_reconcile_order_totals is gate-verified but NOT
     # benched: cogrouped applyInPandas pays one Python call per
     # key (its documented price as a semantics surface), which
@@ -106,10 +104,6 @@ EXTENDED_QUERIES = (
     "benford_price_audit",
     "functional_dependency_audit",
     "mutual_information_pairs",
-    "aqp_stratified_revenue",
-    "mann_kendall_user_trend",
-    "theil_sen_user_slope",
-    "robust_location_by_type",
     "turtle_serialization",
     "jsonld_serialization",
     "dedup_minhash_recall_audit",
@@ -128,37 +122,22 @@ EXTENDED_QUERIES = (
     "ols_value_on_hour_dom",
     "transition_latency_events",
     "association_rules_suppliers",
-    "ranking_quality_int8_coarse",
     "hybrid_rrf_search",
-    "ranking_quality_truncated_dims",
     "weekday_seasonality_events",
     "graph_ppr_related_suppliers",
     "sequence_trigrams_events",
-    "psi_value_drift_events",
-    "conformal_value_intervals",
-    "forecast_backtest_users",
     "training_labels_churn",
-    "ccf_views_purchases",
     "shannon_diversity_users",
     "logrank_churn_payers",
-    "did_purchase_value",
-    "bollinger_daily_revenue",
     "cohort_ltv_weekly",
-    "cuped_value_variance_reduction",
     "link_prediction_suppliers",
-    "rate_ratio_purchases",
     "rake_keywords_docs",
-    "mad_scale_by_type",
-    "hill_tail_index_prices",
     "seasonal_adjusted_bursts_events",
     "skyline_parts_price_size",
     "weighted_percentiles_price",
-    "woe_iv_value_purchase",
-    "best_split_value_purchase",
     "attribution_models_purchases",
     "als_rank1_supplier_factors",
     "fellegi_sunter_part_weights",
-    "croston_part_demand",
     "variant_props_rollup",
     "dbscan_embedding_clusters",
     "dawid_skene_consensus_labels",
@@ -181,9 +160,7 @@ EXTENDED_QUERIES = (
     "packing_efficiency_audit",
     "ngram_novelty_val_vs_train",
     "tv_distance_event_mix",
-    "holt_winters_event_volumes",
     "capture_recapture_corpus_size",
-    "median_ci_event_values",
     "shapley_source_vocab_value",
     "monroe_log_odds_sources",
     "mcnemar_paired_classifiers",

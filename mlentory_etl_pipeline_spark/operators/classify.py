@@ -7,7 +7,7 @@ cheap, fully-distributed baseline classifier (quality/language/source
 routing) and leakage-safe categorical encoders for downstream trainers.
 Everything here is exact-integer arithmetic after one quantized-``ln``
 table, so every step is engine-replicable and carries a hard DuckDB
-oracle (the woe_iv / pagerank quantization precedent).
+oracle (the pagerank quantization precedent).
 
 Scale posture (shared by all ops in this module):
 
@@ -341,7 +341,7 @@ def dawid_skene_hard(
       qlog(x) = floor(1e6*ln(x)) on identical rationals — integer
       sums, argmax by (score desc, label asc). Both engines evaluate
       ln on the same double, so assignments replay bit-for-bit (the
-      woe_iv / fellegi_sunter quantization precedent).
+      fellegi_sunter quantization precedent).
 
     Scale posture: per round, ONE item-keyed join + aggregation over
     the annotations table; model state (annotators x L x L dense

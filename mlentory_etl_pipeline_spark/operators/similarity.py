@@ -506,7 +506,7 @@ def _int8_coarse_ranked(
     query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
-    """Shared coarse stage of the int8 two-stage ANN: symmetric int8
+    """The coarse stage of the int8 two-stage ANN: symmetric int8
     codes on both sides, exact long-accumulated integer dot rescaled by
     the two per-vector scales, per-query rank ``_r`` (approx_score
     DESC, neighbor ASC) cut at ``shortlist``. The integer dot is
@@ -561,30 +561,6 @@ def _int8_coarse_ranked(
     )
     return coarse.withColumn("_r", F.row_number().over(w)).where(
         F.col("_r") <= shortlist
-    )
-
-
-def int8_coarse_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """The int8 coarse scan exposed AS a ranking — what the quantized
-    index would return with NO float re-rank. Exists so the ranking-
-    quality audit (:func:`...operators.stats.ranking_metrics` against
-    float brute-force truth) can measure exactly what the 4×-compressed
-    scan loses: returns (query_id, neighbor_id, approx_score, rank)."""
-    return _int8_coarse_ranked(
-        corpus, queries, k, id_col, vec_col, query_id_col, query_vec_col
-    ).select(
-        query_id_col,
-        "neighbor_id",
-        F.round(F.col("approx_score"), 6).alias("approx_score"),
-        F.col("_r").alias("rank"),
     )
 
 

@@ -1,5 +1,14 @@
-"""Resampling statistics at lake scale: deterministic Poisson
-bootstrap.
+"""Group-wise statistics behind the registry's statistics queries.
+
+What is here: the deterministic Poisson bootstrap (below), exact
+prefix sums (:func:`distributed_cum_before`, also used by
+``temporal.cox_ph_binary``), AUC and calibration bins, two-sample and
+agreement tests (Mann-Whitney, KS, Welch, chi-squared, Cohen's kappa,
+Krippendorff's alpha), per-group trends and series monitors (OLS,
+EWMA, isotonic, ACF, rolling z-score, CUSUM), profile statistics
+(Gini, Shannon diversity, weighted percentiles, correlation matrix,
+jackknife), reciprocal-rank fusion for hybrid search
+(:func:`rrf_fuse`) and an order-invariant dataset content digest.
 
 The reference reports point aggregates only (count/avg audit queries,
 ``LoadProcessor.py:531-545``); a pipeline making data-driven curation
@@ -30,8 +39,6 @@ one task, free.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -310,83 +317,6 @@ def exact_auc(
         F.round(
             F.try_divide(num.cast("double"), (2 * pos * neg).cast("double")), 6
         ).alias("auc"),
-    )
-
-
-def average_precision(
-    df: DataFrame,
-    label: Column,
-    score: Column,
-    scale: int = 1_000_000,
-    term_scale: int = 10**12,
-) -> DataFrame:
-    """Exact average precision (area under the step-wise PR curve) of
-    ``score`` against boolean ``label`` — the PR-curve companion to
-    :func:`exact_auc`. For imbalanced curation labels (near-dup?
-    contaminated? toxic?) ROC AUC saturates while AP keeps resolving
-    ranking quality among the rare positives, so both belong in the
-    classifier-audit toolbox.
-
-    Tie-corrected threshold formulation (sklearn's
-    ``average_precision_score``): thresholds are the distinct quantized
-    scores descending; a block with ``c`` rows (``p`` positive), ``Cb``
-    rows and ``Pb`` positives strictly ABOVE it contributes
-
-        (p / P) · (Pb + p) / (Cb + c)      (ΔRecall · Precision@block)
-
-    Exactness contract: scores quantize to ``floor(score·scale)``
-    longs; each block term closes as one integral division
-    ``term_scale·p·(Pb+p) DIV (P·(Cb+c))`` in DECIMAL(38,0) (floor on
-    positives — engine-identical), summed exactly, ONE divide by
-    ``term_scale`` at the end. AP is therefore itself quantized to
-    1/term_scale per block — documented, deterministic.
-
-    Scale posture: identical to exact_auc — one map-side-combined
-    groupBy on the quantized score, descending prefix sums via
-    ``distributed_cum_before`` (range partition + local window +
-    broadcast triangular offsets; no single-partition WindowExec).
-
-    Degenerate contract: zero positives → no blocks with p>0 → ``ap``
-    NULL (sum over empty), ``n_pos`` says why.
-    """
-    q = df.select(
-        # negate so ascending order of _k == descending score
-        (-F.floor(score * scale)).cast("long").alias("_k"),
-        F.when(label, F.lit(1)).otherwise(F.lit(0)).alias("_y"),
-    )
-    g = q.groupBy("_k").agg(
-        F.count(F.lit(1)).alias("_c"), F.sum("_y").alias("_p")
-    )
-    ranked = distributed_cum_before(g, "_k", ["_c", "_p"])
-    tot = ranked.agg(
-        F.sum("_p").alias("_tp"), F.sum("_c").alias("_tc")
-    )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    with_tot = ranked.crossJoin(F.broadcast(tot))
-    num = (
-        F.lit(term_scale).cast("decimal(38,0)")
-        * d(F.col("_p"))
-        * (d(F.col("_cb__p")) + d(F.col("_p")))
-    )
-    den = d(F.col("_tp")) * (d(F.col("_cb__c")) + d(F.col("_c")))
-    agg = with_tot.select(
-        "_tp",
-        "_tc",
-        # NULL block (skipped by SUM) when p=0: no ΔRecall, and it
-        # keeps the integral divide away from a P=0 denominator
-        F.when(F.col("_p") > 0, num.cast("decimal(38,0)")).alias("_num"),
-        den.alias("_den"),
-    ).agg(
-        F.sum(F.expr("_num DIV _den")).alias("_ts"),
-        F.max("_tp").alias("n_pos"),
-        F.max("_tc").alias("n"),
-    )
-    return agg.select(
-        "n_pos",
-        "n",
-        F.round(
-            F.col("_ts").cast("double") / F.lit(float(term_scale)), 6
-        ).alias("ap"),
     )
 
 
@@ -1685,625 +1615,16 @@ def cusum_changepoint(
     ).orderBy(*group_cols)
 
 
-def holt_linear(
-    df: DataFrame,
-    group_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    order_tiebreak: str,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    horizon: int = 7,
-) -> DataFrame:
-    """Per-group Holt double-exponential smoothing (level + trend) and
-    an h-step-ahead forecast — the one-number-per-entity trend signal
-    (is this feed growing or dying, and where will it be next week?)
-    that :func:`ewma_last` cannot give because a plain EWMA has no
-    trend state and lags any drift.
-
-    Recurrence (standard Holt 1957 form, initialized l1 = y1, b1 = 0):
-
-        l_t = a*y_t + (1-a)*(l_{t-1} + b_{t-1})
-        b_t = B*(l_t - l_{t-1}) + (1-B)*b_{t-1}
-
-    Determinism contract: the fold is evaluated SEQUENTIALLY over each
-    group's (ts, tiebreak)-sorted series with one fixed expression per
-    step, so every engine performs the identical IEEE-754 double
-    operations in the identical order — a *recurrence* can carry a
-    hard SQL oracle (DuckDB recursive CTE) because association, not
-    commutativity of parallel partial sums, is the only thing that
-    matters. Keep ``alpha``/``beta`` exactly-representable doubles
-    (dyadic rationals like the 0.5 / 0.25 defaults) so the SQL literal
-    parses to the same double. NULL values are dropped before the fold
-    (listwise, documented like welch_t_test).
-
-    Scale posture: one group-keyed aggregation (collect_list +
-    array_sort + a single ``F.aggregate`` fold — all JVM-side Catalyst
-    HOFs, no Python). The series materializes PER GROUP, so the
-    contract is bounded events-per-entity (the same per-key bound
-    every sessionization or SCD2 history pass already assumes); groups
-    distribute freely across executors. Reference parity: the
-    reference has no forecasting op — this extends its monitoring
-    surface (LoadProcessor.py:531-545 point aggregates) the way
-    bootstrap_ci / cusum do.
-    """
-    a = float(alpha)
-    b = float(beta)
-    series = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*group_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(ts_col).alias("ts"),
-                        F.col(order_tiebreak).alias("tb"),
-                        F.col(value_col).cast("double").alias("y"),
-                    )
-                )
-            ).alias("_s")
-        )
-    )
-
-    def _step(acc, x):
-        l_new = F.lit(a) * x["y"] + F.lit(1.0 - a) * (acc["l"] + acc["b"])
-        return F.struct(
-            (acc["n"] + F.lit(1)).alias("n"),
-            F.when(acc["n"] == F.lit(0), x["y"]).otherwise(l_new).alias("l"),
-            F.when(acc["n"] == F.lit(0), F.lit(0.0))
-            .otherwise(F.lit(b) * (l_new - acc["l"]) + F.lit(1.0 - b) * acc["b"])
-            .alias("b"),
-        )
-
-    init = F.struct(
-        F.lit(0).cast("int").alias("n"), F.lit(0.0).alias("l"), F.lit(0.0).alias("b")
-    )
-    st = F.aggregate("_s", init, _step)
-    return series.select(
-        *group_cols,
-        st["n"].alias("n_points"),
-        F.round(st["l"], 6).alias("level"),
-        F.round(st["b"], 6).alias("trend"),
-        F.round(st["l"] + F.lit(float(horizon)) * st["b"], 6).alias(
-            f"forecast_{horizon}"
-        ),
-    ).orderBy(*group_cols)
-
-
-def aqp_sum_estimate(
-    df: DataFrame,
-    group_cols: list[str],
-    value: Column,
-    key: Column,
-    sample_bps: int = 1000,
-    z: float = 1.96,
-) -> DataFrame:
-    """Approximate query processing: estimate a grouped SUM from a
-    deterministic Bernoulli sample, with a CLT confidence interval —
-    the scan-1%-answer-in-seconds path a 100 TB interactive dashboard
-    needs (BlinkDB-style, but with no stored sample: the sample IS a
-    pure function of the row key).
-
-    Sampling: a row enters the sample iff the top 60 bits of
-    ``md5(key)`` fall under ``floor(2^60 * bps / 10^4)`` — an exact
-    integer threshold, so membership is bit-identical in any engine
-    (no RNG, no seed state; the same family as hash_split /
-    dp_noisy_counts). Estimator: Horvitz-Thompson ``sum/p`` with the
-    Bernoulli variance estimate ``(1-p)/p^2 * sum(y^2)`` folded from
-    the SAME pass; sums run in exact DECIMAL (the q1 money idiom) and
-    divide to double only at the end, so estimate AND error bars carry
-    a hard SQL oracle.
-
-    Scale posture: the md5 gate is a map-side filter inside the scan
-    stage — the shuffle sees only sampled rows (p of the data), and
-    the aggregation is an ordinary partial-agg groupBy. At deployment
-    the same predicate defines a MATERIALIZED sample table so repeat
-    queries skip the full scan entirely; this operator is the
-    correctness spec either way. ``value`` must be decimal-typed by
-    the caller (exactness contract).
-    """
-    p_num, p_den = int(sample_bps), 10_000
-    threshold = ((1 << 60) * p_num) // p_den
-    inv_p = float(p_den) / float(p_num)
-    var_factor = float((p_den - p_num) * p_den) / float(p_num * p_num)
-    u = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-    sampled = df.where(u < F.lit(threshold))
-    # square in exact INTEGER raw units (value * 10^scale as a scale-0
-    # decimal): fractional decimal squares hit engine-specific
-    # precision capping (Spark rounds a (19,4)^2 to scale 7, DuckDB
-    # overflows an 18-wide square) — integral raw units square exactly
-    # everywhere, and the 10^(2*scale) divisor comes back at the
-    # double stage
-    value_scale = 4
-    raw = (value.cast("decimal(19,4)") * F.lit(10**value_scale)).cast(
-        "decimal(19,0)"
-    )
-    agg = sampled.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.sum(value).alias("_sum"),
-        F.sum(raw * raw).alias("_sumsq"),
-    )
-    est = F.col("_sum").cast("double") * F.lit(inv_p)
-    # the raw-unit sum of squares exceeds 2^53: engine-portable cast
-    # (see portable_big_double — DuckDB's HUGEINT cast double-rounds)
-    se = F.sqrt(
-        F.lit(var_factor)
-        * (
-            portable_big_double(F.col("_sumsq"))
-            / F.lit(float(10 ** (2 * value_scale)))
-        )
-    )
-    # scale-robust closes: engine ROUND tie conventions diverge on
-    # knife-edge doubles (sf0.1 finding) — floor device instead
-    from ..functions.rounding import round_ties_up_col
-
-    return agg.select(
-        *group_cols,
-        "n_sampled",
-        round_ties_up_col(est, 4).alias("est_sum"),
-        round_ties_up_col(se, 4).alias("std_err"),
-        round_ties_up_col(est - F.lit(float(z)) * se, 4).alias("ci_lo"),
-        round_ties_up_col(est + F.lit(float(z)) * se, 4).alias("ci_hi"),
-    ).orderBy(*group_cols)
-
-
-def aqp_stratified_sum(
-    df: DataFrame,
-    stratum_col: str,
-    value: Column,
-    key: Column,
-    allocation: dict[str, int],
-    default_bps: int = 1000,
-    z: float = 1.96,
-    value_scale: int = 4,
-) -> DataFrame:
-    """Stratified companion to :func:`aqp_sum_estimate`: each stratum
-    samples at its OWN rate (``allocation[stratum]`` basis points,
-    ``default_bps`` otherwise; 10000 = census), so rare-but-heavy
-    strata can be read in full while the bulk is sampled thin — the
-    allocation freedom that makes a stratified estimator's interval
-    tighter than uniform Bernoulli at the same scan budget. A census
-    stratum contributes ZERO variance (the 1−p factor vanishes).
-
-    Estimate and variance are per-stratum Horvitz-Thompson terms
-    summed across strata (independent samples): the per-stratum fold
-    is exact integer raw units (one hash-keyed aggregation), the
-    cross-strata rollup runs over |strata| rows. Emits one row per
-    stratum plus a TOTAL row (stratum NULL, the grouping-sets
-    convention) with the combined CI. Sampling stays a pure function
-    of md5(key) — deterministic, engine-portable, oracle-able.
-
-    Contract: a stratum whose sample came back EMPTY contributes 0 to
-    the total (the unbiased HT treatment) and emits no per-stratum
-    row — size rare strata's rates (census = 10000 bps) so that
-    cannot happen where it matters.
-    """
-    p_den = 10_000
-    alloc = dict(allocation)
-    bps_expr = F.lit(default_bps)
-    thr_expr = F.lit(((1 << 60) * default_bps) // p_den)
-    inv_expr = F.lit(float(p_den) / float(default_bps))
-    var_expr = F.lit(
-        float((p_den - default_bps) * p_den) / float(default_bps * default_bps)
-    )
-    for s, bps in alloc.items():
-        cond = F.col(stratum_col) == F.lit(s)
-        bps_expr = F.when(cond, F.lit(bps)).otherwise(bps_expr)
-        thr_expr = F.when(cond, F.lit(((1 << 60) * bps) // p_den)).otherwise(thr_expr)
-        inv_expr = F.when(cond, F.lit(float(p_den) / float(bps))).otherwise(inv_expr)
-        var_expr = F.when(
-            cond, F.lit(float((p_den - bps) * p_den) / float(bps * bps))
-        ).otherwise(var_expr)
-
-    u = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-    raw = (value.cast("decimal(19,4)") * F.lit(10**value_scale)).cast("decimal(19,0)")
-    sampled = df.where(u < thr_expr).select(
-        F.col(stratum_col).alias("stratum"),
-        bps_expr.alias("bps"),
-        inv_expr.alias("_inv"),
-        var_expr.alias("_vf"),
-        raw.alias("_raw"),
-    )
-    per = sampled.groupBy("stratum", "bps", "_inv", "_vf").agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.sum("_raw").alias("_s1"),
-        F.sum(F.col("_raw") * F.col("_raw")).alias("_s2"),
-    )
-    sfac = float(10**value_scale)
-    est = F.col("_s1").cast("double") / F.lit(sfac) * F.col("_inv")
-    var = F.col("_vf") * (F.col("_s2").cast("double") / F.lit(sfac * sfac))
-    rows = per.select(
-        "stratum", "bps", "n_sampled",
-        F.round(est, 4).alias("est_sum"),
-        var.alias("_var"),
-    )
-    total = rows.agg(
-        F.lit(None).cast(per.schema["stratum"].dataType).alias("stratum"),
-        F.lit(None).cast("int").alias("bps"),
-        F.sum("n_sampled").alias("n_sampled"),
-        F.round(F.sum("est_sum"), 4).alias("est_sum"),
-        F.sum("_var").alias("_var"),
-    )
-    zl = F.lit(float(z))
-    out = rows.unionByName(total).select(
-        "stratum", "bps", "n_sampled", "est_sum",
-        F.round(F.sqrt(F.col("_var")), 4).alias("std_err"),
-        F.round(F.col("est_sum") - zl * F.sqrt(F.col("_var")), 4).alias("ci_lo"),
-        F.round(F.col("est_sum") + zl * F.sqrt(F.col("_var")), 4).alias("ci_hi"),
-    )
-    return out.orderBy(F.col("stratum").asc_nulls_last())
-
-
-def mann_kendall(
-    df: DataFrame,
-    group_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    order_tiebreak: str,
-    cents: int = 100,
-    z_crit: float = 1.96,
-) -> DataFrame:
-    """Per-group Mann-Kendall trend test — the NONPARAMETRIC "is this
-    series going up?" next to :func:`groupwise_trend`'s OLS slope and
-    :func:`holt_linear`'s smoothed trend: rank-based, so one spike
-    cannot fake a trend and no linearity is assumed (the standard
-    monotonic-trend test for telemetry).
-
-    ``S = Σ_{i<j} sign(x_j − x_i)`` over the (ts, tiebreak)-ordered
-    series, with the tie-corrected null variance
-    ``Var = (n(n−1)(2n+5) − Σ_t t(t−1)(2t+5)) / 18`` and the
-    continuity-corrected ``z = (S∓1)/√Var``. Everything up to the one
-    final sqrt/divide is EXACT integer arithmetic on quantized values
-    (``floor(v·cents)``), so the whole test carries a hard SQL oracle.
-
-    Plan: one row_number window per group, one group-keyed self-join
-    on ``i < j`` (pair fan-out is n²/2 PER GROUP — the same
-    bounded-events-per-entity contract as holt_linear; groups
-    distribute freely), one tie-size aggregation, one final join.
-    Returns ``(group…, n_points, s_stat, var_s, z, trend)`` with
-    ``trend`` in {increasing, decreasing, no_trend} at ``z_crit``.
-    """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*group_cols).orderBy(ts_col, order_tiebreak)
-    r = df.where(F.col(value_col).isNotNull()).select(
-        *group_cols,
-        F.col(ts_col),
-        F.col(order_tiebreak),
-        F.floor(F.col(value_col) * cents).cast("long").alias("_v"),
-    ).withColumn("_rn", F.row_number().over(w))
-    a = r.select(*group_cols, F.col("_rn").alias("_i"), F.col("_v").alias("_vi"))
-    b = r.select(*group_cols, F.col("_rn").alias("_j"), F.col("_v").alias("_vj"))
-    s = (
-        a.join(b, group_cols)
-        .where(F.col("_i") < F.col("_j"))
-        .groupBy(*group_cols)
-        .agg(F.sum(F.signum(F.col("_vj") - F.col("_vi")).cast("long")).alias("s_stat"))
-    )
-    ties = (
-        r.groupBy(*group_cols, "_v")
-        .agg(F.count(F.lit(1)).alias("_t"))
-        .groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("_distinct"),
-            F.sum("_t").alias("n_points"),
-            F.sum(
-                F.col("_t") * (F.col("_t") - 1) * (2 * F.col("_t") + 5)
-            ).alias("_tie_corr"),
-        )
-    )
-    n = F.col("n_points")
-    var_s = (
-        (n * (n - 1) * (2 * n + 5) - F.col("_tie_corr")).cast("double")
-        / F.lit(18.0)
-    )
-    s_adj = (
-        F.when(F.col("s_stat") > 0, F.col("s_stat") - 1)
-        .when(F.col("s_stat") < 0, F.col("s_stat") + 1)
-        .otherwise(F.lit(0))
-        .cast("double")
-    )
-    z = F.when(var_s > 0, s_adj / F.sqrt(var_s)).otherwise(F.lit(None))
-    # LEFT join + coalesce: a single-point group has NO i<j pairs —
-    # it must still report (n=1, S=0, var 0, z NULL), not vanish
-    out = ties.join(s, group_cols, "left").withColumn(
-        "s_stat", F.coalesce(F.col("s_stat"), F.lit(0))
-    )
-    return out.select(
-        *group_cols,
-        "n_points",
-        "s_stat",
-        F.round(var_s, 4).alias("var_s"),
-        F.round(z, 4).alias("z"),
-        F.when(z > F.lit(float(z_crit)), F.lit("increasing"))
-        .when(z < F.lit(-float(z_crit)), F.lit("decreasing"))
-        .otherwise(F.lit("no_trend"))
-        .alias("trend"),
-    ).orderBy(*group_cols)
-
-
-def theil_sen(
-    df: DataFrame,
-    group_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    order_tiebreak: str,
-    cents: int = 100,
-) -> DataFrame:
-    """Per-group Theil–Sen slope — the ROBUST trend estimator (median
-    of all pairwise slopes: up to ~29% of the points can be corrupted
-    before the estimate moves, where one bad point drags an OLS slope
-    arbitrarily): the third member of the trend family next to
-    :func:`groupwise_trend` (OLS) and :func:`mann_kendall` (the
-    significance test this point-estimates for).
-
-    Determinism: each pairwise slope is ONE long/long double division
-    (quantized value delta over µs delta — correctly rounded, so
-    engine-identical); the median picks exact order statistics of the
-    per-group sorted slope array (no interpolation beyond the two-
-    middle average). Scale: the same group-keyed ``i < j`` pair join
-    as mann_kendall — n²/2 pairs PER GROUP under the bounded-events-
-    per-entity contract; groups distribute freely.
-
-    Returns ``(group…, n_points, n_pairs, slope_per_day)`` (value
-    units per day, 6 dp).
-    """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*group_cols).orderBy(ts_col, order_tiebreak)
-    r = df.where(F.col(value_col).isNotNull()).select(
-        *group_cols,
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_t"),
-        F.col(ts_col),
-        F.col(order_tiebreak),
-        F.floor(F.col(value_col) * cents).cast("long").alias("_v"),
-    ).withColumn("_rn", F.row_number().over(w))
-    a = r.select(
-        *group_cols, F.col("_rn").alias("_i"),
-        F.col("_t").alias("_ti"), F.col("_v").alias("_vi"),
-    )
-    b = r.select(
-        *group_cols, F.col("_rn").alias("_j"),
-        F.col("_t").alias("_tj"), F.col("_v").alias("_vj"),
-    )
-    slope = (F.col("_vj") - F.col("_vi")).cast("double") / (
-        F.col("_tj") - F.col("_ti")
-    ).cast("double")
-    pairs = (
-        a.join(b, group_cols)
-        .where((F.col("_i") < F.col("_j")) & (F.col("_tj") != F.col("_ti")))
-        .select(*group_cols, slope.alias("_s"))
-    )
-    counts = r.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n_points"))
-    agg = pairs.groupBy(*group_cols).agg(
-        F.array_sort(F.collect_list("_s")).alias("_arr"),
-        F.count(F.lit(1)).alias("n_pairs"),
-    )
-    n = F.col("n_pairs")
-    med = F.when(
-        n % 2 == 1, F.element_at("_arr", ((n + 1) / 2).cast("int"))
-    ).otherwise(
-        (
-            F.element_at("_arr", (n / 2).cast("int"))
-            + F.element_at("_arr", (n / 2).cast("int") + 1)
-        )
-        / F.lit(2.0)
-    )
-    return (
-        counts.join(agg, group_cols, "left")
-        .select(
-            *group_cols,
-            "n_points",
-            F.coalesce(F.col("n_pairs"), F.lit(0)).alias("n_pairs"),
-            F.round(
-                med * F.lit(86400.0 * 1_000_000.0) / F.lit(float(cents)), 6
-            ).alias("slope_per_day"),
-        )
-        .orderBy(*group_cols)
-    )
-
-
-def robust_location(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    order_tiebreak: str,
-    trim: float = 0.1,
-    cents: int = 100,
-    z: float = 1.96,
-) -> DataFrame:
-    """Per-group robust location estimates: ``trim``-trimmed mean,
-    winsorized mean, exact median, and a DISTRIBUTION-FREE median CI
-    from binomial order statistics — the location family that holds
-    up when :func:`bootstrap_ci`'s mean does not (heavy-tailed value
-    columns, bot spikes, price glitches).
-
-    Everything selects exact ORDER STATISTICS of the quantized series
-    (floor(v·cents) longs, rank by (value, tiebreak)): the trimmed
-    mean sums ranks in ``(⌊αn⌋, n−⌊αn⌋]`` exactly; winsorizing clamps
-    to the boundary order stats; the median CI picks ranks
-    ``⌊(n − z√n)/2⌋`` and ``⌈1 + (n + z√n)/2⌉`` (the standard
-    large-sample binomial bounds, ~95% coverage at z=1.96, NO
-    normality assumed). Integer arithmetic throughout; doubles only
-    at the final divisions — hard-oracle-able.
-
-    Plan: one per-group rank window + one count broadcast + three
-    conditional aggregations folded into ONE pass over the ranked
-    rows. Groups distribute freely; the window sorts within group
-    (the per-entity bound every ranked statistic pays).
-    """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*group_cols).orderBy("_v", order_tiebreak)
-    r = df.where(F.col(value_col).isNotNull()).select(
-        *group_cols,
-        F.col(order_tiebreak),
-        F.floor(F.col(value_col) * cents).cast("long").alias("_v"),
-    ).withColumn("_rn", F.row_number().over(w))
-    counts = r.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("_n"))
-    j = r.join(F.broadcast(counts), group_cols)
-    n = F.col("_n")
-    k = F.floor(F.lit(float(trim)) * n).cast("long")
-    lo_keep, hi_keep = k + 1, n - k
-    zr = F.lit(float(z)) * F.sqrt(n.cast("double"))
-    ci_lo_rank = F.floor((n.cast("double") - zr) / F.lit(2.0)).cast("long")
-    ci_hi_rank = F.ceil(F.lit(1.0) + (n.cast("double") + zr) / F.lit(2.0)).cast(
-        "long"
-    )
-    mid_lo, mid_hi = (n + 1) / F.lit(2), (n + 2) / F.lit(2)
-    rn = F.col("_rn")
-    v = F.col("_v")
-    agg = j.groupBy(*group_cols).agg(
-        F.max("_n").alias("n_points"),
-        F.sum(F.when((rn >= lo_keep) & (rn <= hi_keep), v)).alias("_trim_sum"),
-        F.max(F.when(rn == lo_keep, v)).alias("_lo_v"),
-        F.max(F.when(rn == hi_keep, v)).alias("_hi_v"),
-        F.sum(
-            F.when((rn >= lo_keep) & (rn <= hi_keep), v).otherwise(F.lit(0))
-        ).alias("_mid_sum"),
-        F.max(F.when(rn == F.floor(mid_lo).cast("long"), v)).alias("_med_a"),
-        F.max(F.when(rn == F.floor(mid_hi).cast("long"), v)).alias("_med_b"),
-        F.max(F.when(rn == F.greatest(ci_lo_rank, F.lit(1)), v)).alias("_ci_lo"),
-        F.max(F.when(rn == F.least(ci_hi_rank, n), v)).alias("_ci_hi"),
-        F.max(k).alias("_k"),
-    )
-    nn = F.col("n_points")
-    kept = nn - F.lit(2) * F.col("_k")
-    cf = F.lit(float(cents))
-    trimmed = F.col("_trim_sum").cast("double") / kept.cast("double") / cf
-    winsor = (
-        (
-            F.col("_mid_sum")
-            + F.col("_k") * F.col("_lo_v")
-            + F.col("_k") * F.col("_hi_v")
-        ).cast("double")
-        / nn.cast("double")
-        / cf
-    )
-    median = (
-        (F.col("_med_a") + F.col("_med_b")).cast("double") / F.lit(2.0) / cf
-    )
-    return agg.select(
-        *group_cols,
-        "n_points",
-        F.round(trimmed, 6).alias("trimmed_mean"),
-        F.round(winsor, 6).alias("winsor_mean"),
-        F.round(median, 6).alias("median"),
-        F.round(F.col("_ci_lo").cast("double") / cf, 6).alias("median_ci_lo"),
-        F.round(F.col("_ci_hi").cast("double") / cf, 6).alias("median_ci_hi"),
-    ).orderBy(*group_cols)
-
-
 # ------------------------------------------------- retrieval ranking
-
-
-def ranking_discounts(k: int) -> tuple[list[int], list[int]]:
-    """Integer micro-unit DCG discount tables for ``ranking_metrics``:
-    ``disc[r-1] = round(1e6 / log2(r+1))`` and the graded ideal prefix
-    ``idcg[n-1] = sum_{i<=n} (k-i+1) * disc[i-1]``.
-
-    Integerizing the log discounts (quantization ±5e-7 each) is what
-    makes DCG an ORDER-FREE exact integer sum — a float-weighted rank
-    sum cannot otherwise match bit-for-bit across engines (libm log2
-    ULP drift plus summation-order drift). The same quantized table
-    feeds numerator and denominator, so the nDCG bias is second-order.
-    Exposed as a function so the SQL oracle embeds the IDENTICAL
-    literals."""
-    disc = [round(1_000_000 / math.log2(r + 1)) for r in range(1, k + 1)]
-    idcg, acc = [], 0
-    for i in range(1, k + 1):
-        acc += (k - i + 1) * disc[i - 1]
-        idcg.append(acc)
-    return disc, idcg
-
-
-def ranking_metrics(
-    retrieved: DataFrame,
-    truth: DataFrame,
-    k: int,
-    query_col: str = "query_id",
-    item_col: str = "neighbor_id",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Per-query graded retrieval-quality metrics — reciprocal rank,
-    nDCG@k, precision@k, recall@k — of a candidate ranking against a
-    ground-truth ranking. The eval companion the recall@k audit
-    (``ann_trained_recall_audit``) can't express: recall treats every
-    truth item equally, nDCG says WHERE in the list the retriever put
-    them (reference match quality: ``QAMatchingEngine.py:154-237``
-    returns ranked matches; this grades such a ranking).
-
-    Both inputs are (query, item, rank) with rank 1-based; truth items
-    are graded ``k - truth_rank + 1`` (top truth item highest). Every
-    per-query metric is computed from EXACT integers with one double
-    division at the end (first-hit rank, hit count, micro-unit DCG via
-    :func:`ranking_discounts`), so rows are engine-reproducible with no
-    order-dependent float summation anywhere. Queries come from the
-    truth side; a query with no retrieved rows scores 0.
-
-    Scale posture: one (query, item)-keyed hash join + one per-query
-    aggregation (map-side combinable); the per-query truth-size table
-    rides the same aggregation. Output is |queries| rows — take AVG of
-    any column for the corpus headline."""
-    disc, idcg = ranking_discounts(k)
-    disc_arr = F.array(*[F.lit(v).cast("long") for v in disc])
-    idcg_arr = F.array(*[F.lit(v).cast("long") for v in idcg])
-    r = retrieved.where(F.col(rank_col) <= k).select(
-        F.col(query_col).alias("_q"),
-        F.col(item_col).alias("_i"),
-        F.col(rank_col).cast("int").alias("_rr"),
-    )
-    tr = truth.where(F.col(rank_col) <= k).select(
-        F.col(query_col).alias("_q"),
-        F.col(item_col).alias("_i"),
-        F.col(rank_col).cast("int").alias("_tr"),
-    )
-    nt = tr.groupBy("_q").agg(F.count(F.lit(1)).alias("n_truth"))
-    j = r.join(tr, ["_q", "_i"], "left")
-    perq = j.groupBy("_q").agg(
-        F.min(F.when(F.col("_tr").isNotNull(), F.col("_rr"))).alias("_fh"),
-        F.sum(
-            F.when(
-                F.col("_tr").isNotNull(),
-                (F.lit(k) - F.col("_tr") + 1).cast("long")
-                * F.element_at(disc_arr, F.col("_rr")),
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias("_dcg_u"),
-        F.sum(F.when(F.col("_tr").isNotNull(), 1).otherwise(0)).alias("_hits"),
-    )
-    out = nt.join(perq, "_q", "left")
-    idcg_u = F.element_at(
-        idcg_arr, F.least(F.col("n_truth"), F.lit(k)).cast("int")
-    )
-    hits = F.coalesce(F.col("_hits"), F.lit(0))
-    return out.select(
-        F.col("_q").alias(query_col),
-        F.col("n_truth"),
-        hits.alias("hits"),
-        F.round(
-            F.coalesce(F.lit(1.0) / F.col("_fh"), F.lit(0.0)), 6
-        ).alias("rr"),
-        F.round(
-            F.coalesce(F.col("_dcg_u"), F.lit(0)).cast("double")
-            / idcg_u.cast("double"),
-            6,
-        ).alias("ndcg"),
-        F.round(hits.cast("double") / F.lit(float(k)), 6).alias(
-            "precision_at_k"
-        ),
-        F.round(
-            hits.cast("double") / F.col("n_truth").cast("double"), 6
-        ).alias("recall_at_k"),
-    )
 
 
 def rrf_weights(depth: int, c: int = 60) -> list[int]:
     """Integer nano-unit reciprocal-rank-fusion weight table:
     ``w[r-1] = round(1e9 / (c + r))`` for ranks 1..depth (Cormack &
     Clarke's RRF with the standard c=60). Integerizing makes the
-    cross-list fused score an ORDER-FREE exact integer sum — the
-    :func:`ranking_discounts` determinism trick — so fusion ranking is
-    engine-reproducible and the SQL oracle embeds identical literals."""
+    cross-list fused score an ORDER-FREE exact integer sum, so fusion
+    ranking is engine-reproducible and the SQL oracle embeds identical
+    literals."""
     return [round(1_000_000_000 / (c + r)) for r in range(1, depth + 1)]
 
 
@@ -2371,365 +1692,6 @@ def rrf_fuse(
     return out.select(*sel)
 
 
-# ------------------------------------------------- drift & conformal
-
-
-def psi_drift(
-    df: DataFrame,
-    is_reference: Column,
-    value: Column,
-    n_buckets: int = 10,
-) -> DataFrame:
-    """Population Stability Index between a reference and an actual
-    window of a numeric feature — the industry drift dashboard's
-    standard number (PSI < 0.1 stable, > 0.25 action): bucket edges
-    are the reference's exact ``percentile_disc`` deciles (actual data
-    points — no interpolation, engine-identical), both windows are
-    bucketed by the same edges, and
-
-        PSI = Σ_b (p_b − q_b) · ln(p_b / q_b)
-
-    with add-half smoothing so empty buckets contribute finitely.
-
-    Determinism: the kl_domain_drift integerization — each bucket's
-    log-ratio is ONE ln quantized to micro-units (bigint) and
-    multiplied by the EXACT integer share difference
-    ``(2a+1)(2E+B) − (2e+1)(2A+B)`` carried in DECIMAL(38,0), so both
-    per-bucket terms and the total fold order-free; one double
-    division at the end. DECIMAL budget: counts to ~10¹² rows keep
-    every product under 10³². Requires a non-empty reference window
-    (edges are undefined otherwise).
-
-    Scale posture: one pass for the decile edges (reference
-    aggregation), one bucket-keyed count aggregation over the full
-    input (map-side combinable, ≤ n_buckets rows out), the smoothing
-    grid is literal-sized. Returns one row per bucket with its term
-    and the repeated total.
-    """
-    base = df.select(
-        is_reference.cast("boolean").alias("_ref"), value.alias("_v")
-    ).where(F.col("_v").isNotNull())
-    edge_aggs = [
-        F.expr(
-            f"percentile_disc({k}/{n_buckets}D) WITHIN GROUP (ORDER BY _v)"
-        ).alias(f"_e{k}")
-        for k in range(1, n_buckets)
-    ]
-    edges = base.where(F.col("_ref")).agg(*edge_aggs)
-    bucket = F.lit(1)
-    for k in range(1, n_buckets):
-        bucket = bucket + F.when(F.col("_v") > F.col(f"_e{k}"), 1).otherwise(0)
-    counted = (
-        base.crossJoin(F.broadcast(edges))
-        .select(bucket.alias("bucket"), "_ref")
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0)).alias("_en"),
-            F.sum(F.when(F.col("_ref"), 0).otherwise(1)).alias("_an"),
-        )
-    )
-    grid = F.broadcast(
-        counted.sparkSession.range(1, n_buckets + 1).select(
-            F.col("id").cast("int").alias("bucket")
-        )
-    )
-    dense = grid.join(counted, "bucket", "left").select(
-        "bucket",
-        F.coalesce(F.col("_en"), F.lit(0)).alias("_en"),
-        F.coalesce(F.col("_an"), F.lit(0)).alias("_an"),
-    )
-    tot = dense.agg(
-        F.sum("_en").alias("_E"), F.sum("_an").alias("_A")
-    )
-    b = F.lit(n_buckets)
-    g = dense.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "_en",
-        "_an",
-        (F.lit(2) * F.col("_en") + 1).alias("_pe"),
-        (F.lit(2) * F.col("_an") + 1).alias("_pa"),
-        (F.lit(2) * F.col("_E") + b).alias("_de"),
-        (F.lit(2) * F.col("_A") + b).alias("_da"),
-        "_E",
-        "_A",
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    lq = F.floor(
-        F.log(
-            F.col("_pa").cast("double")
-            * F.col("_de").cast("double")
-            / (F.col("_pe").cast("double") * F.col("_da").cast("double"))
-        )
-        * F.lit(1000000)
-    ).cast("long")
-    num = dec(F.col("_pa")) * F.col("_de") - dec(F.col("_pe")) * F.col("_da")
-    den = (dec(F.col("_da")) * F.col("_de")).cast("double") * 1000000.0
-    terms = g.select(
-        "bucket",
-        F.col("_en").alias("expected_n"),
-        F.col("_an").alias("actual_n"),
-        F.round(F.try_divide(F.col("_en").cast("double"), F.col("_E").cast("double")), 6).alias("expected_pct"),
-        F.round(F.try_divide(F.col("_an").cast("double"), F.col("_A").cast("double")), 6).alias("actual_pct"),
-        (num * lq).alias("_ts"),
-        den.alias("_den"),
-        F.col("_E"),
-        F.col("_A"),
-    )
-    total = terms.agg(F.sum("_ts").alias("_tot")).select("_tot")
-    return (
-        terms.crossJoin(F.broadcast(total))
-        .select(
-            "bucket",
-            "expected_n",
-            "actual_n",
-            "expected_pct",
-            "actual_pct",
-            F.round(F.col("_ts").cast("double") / F.col("_den"), 6).alias(
-                "psi_term"
-            ),
-            F.round(F.col("_tot").cast("double") / F.col("_den"), 6).alias(
-                "psi_total"
-            ),
-        )
-        .orderBy("bucket")
-    )
-
-
-def conformal_intervals(
-    df: DataFrame,
-    group: Column,
-    id_hash_src: Column,
-    value: Column,
-    target_coverage_pct: int = 90,
-) -> DataFrame:
-    """Split-conformal prediction-interval audit per group: the
-    calibration half (deterministic md5 split on the id) fits a
-    trivially exchangeable predictor (the calibration MEDIAN — an
-    exact ``percentile_disc`` data point, no arithmetic) and takes the
-    ``target_coverage_pct`` quantile of absolute calibration residuals
-    as the interval half-width q; the held-out half then measures the
-    EMPIRICAL coverage of median ± q — the distribution-free guarantee
-    a monitoring pipeline actually checks (coverage ≈ target
-    regardless of the value distribution).
-
-    Determinism: both quantiles are percentile_disc (actual data
-    points); residuals are one IEEE subtraction of identical doubles;
-    coverage is a ratio of exact integer counts — one double division.
-
-    Scale posture: two per-group aggregations (median, then residual
-    quantile over the calibration half) + one per-group coverage
-    aggregation; the per-group stats frames are |groups| rows,
-    broadcast back.
-    """
-    base = df.select(
-        group.alias("_g"),
-        (
-            F.substring(F.md5(id_hash_src.cast("string")), 1, 2) < "80"
-        ).alias("_cal"),
-        value.alias("_v"),
-    ).where(F.col("_v").isNotNull())
-    med = base.where(F.col("_cal")).groupBy("_g").agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY _v)").alias(
-            "_med"
-        ),
-        F.count(F.lit(1)).alias("n_calib"),
-    )
-    resid = base.join(F.broadcast(med), "_g").select(
-        "_g",
-        "_cal",
-        "_v",
-        F.abs(F.col("_v") - F.col("_med")).alias("_r"),
-    )
-    frac = target_coverage_pct / 100.0
-    q = resid.where(F.col("_cal")).groupBy("_g").agg(
-        F.expr(
-            f"percentile_disc({frac!r}D) WITHIN GROUP (ORDER BY _r)"
-        ).alias("_q")
-    )
-    ev = resid.where(~F.col("_cal")).join(F.broadcast(q), "_g")
-    return (
-        ev.groupBy("_g")
-        .agg(
-            F.count(F.lit(1)).alias("n_eval"),
-            F.sum(F.when(F.col("_r") <= F.col("_q"), 1).otherwise(0)).alias(
-                "_cov"
-            ),
-            F.max("_q").alias("_qv"),
-        )
-        .join(F.broadcast(med.select("_g", "n_calib", "_med")), "_g")
-        .select(
-            F.col("_g").alias("group"),
-            "n_calib",
-            "n_eval",
-            F.round(F.col("_med"), 6).alias("median"),
-            F.round(F.col("_qv"), 6).alias("half_width"),
-            F.round(
-                F.try_divide(
-                    F.col("_cov").cast("double"), F.col("n_eval").cast("double")
-                ),
-                6,
-            ).alias("coverage"),
-            F.lit(target_coverage_pct / 100.0).alias("target"),
-        )
-    )
-
-
-def ccf_daily(
-    df: DataFrame,
-    ts: Column,
-    is_a: Column,
-    is_b: Column,
-    max_lag: int = 7,
-) -> DataFrame:
-    """Cross-correlation between two event streams' DAILY counts at
-    lags −max_lag..+max_lag — the lead/lag detector (does marketing
-    activity LEAD purchases by 3 days?) that autocorrelation
-    (:func:`acf_daily`) can't see because it compares a series only
-    with itself. Positive lag k means "a leads b by k days"
-    (r_k = corr(a_t, b_{t+k})); negative lags mirror via
-    r_{−k}(a,b) = corr(b_t, a_{t+k}).
-
-    The calendar is the GLOBAL densified day grid (missing days count
-    0 in both series). Exactness: counts are integers, so every lag's
-    sufficient statistics fold in exact DECIMAL — P_k = Σ a_t·b_{t+k},
-    the overlap sums A_k, B_k, plus n, S, SS per series — and
-
-        r_k = (P_k − m_b·A_k − m_a·B_k + (n−k)·m_a·m_b)
-              / sqrt(SS_a − n·m_a²) / sqrt(SS_b − n·m_b²)
-
-    (full-series means/sds, the statsmodels ccf convention) closes in
-    double on identical exact operands; zero-variance series yield
-    NULL via try_divide. A lag whose overlap is EMPTY (|k| >= n) is an
-    empty covariance sum — 0, not NULL (unlike acf_daily, whose
-    test-pinned contract is NULL for short series; each convention is
-    pinned by its own hypothesis model test).
-
-    Scale posture: one groupBy to the daily two-column rollup (shuffle
-    bounded by |days|), ONE ordered window over the calendar-bounded
-    global series computing all 2·max_lag leads in a single pass, one
-    aggregation; output is 2·max_lag+1 rows.
-    """
-    day = F.to_date(ts)
-    c = (
-        df.select(
-            day.alias("_d"),
-            is_a.cast("int").alias("_ia"),
-            is_b.cast("int").alias("_ib"),
-        )
-        .groupBy("_d")
-        .agg(F.sum("_ia").alias("_a"), F.sum("_ib").alias("_b"))
-        .localCheckpoint(eager=False)
-    )
-    bounds = c.agg(F.min("_d").alias("_d0"), F.max("_d").alias("_d1"))
-    grid = bounds.select(
-        F.explode(F.expr("sequence(_d0, _d1, interval 1 day)")).alias("_d")
-    )
-    dense = grid.join(c, ["_d"], "left").select(
-        "_d",
-        F.coalesce(F.col("_a"), F.lit(0)).alias("_a"),
-        F.coalesce(F.col("_b"), F.lit(0)).alias("_b"),
-    )
-    w = Window.orderBy("_d")
-    leads = dense.select(
-        "_a",
-        "_b",
-        *[F.lead("_b", k).over(w).alias(f"_bl{k}") for k in range(1, max_lag + 1)],
-        *[F.lead("_a", k).over(w).alias(f"_al{k}") for k in range(1, max_lag + 1)],
-    )
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
-    aggs = [
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(dec(F.col("_a"))).alias("_sa"),
-        F.sum(dec(F.col("_b"))).alias("_sb"),
-        F.sum(dec(F.col("_a")) * F.col("_a")).alias("_ssa"),
-        F.sum(dec(F.col("_b")) * F.col("_b")).alias("_ssb"),
-        F.sum(dec(F.col("_a")) * F.col("_b")).alias("_p0"),
-    ]
-    # Each overlap sum coalesces to 0: for k >= n_days the lead window
-    # is empty and SUM over nothing is NULL, but the textbook CCF of an
-    # empty overlap is an empty covariance sum, i.e. 0 (caught by the
-    # hypothesis model test on a 2-day series at max_lag=2).
-    zero = F.lit(0).cast("decimal(38,0)")
-    for k in range(1, max_lag + 1):
-        bl, al = F.col(f"_bl{k}"), F.col(f"_al{k}")
-        aggs += [
-            F.coalesce(
-                F.sum(F.when(bl.isNotNull(), dec(F.col("_a")) * bl)), zero
-            ).alias(f"_pp{k}"),
-            F.coalesce(
-                F.sum(F.when(bl.isNotNull(), dec(F.col("_a")))), zero
-            ).alias(f"_pa{k}"),
-            F.coalesce(F.sum(dec(bl)), zero).alias(f"_pb{k}"),
-            F.coalesce(
-                F.sum(F.when(al.isNotNull(), dec(F.col("_b")) * al)), zero
-            ).alias(f"_np{k}"),
-            F.coalesce(
-                F.sum(F.when(al.isNotNull(), dec(F.col("_b")))), zero
-            ).alias(f"_nb{k}"),
-            F.coalesce(F.sum(dec(al)), zero).alias(f"_na{k}"),
-        ]
-    a = leads.agg(*aggs)
-    n = F.col("n_days").cast("double")
-    ma = F.col("_sa").cast("double") / n
-    mb = F.col("_sb").cast("double") / n
-    sda = F.sqrt(F.col("_ssa").cast("double") - n * ma * ma)
-    sdb = F.sqrt(F.col("_ssb").cast("double") - n * mb * mb)
-    # exact integer zero-variance checks (n·Σv² − (Σv)² in DECIMAL):
-    # a CONSTANT series must yield NULL ccf at every lag — the float
-    # radicands above can land at a tiny nonzero (or negative → NaN)
-    # residual instead of 0 once n·m² passes 2⁵³
-    nd_dec = F.col("n_days").cast("decimal(38,0)")
-    va_exact = nd_dec * F.col("_ssa") - F.col("_sa") * F.col("_sa")
-    vb_exact = nd_dec * F.col("_ssb") - F.col("_sb") * F.col("_sb")
-    nondegenerate = (va_exact != 0) & (vb_exact != 0)
-    rows = []
-    for k in range(-max_lag, max_lag + 1):
-        if k == 0:
-            num = (
-                F.col("_p0").cast("double")
-                - mb * F.col("_sa").cast("double")
-                - ma * F.col("_sb").cast("double")
-                + n * ma * mb
-            )
-        elif k > 0:
-            # the constant term multiplies the OVERLAP PAIR COUNT,
-            # which is max(n - k, 0) — n - k alone goes negative once
-            # the lag exceeds the series length
-            num = (
-                F.col(f"_pp{k}").cast("double")
-                - mb * F.col(f"_pa{k}").cast("double")
-                - ma * F.col(f"_pb{k}").cast("double")
-                + F.greatest(F.col("n_days") - k, F.lit(0)).cast("double")
-                * ma
-                * mb
-            )
-        else:
-            j = -k
-            num = (
-                F.col(f"_np{j}").cast("double")
-                - ma * F.col(f"_nb{j}").cast("double")
-                - mb * F.col(f"_na{j}").cast("double")
-                + F.greatest(F.col("n_days") - j, F.lit(0)).cast("double")
-                * ma
-                * mb
-            )
-        rows.append(
-            F.struct(
-                F.lit(k).alias("lag"),
-                F.round(
-                    F.when(
-                        nondegenerate,
-                        F.try_divide(F.try_divide(num, sda), sdb),
-                    ),
-                    6,
-                ).alias("ccf"),
-            )
-        )
-    return a.select(
-        "n_days", F.explode(F.array(*rows)).alias("_r")
-    ).select("n_days", "_r.lag", "_r.ccf")
-
-
 def shannon_diversity(
     df: DataFrame,
     group: Column,
@@ -2785,420 +1747,6 @@ def shannon_diversity(
             ),
             6,
         ).alias("evenness"),
-    )
-
-
-def diff_in_diff(
-    df: DataFrame,
-    is_treated: Column,
-    is_post: Column,
-    value: Column,
-    cents: int = 100,
-) -> DataFrame:
-    """Difference-in-differences estimator — the causal-inference
-    workhorse for "did the rollout change the metric?": the treated
-    group's pre→post change minus the control group's pre→post change
-    cancels both the group baseline and the secular time trend
-    (welch_t_test compares two groups at one time; DiD compares two
-    CHANGES). SE is the four-cell independent-samples combination
-    (Welch posture), t = DiD / SE.
-
-    Determinism: the welch_t_test contract — values quantize once to
-    exact integer raw units (⌊value·cents⌋, floor OF the IEEE
-    product), per-cell n / Σ / Σ² fold in exact DECIMAL, and every
-    mean/variance closes in double on identical exact operands; cells
-    with n ≤ 1 yield NULL variance → NULL se/t via try_divide.
-
-    Scale posture: ONE conditional aggregation pass over the input
-    (map-side combinable, 12 sufficient statistics out), a 1-row
-    finish. Returns one row: per-cell n, the four means, did, se,
-    t_stat.
-    """
-    q = F.floor(value * F.lit(cents)).cast("decimal(38,0)")
-    cells = {
-        "t1": is_treated & is_post,
-        "t0": is_treated & ~is_post,
-        "c1": ~is_treated & is_post,
-        "c0": ~is_treated & ~is_post,
-    }
-    aggs = []
-    for k, cond in cells.items():
-        aggs += [
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{k}"),
-            F.sum(F.when(cond, q)).alias(f"_s{k}"),
-            F.sum(F.when(cond, q * q)).alias(f"_ss{k}"),
-        ]
-    a = df.where(value.isNotNull()).agg(*aggs)
-    cf = float(cents)
-
-    def mean(k):
-        return (
-            F.col(f"_s{k}").cast("double")
-            / F.col(f"n_{k}").cast("double")
-            / F.lit(cf)
-        )
-
-    def var(k):
-        # exact n-scaled numerator n·Σv² − (Σv)² in DECIMAL (the
-        # ols2_by_group discipline): a zero-variance cell is exactly
-        # 0.0, never a float residual that would leak a garbage t
-        n = F.col(f"n_{k}").cast("double")
-        nd = F.col(f"n_{k}").cast("decimal(38,0)")
-        vnum = nd * F.col(f"_ss{k}") - F.col(f"_s{k}") * F.col(f"_s{k}")
-        return F.try_divide(
-            vnum.cast("double"), n * (n - F.lit(1.0))
-        ) / F.lit(cf * cf)
-
-    did = (mean("t1") - mean("t0")) - (mean("c1") - mean("c0"))
-    se = F.sqrt(
-        var("t1") / F.col("n_t1").cast("double")
-        + var("t0") / F.col("n_t0").cast("double")
-        + var("c1") / F.col("n_c1").cast("double")
-        + var("c0") / F.col("n_c0").cast("double")
-    )
-    return a.select(
-        "n_t1",
-        "n_t0",
-        "n_c1",
-        "n_c0",
-        F.round(mean("t1"), 6).alias("mean_t_post"),
-        F.round(mean("t0"), 6).alias("mean_t_pre"),
-        F.round(mean("c1"), 6).alias("mean_c_post"),
-        F.round(mean("c0"), 6).alias("mean_c_pre"),
-        F.round(did, 6).alias("did"),
-        F.round(se, 6).alias("se"),
-        F.round(F.try_divide(did, se), 4).alias("t_stat"),
-    )
-
-
-def portable_big_double(col: Column) -> Column:
-    """Engine-portable nonnegative big-integer -> double conversion.
-
-    ``CAST(huge AS DOUBLE)`` is engine-specific above 2^53: DuckDB's
-    HUGEINT cast double-rounds through its 2^64 limb representation
-    (measured: 52212025701372833284 -> 5.221202570137284e19, one ulp
-    above the correctly-rounded 5.221202570137283e19 that Spark's
-    decimal cast produces). Splitting at 2^32 makes both halves
-    exactly castable (hi < 2^53 while the input < 2^85) and the
-    recombination ``hi * 2^32 + lo`` is a fixed IEEE double sequence
-    every engine computes identically. Oracle-side twin:
-    ``CAST(x // 4294967296 AS DOUBLE) * 4294967296.0 +
-    CAST(x % 4294967296 AS DOUBLE)``.
-    """
-    two32 = F.lit(4294967296).cast("decimal(38,0)")
-    lo = F.pmod(col, two32)  # exact: modulo of decimals is exact
-    # (col - lo) is an exact multiple of 2^32, so the decimal division
-    # yields the exact integer quotient (scale rounding of an integer
-    # is the identity); both halves then cast to double exactly
-    hi = (col - lo) / two32
-    return hi.cast("double") * F.lit(4294967296.0) + lo.cast("double")
-
-
-def rolling_bands(
-    df: DataFrame,
-    ts: Column,
-    value: Column,
-    window_days: int = 20,
-    n_sigma: float = 2.0,
-    min_obs: int = 5,
-    cents: int = 100,
-) -> DataFrame:
-    """Bollinger-style rolling volatility bands over a GLOBAL daily
-    series: trailing mean ± n_sigma·std of the last ``window_days``
-    daily totals, plus an outside-band flag — the adaptive-threshold
-    anomaly detector (a fixed z-score baseline goes stale when the
-    series level drifts; the rolling band follows it). Band is NULL
-    until ``min_obs`` days of history exist.
-
-    Determinism: daily totals quantize once to exact integer raw
-    units; the trailing Σ and Σ² are exact integer window sums (frame
-    summation order can't drift — the moving_avg contract), and mean /
-    population-variance / band edges close in fixed-shape double
-    arithmetic on identical exact operands. The Σ² exceeds 2^53, and
-    engines' big-integer→double CASTs disagree by an ulp there
-    (measured at sf0.1: DuckDB's HUGEINT cast double-rounds through
-    its 2^64 limbs while Spark's decimal cast rounds correctly), so
-    the conversion goes through :func:`portable_big_double` — exact
-    2^32-limb split + IEEE recombination, identical in any engine.
-
-    Scale posture: one day-keyed rollup (shuffle bounded by |days|),
-    one ordered window over the calendar-bounded global series.
-    """
-    day = F.to_date(ts)
-    q = F.floor(value * F.lit(cents)).cast("decimal(38,0)")
-    daily = (
-        df.where(value.isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(F.sum(q).alias("_s"))
-    )
-    w = Window.orderBy("day").rowsBetween(-(window_days - 1), 0)
-    cf = float(cents)
-    cnt = F.count(F.lit(1)).over(w)
-    rs = F.sum("_s").over(w)
-    rss = F.sum((F.col("_s") * F.col("_s")).cast("decimal(38,0)")).over(w)
-    n = cnt.cast("double")
-    # rs stays under 2^53 at any plausible scale (cents of a global
-    # daily total); rss does NOT — portable conversion required
-    rss_d = portable_big_double(rss)
-    m = rs.cast("double") / n / F.lit(cf)
-    var = (
-        (rss_d - rs.cast("double") * rs.cast("double") / n)
-        / n
-        / F.lit(cf * cf)
-    )
-    band = F.when(cnt >= min_obs, F.sqrt(var) * F.lit(n_sigma))
-    v = F.col("_s").cast("double") / F.lit(cf)
-    # scale-robust closes: engine ROUND tie conventions diverge on
-    # knife-edge doubles (sf0.1 finding) — the floor device is
-    # engine-identical (functions/rounding.py)
-    from ..functions.rounding import round_ties_up_col
-
-    out = daily.select(
-        "day",
-        round_ties_up_col(v, 6).alias("day_value"),
-        round_ties_up_col(m, 6).alias("rolling_mean"),
-        round_ties_up_col(m + band, 6).alias("upper_band"),
-        round_ties_up_col(m - band, 6).alias("lower_band"),
-        F.when(
-            band.isNotNull(), (v > m + band) | (v < m - band)
-        ).alias("outside_band"),
-    )
-    return out.orderBy("day")
-
-
-def cuped_adjustment(
-    df: DataFrame,
-    entity: Column,
-    is_pre: Column,
-    value: Column,
-    cents: int = 100,
-) -> DataFrame:
-    """CUPED variance-reduction audit (Deng et al., WSDM'13) — the
-    standard trick for making A/B tests converge faster: per entity,
-    the PRE-period metric X predicts the post-period metric Y, and the
-    adjusted metric Y − θ·(X − X̄) with θ = cov(X,Y)/var(X) keeps the
-    same mean but sheds the predictable variance. This computes θ and
-    the achieved reduction (var_cuped = var(Y)·(1 − ρ²)) so an
-    experimenter knows how much smaller their test can be.
-
-    Determinism: per-entity X/Y are EXACT integer raw-unit sums
-    (⌊value·cents⌋); the second pass folds n, ΣX, ΣY, ΣX², ΣY², ΣXY in
-    exact DECIMAL(38,0); every moment closes in fixed-shape double
-    arithmetic on identical operands (degenerate var(X)=0 → NULL θ via
-    try_divide).
-
-    Scale posture: one entity-keyed conditional aggregation (map-side
-    combinable), one 12-statistic global fold, a 1-row finish.
-    """
-    q = F.floor(value * F.lit(cents)).cast("long")
-    per_e = (
-        df.where(value.isNotNull())
-        .groupBy(entity.alias("_e"))
-        .agg(
-            F.sum(F.when(is_pre, q).otherwise(0)).alias("_x"),
-            F.sum(F.when(~is_pre, q).otherwise(0)).alias("_y"),
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    a = per_e.agg(
-        F.count(F.lit(1)).alias("n_entities"),
-        F.sum(dec(F.col("_x"))).alias("_sx"),
-        F.sum(dec(F.col("_y"))).alias("_sy"),
-        F.sum(dec(F.col("_x")) * F.col("_x")).alias("_sxx"),
-        F.sum(dec(F.col("_y")) * F.col("_y")).alias("_syy"),
-        F.sum(dec(F.col("_x")) * F.col("_y")).alias("_sxy"),
-    )
-    cf = float(cents)
-    n = F.col("n_entities").cast("double")
-    sx = F.col("_sx").cast("double")
-    sy = F.col("_sy").cast("double")
-    # exact n-scaled moment numerators in DECIMAL (the ols2_by_group
-    # discipline): var(X) = 0 (constant pre-metric) is exactly 0.0,
-    # so θ = cov/vx is NULL by contract, never a garbage ratio of
-    # float residuals
-    nd = F.col("n_entities").cast("decimal(38,0)")
-    sxd, syd = F.col("_sx"), F.col("_sy")
-    cov = (nd * F.col("_sxy") - sxd * syd).cast("double") / (n * (n - F.lit(1.0)))
-    vx = (nd * F.col("_sxx") - sxd * sxd).cast("double") / (n * (n - F.lit(1.0)))
-    vy = (nd * F.col("_syy") - syd * syd).cast("double") / (n * (n - F.lit(1.0)))
-    theta = F.try_divide(cov, vx)
-    vc = vy - F.try_divide(cov * cov, vx)
-    return a.select(
-        "n_entities",
-        F.round(sx / n / F.lit(cf), 6).alias("mean_pre"),
-        F.round(sy / n / F.lit(cf), 6).alias("mean_post"),
-        F.round(theta, 6).alias("theta"),
-        F.round(vy / F.lit(cf * cf), 6).alias("var_post"),
-        F.round(vc / F.lit(cf * cf), 6).alias("var_cuped"),
-        F.round(
-            F.lit(100.0) * F.try_divide(cov * cov, vx * vy), 4
-        ).alias("var_reduction_pct"),
-    )
-
-
-def rate_ratio_test(
-    df: DataFrame,
-    in_a: Column,
-    in_b: Column,
-    exposure_a: float,
-    exposure_b: float,
-) -> DataFrame:
-    """Poisson rate-ratio test between two observation windows — the
-    incident/error-budget comparison ("did the purchase rate per day
-    actually change?") that a raw count diff gets wrong when the
-    windows have different lengths: rates λ = c/exposure, and under
-    H₀ the log rate ratio is ~N(0, 1/c₁ + 1/c₂), so
-
-        z = ln(λ₁/λ₂) / sqrt(1/c₁ + 1/c₂).
-
-    Exposures are caller-supplied constants (days, host-hours — the
-    denominators an experimenter controls). Determinism: counts are
-    exact integers; the single ln of the exact rational
-    ``(c₁·e₂)/(c₂·e₁)`` is quantized once to micro-units (the
-    kl_domain_drift scheme), and 1/c₁ + 1/c₂ is one two-term sum of
-    exact-integer reciprocals — every engine computes the identical
-    doubles. Zero counts yield NULL z via try_divide/NULL ln input
-    guards.
-
-    Scale posture: ONE conditional count aggregation, a 1-row finish.
-    """
-    a = df.agg(
-        F.sum(F.when(in_a, 1).otherwise(0)).alias("c_a"),
-        F.sum(F.when(in_b, 1).otherwise(0)).alias("c_b"),
-    )
-    ca, cb = F.col("c_a"), F.col("c_b")
-    ra = ca.cast("double") / F.lit(float(exposure_a))
-    rb = cb.cast("double") / F.lit(float(exposure_b))
-    lq = F.when(
-        (ca > 0) & (cb > 0),
-        F.floor(
-            F.log(
-                (ca * F.lit(float(exposure_b))).cast("double")
-                / (cb * F.lit(float(exposure_a))).cast("double")
-            )
-            * F.lit(1000000)
-        ).cast("long"),
-    )
-    se = F.sqrt(
-        F.try_divide(F.lit(1.0), ca.cast("double"))
-        + F.try_divide(F.lit(1.0), cb.cast("double"))
-    )
-    return a.select(
-        "c_a",
-        "c_b",
-        F.round(ra, 6).alias("rate_a"),
-        F.round(rb, 6).alias("rate_b"),
-        F.round(F.try_divide(ra, rb), 6).alias("rate_ratio"),
-        F.round(
-            F.try_divide(lq.cast("double") / F.lit(1000000.0), se), 4
-        ).alias("z"),
-    )
-
-
-def mad_scale(
-    df: DataFrame,
-    group_cols: list[str],
-    value: Column,
-) -> DataFrame:
-    """Per-group Median Absolute Deviation — the robust scale estimate
-    (breakdown point 50%) that pairs with robust_location's medians
-    the way stddev pairs with the mean: one wild row moves a stddev
-    arbitrarily far, while MAD ignores it. The 1.4826 consistency
-    factor (Normal-consistent sigma estimate) ships as a second
-    column; a robust z-score is then ``|x − median| / mad_sigma``.
-
-    Determinism: both quantiles are exact ``percentile_disc`` data
-    points (the exact_percentiles_disc cross-engine contract); the
-    residual is one IEEE subtraction of identical doubles, so the
-    second median selects the same element in any engine; the only
-    arithmetic is the final literal multiply.
-
-    Scale posture: two per-group aggregations (median, then median of
-    absolute residuals) with a broadcast-back join between them —
-    the conformal_intervals shape.
-    """
-    base = df.select(
-        *[F.col(c) for c in group_cols], value.alias("_v")
-    ).where(F.col("_v").isNotNull())
-    med = base.groupBy(*group_cols).agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY _v)").alias(
-            "_med"
-        ),
-        F.count(F.lit(1)).alias("n_points"),
-    )
-    resid = base.join(F.broadcast(med), group_cols).select(
-        *group_cols,
-        "n_points",
-        "_med",
-        F.abs(F.col("_v") - F.col("_med")).alias("_r"),
-    )
-    return (
-        resid.groupBy(*group_cols)
-        .agg(
-            F.max("n_points").alias("n_points"),
-            F.max("_med").alias("_med"),
-            F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY _r)").alias(
-                "_mad"
-            ),
-        )
-        .select(
-            *group_cols,
-            "n_points",
-            F.round(F.col("_med"), 6).alias("median"),
-            F.round(F.col("_mad"), 6).alias("mad"),
-            F.round(F.col("_mad") * F.lit(1.4826), 6).alias("mad_sigma"),
-        )
-        .orderBy(*group_cols)
-    )
-
-
-def hill_tail_index(
-    df: DataFrame,
-    value: Column,
-    tiebreak: Column,
-    k: int = 200,
-) -> DataFrame:
-    """Hill estimator of the power-law tail index over the top-k order
-    statistics — the heavy-tail detector (α ≤ 2 means infinite
-    variance: means and stddevs stop being meaningful, bootstrap CIs
-    stop converging) that tells a pipeline WHICH of its metrics can be
-    trusted to aggregate:
-
-        Hill = (1/k)·Σ_{i≤k} ln(x_i / x_(k+1)),   α = 1/Hill.
-
-    Determinism: the tail set is a TakeOrdered top-(k+1) with a total
-    order (value DESC, tiebreak ASC); each log-ratio is quantized once
-    to micro-units and summed over ALL k+1 rows — the threshold row
-    contributes ln(1) = 0 exactly, so no rank column is ever needed;
-    α closes as one double expression. Non-positive values are
-    excluded (the estimator is for right tails).
-
-    Scale posture: one distributed TakeOrdered (k+1 rows survive), a
-    broadcast 1-row threshold, one bounded fold.
-    """
-    top = (
-        df.where(value > 0)
-        .select(value.alias("_v"), tiebreak.alias("_tb"))
-        .orderBy(F.desc("_v"), F.asc("_tb"))
-        .limit(k + 1)
-    )
-    th = F.broadcast(top.agg(F.min("_v").alias("_t")))
-    s = top.crossJoin(th).agg(
-        F.sum(
-            F.floor(
-                F.log(F.col("_v").cast("double") / F.col("_t").cast("double"))
-                * F.lit(1000000)
-            ).cast("long")
-        ).alias("_su"),
-        F.count(F.lit(1)).alias("_n"),
-        F.max("_t").alias("_th"),
-    )
-    hill = F.col("_su").cast("double") / F.lit(float(k)) / F.lit(1000000.0)
-    return s.select(
-        (F.col("_n") - 1).alias("k_tail"),
-        F.round(F.col("_th").cast("double"), 6).alias("threshold"),
-        F.round(hill, 6).alias("hill"),
-        F.round(F.try_divide(F.lit(1.0), hill), 6).alias("alpha"),
     )
 
 
@@ -3258,1282 +1806,6 @@ def weighted_percentiles(
             ).alias(f"wp{int(p * 100)}")
         )
     return cum.groupBy(*group_cols).agg(*aggs).orderBy(*group_cols)
-
-
-def woe_iv(
-    df: DataFrame,
-    is_positive: Column,
-    value: Column,
-    n_buckets: int = 10,
-) -> DataFrame:
-    """Weight-of-Evidence / Information Value — the supervised
-    feature-screening diagnostic (credit-scoring's standard "does this
-    feature separate the classes, and monotonically?"): bucket the
-    feature by its OVERALL percentile_disc deciles, then per bucket
-
-        WOE_b = ln( (pos_b/P) / (neg_b/N) ),
-        IV    = Σ_b (pos_b/P − neg_b/N) · WOE_b
-
-    (IV < 0.02 useless, 0.1–0.3 medium, > 0.5 suspicious). Add-half
-    smoothing keeps empty buckets finite; the :func:`psi_drift`
-    determinism scheme applies verbatim — each bucket's ln is
-    quantized once to micro-units and multiplied by the EXACT integer
-    share difference in DECIMAL(38,0), so per-bucket terms and the IV
-    total fold order-free.
-
-    Scale posture: one decile aggregation, one bucket-keyed
-    conditional count aggregation (≤ n_buckets rows out), a literal
-    smoothing grid — the psi_drift shape exactly.
-    """
-    base = df.select(
-        is_positive.cast("boolean").alias("_pos"), value.alias("_v")
-    ).where(F.col("_v").isNotNull() & F.col("_pos").isNotNull())
-    edge_aggs = [
-        F.expr(
-            f"percentile_disc({k}/{n_buckets}D) WITHIN GROUP (ORDER BY _v)"
-        ).alias(f"_e{k}")
-        for k in range(1, n_buckets)
-    ]
-    edges = base.agg(*edge_aggs)
-    bucket = F.lit(1)
-    for k in range(1, n_buckets):
-        bucket = bucket + F.when(F.col("_v") > F.col(f"_e{k}"), 1).otherwise(0)
-    counted = (
-        base.crossJoin(F.broadcast(edges))
-        .select(bucket.alias("bucket"), "_pos")
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("_pn"),
-            F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("_nn"),
-        )
-    )
-    grid = F.broadcast(
-        counted.sparkSession.range(1, n_buckets + 1).select(
-            F.col("id").cast("int").alias("bucket")
-        )
-    )
-    dense = grid.join(counted, "bucket", "left").select(
-        "bucket",
-        F.coalesce(F.col("_pn"), F.lit(0)).alias("_pn"),
-        F.coalesce(F.col("_nn"), F.lit(0)).alias("_nn"),
-    )
-    tot = dense.agg(F.sum("_pn").alias("_P"), F.sum("_nn").alias("_N"))
-    b = F.lit(n_buckets)
-    g = dense.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "_pn",
-        "_nn",
-        (F.lit(2) * F.col("_pn") + 1).alias("_sp"),
-        (F.lit(2) * F.col("_nn") + 1).alias("_sn"),
-        (F.lit(2) * F.col("_P") + b).alias("_dp"),
-        (F.lit(2) * F.col("_N") + b).alias("_dn"),
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    lq = F.floor(
-        F.log(
-            F.col("_sp").cast("double")
-            * F.col("_dn").cast("double")
-            / (F.col("_sn").cast("double") * F.col("_dp").cast("double"))
-        )
-        * F.lit(1000000)
-    ).cast("long")
-    num = dec(F.col("_sp")) * F.col("_dn") - dec(F.col("_sn")) * F.col("_dp")
-    den = (dec(F.col("_dp")) * F.col("_dn")).cast("double") * 1000000.0
-    terms = g.select(
-        "bucket",
-        F.col("_pn").alias("n_pos"),
-        F.col("_nn").alias("n_neg"),
-        F.round(lq.cast("double") / 1000000.0, 6).alias("woe"),
-        (num * lq).alias("_ts"),
-        den.alias("_den"),
-    )
-    total = terms.agg(F.sum("_ts").alias("_tot"))
-    return (
-        terms.crossJoin(F.broadcast(total))
-        .select(
-            "bucket",
-            "n_pos",
-            "n_neg",
-            "woe",
-            F.round(F.col("_ts").cast("double") / F.col("_den"), 6).alias(
-                "iv_term"
-            ),
-            F.round(F.col("_tot").cast("double") / F.col("_den"), 6).alias(
-                "iv_total"
-            ),
-        )
-        .orderBy("bucket")
-    )
-
-
-def best_split_stump(
-    df: DataFrame,
-    is_positive: Column,
-    value: Column,
-    max_bins: int = 32,
-) -> DataFrame:
-    """Best single-threshold split of a numeric feature against a
-    boolean label by information gain — the decision STUMP, i.e. the
-    unit of every tree ensemble and the sharpest one-number answer to
-    "is this feature predictive, and where does it cut?" (WOE/IV says
-    how much signal the bins carry; this says where the tree would
-    split).
-
-    Candidate thresholds are a ``max_bins`` percentile_disc grid
-    (exact data points). For a split, gain·t in micro-nat·count units
-    is the EXACT integer
-
-        G(split) = [t·lq(t) − P·lq(P) − N·lq(N)]
-                 − [t_l·lq(t_l) − p_l·lq(p_l) − n_l·lq(n_l)]
-                 − [t_r·lq(t_r) − p_r·lq(p_r) − n_r·lq(n_r)],
-
-    with lq(x) = ⌊ln(x)·10⁶⌋ and 0-count terms dropped (0·ln 0 = 0) —
-    the Shannon identity makes every log an INTEGER log, so the
-    argmax over candidates compares exact integers (ties break on the
-    lower threshold). Output gain is G/t/10⁶ nats.
-
-    Scale posture: one percentile aggregation, one bucket-keyed count
-    aggregation (≤ max_bins rows), a bounded cumulative window over
-    the bin grid (metadata-sized, allowlisted), a 1-row argmax.
-    """
-    base = df.select(
-        is_positive.cast("boolean").alias("_pos"), value.alias("_v")
-    ).where(F.col("_v").isNotNull() & F.col("_pos").isNotNull())
-    edge_aggs = [
-        F.expr(
-            f"percentile_disc({k}/{max_bins}D) WITHIN GROUP (ORDER BY _v)"
-        ).alias(f"_e{k}")
-        for k in range(1, max_bins)
-    ]
-    edges = base.agg(*edge_aggs)
-    bucket = F.lit(1)
-    for k in range(1, max_bins):
-        bucket = bucket + F.when(F.col("_v") > F.col(f"_e{k}"), 1).otherwise(0)
-    counted = (
-        base.crossJoin(F.broadcast(edges))
-        .select(bucket.alias("_b"), "_pos", "_v")
-        .groupBy("_b")
-        .agg(
-            F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("_p"),
-            F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("_n"),
-            # the threshold this bucket ends at (max value is exact;
-            # for the last bucket there is no split -> filtered below)
-            F.max(F.col("_v")).alias("_vmax"),
-        )
-    )
-    w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy()
-    cum = counted.select(
-        "_b",
-        F.max("_b").over(wt).alias("_bmax"),
-        F.sum("_p").over(w).alias("_pl"),
-        F.sum("_n").over(w).alias("_nl"),
-        F.sum("_p").over(wt).alias("_P"),
-        F.sum("_n").over(wt).alias("_N"),
-        F.max(F.col("_vmax")).over(w).alias("threshold"),
-    ).where(F.col("_b") < F.col("_bmax"))
-
-    def xlq(c):
-        # x * floor(ln(x) * 1e6) as an exact long; 0 for x = 0
-        return F.when(
-            c > 0,
-            c * F.floor(F.log(c.cast("double")) * F.lit(1000000)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
-    pl, nl = F.col("_pl"), F.col("_nl")
-    pr, nr = F.col("_P") - pl, F.col("_N") - nl
-    tl, tr = pl + nl, pr + nr
-    tt = F.col("_P") + F.col("_N")
-    gain_u = (
-        (xlq(tt) - xlq(F.col("_P")) - xlq(F.col("_N")))
-        - (xlq(tl) - xlq(pl) - xlq(nl))
-        - (xlq(tr) - xlq(pr) - xlq(nr))
-    )
-    scored = cum.select(
-        "threshold",
-        pl.alias("pos_left"),
-        nl.alias("neg_left"),
-        pr.alias("pos_right"),
-        nr.alias("neg_right"),
-        gain_u.alias("_gu"),
-        tt.alias("_t"),
-    )
-    best = scored.orderBy(
-        F.desc("_gu"), F.asc("threshold")
-    ).limit(1)
-    return best.select(
-        "threshold",
-        "pos_left",
-        "neg_left",
-        "pos_right",
-        "neg_right",
-        F.round(
-            F.col("_gu").cast("double")
-            / F.col("_t").cast("double")
-            / F.lit(1000000.0),
-            6,
-        ).alias("gain_nats"),
-    )
-
-
-def croston_forecast(
-    df: DataFrame,
-    group_cols: list[str],
-    ts_col: str,
-    qty: Column,
-    alpha: float = 0.25,
-    period: str = "day",
-) -> DataFrame:
-    """Croston's method (1972) — the forecaster for INTERMITTENT
-    demand, where Holt/EWMA systematically lag toward zero because
-    most periods are empty: maintain two EWMAs, demand SIZE z and
-    inter-demand INTERVAL x, updated only when demand occurs; the
-    demand-rate forecast is z/x per period.
-
-    Recurrence over the DENSIFIED per-group daily grid (zero days ARE
-    the signal here), starting at the first demand (z=d, x=1):
-
-        d_t > 0:  z ← α·d_t + (1−α)·z ;  x ← α·q + (1−α)·x ;  q ← 1
-        d_t = 0:  q ← q + 1
-
-    Determinism: the holt_linear contract — one sequential JVM-side
-    ``F.aggregate`` fold per group over the (date-sorted) dense
-    series, identical IEEE ops in identical order, so the recurrence
-    carries a hard DuckDB RECURSIVE-CTE oracle; keep ``alpha`` dyadic.
-    Demands are exact integers.
-
-    Scale posture: one daily rollup, a per-group calendar explode
-    (the acf_daily posture), one group-keyed collect+fold; series
-    bounded per entity by the observation span.
-    """
-    step = {"day": "interval 1 day", "week": "interval 7 day"}[period]
-    day = F.to_date(F.date_trunc(period, F.col(ts_col)))
-    c = (
-        df.select(*group_cols, day.alias("_d"), qty.cast("long").alias("_q"))
-        .where(F.col("_q").isNotNull())
-        .groupBy(*group_cols, "_d")
-        .agg(F.sum("_q").alias("_dq"))
-        .localCheckpoint(eager=False)
-    )
-    bounds = c.groupBy(*group_cols).agg(
-        F.min("_d").alias("_d0"), F.max("_d").alias("_d1")
-    )
-    grid = bounds.select(
-        *group_cols,
-        F.explode(F.expr(f"sequence(_d0, _d1, {step})")).alias("_d"),
-    )
-    dense = grid.join(c, [*group_cols, "_d"], "left").select(
-        *group_cols,
-        "_d",
-        F.coalesce(F.col("_dq"), F.lit(0)).alias("_dq"),
-    )
-    ser = dense.groupBy(*group_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_d", "_dq"))),
-            lambda s: s["_dq"],
-        ).alias("_ser"),
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(F.when(F.col("_dq") > 0, 1).otherwise(0)).alias(
-            "n_demand_days"
-        ),
-    )
-    a = F.lit(alpha)
-    one_a = F.lit(1.0 - alpha)
-    init = F.named_struct(
-        F.lit("z"), F.lit(0.0),
-        F.lit("x"), F.lit(0.0),
-        F.lit("q"), F.lit(1).cast("long"),
-        F.lit("started"), F.lit(False),
-    )
-
-    def step(acc, d):
-        started_now = acc["started"] | (d > 0)
-        z = (
-            F.when(~acc["started"] & (d > 0), d.cast("double"))
-            .when(
-                acc["started"] & (d > 0),
-                a * d.cast("double") + one_a * acc["z"],
-            )
-            .otherwise(acc["z"])
-        )
-        x = (
-            F.when(~acc["started"] & (d > 0), F.lit(1.0))
-            .when(
-                acc["started"] & (d > 0),
-                a * acc["q"].cast("double") + one_a * acc["x"],
-            )
-            .otherwise(acc["x"])
-        )
-        q = (
-            F.when(d > 0, F.lit(1).cast("long"))
-            .otherwise(acc["q"] + F.lit(1).cast("long"))
-        )
-        return F.named_struct(
-            F.lit("z"), z,
-            F.lit("x"), x,
-            F.lit("q"), q,
-            F.lit("started"), started_now,
-        )
-
-    folded = ser.select(
-        *group_cols,
-        "n_days",
-        "n_demand_days",
-        F.aggregate(F.col("_ser"), init, step).alias("_st"),
-    )
-    return folded.where(F.col("_st.started")).select(
-        *group_cols,
-        "n_days",
-        "n_demand_days",
-        F.round(F.col("_st.z"), 6).alias("size_ewma"),
-        F.round(F.col("_st.x"), 6).alias("interval_ewma"),
-        F.round(F.col("_st.z") / F.col("_st.x"), 6).alias("demand_rate"),
-    )
-
-
-def normal_sf2_micro(z_micro: Column) -> Column:
-    """Two-sided normal p-value of a MICRO-QUANTIZED z, itself
-    micro-quantized: ``p = erfc(|z|/sqrt(2))`` via the Abramowitz &
-    Stegun 7.1.26 polynomial (|err| < 1.5e-7, well under the 1e-6
-    quantum). Taking the exactly-quantized ``z_micro`` (a long) as
-    input means both engines evaluate the IDENTICAL double expression;
-    every op is correctly rounded except one ``exp`` call, floored at
-    the 1e-6 quantum (the ln-quantization precedent — SNIPPETS'
-    quantized-libm rule). Association order is frozen and mirrored
-    verbatim in SQL oracles:
-
-        x = abs(z_micro / 1e6) / sqrt(2)
-        t = 1 / (1 + 0.3275911·x)
-        poly = t·(a1 + t·(a2 + t·(a3 + t·(a4 + t·a5))))
-        p = poly · exp(-(x·x)) ;  return floor(p·1e6)
-    """
-    x = F.abs(z_micro.cast("double") / F.lit(1000000.0)) / F.sqrt(F.lit(2.0))
-    t = F.lit(1.0) / (F.lit(1.0) + F.lit(0.3275911) * x)
-    poly = t * (
-        F.lit(0.254829592)
-        + t
-        * (
-            F.lit(-0.284496736)
-            + t
-            * (
-                F.lit(1.421413741)
-                + t * (F.lit(-1.453152027) + t * F.lit(1.061405429))
-            )
-        )
-    )
-    p = poly * F.exp(-(x * x))
-    return F.floor(p * F.lit(1000000.0)).cast("long")
-
-
-NORMAL_SF2_MICRO_SQL = """
-CAST(FLOOR((
-  (1.0 / (1.0 + 0.3275911 * ({x})))
-  * (0.254829592 + (1.0 / (1.0 + 0.3275911 * ({x})))
-    * (-0.284496736 + (1.0 / (1.0 + 0.3275911 * ({x})))
-      * (1.421413741 + (1.0 / (1.0 + 0.3275911 * ({x})))
-        * (-1.453152027 + (1.0 / (1.0 + 0.3275911 * ({x}))) * 1.061405429))))
-  * EXP(-(({x}) * ({x})))
-) * 1000000.0) AS BIGINT)
-"""
-
-
-def bh_fdr(
-    tests: DataFrame,
-    key_cols: list[str],
-    p_micro_col: str = "p_micro",
-    q_pct: int = 5,
-) -> DataFrame:
-    """Benjamini–Hochberg step-up FDR control over a table of test
-    p-values — the multiple-comparisons guard every fleet-wide metric
-    sweep needs (test 25 nations at α=.05 and ~1 false positive is
-    EXPECTED; BH caps the false-discovery RATE at q instead). Input is
-    one row per test with a micro-quantized p-value; the procedure
-    closes in exact integer arithmetic:
-
-        reject all tests ranked ≤ k*,  k* = max{k : p_(k) ≤ (k/m)·q}
-        integer form:  p_micro · m · 100  ≤  k · q_pct · 10^6
-
-    Ranking breaks ties deterministically by ``key_cols``. The rank
-    window is partition-less but bounded by the NUMBER OF TESTS (one
-    row per group under test — metadata-sized, the bootstrap-replica
-    precedent); k* folds via one broadcast apex aggregation.
-
-    Adds ``rank``, ``bh_threshold_micro`` (= floor(k·q_pct·10^6 /
-    (m·100)), the per-rank cutoff for display), and ``rejected``.
-    """
-    m_row = F.broadcast(tests.agg(F.count(F.lit(1)).alias("_m")))
-    w = Window.orderBy(F.asc(p_micro_col), *[F.asc(c) for c in key_cols])
-    ranked = (
-        tests.crossJoin(m_row)
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn(
-            "_ok",
-            F.col(p_micro_col) * F.col("_m") * F.lit(100)
-            <= F.col("rank") * F.lit(q_pct) * F.lit(1000000),
-        )
-    )
-    kmax = F.broadcast(
-        ranked.agg(
-            F.coalesce(
-                F.max(F.when(F.col("_ok"), F.col("rank"))), F.lit(0)
-            ).alias("_k")
-        )
-    )
-    return (
-        ranked.crossJoin(kmax)
-        .select(
-            *key_cols,
-            p_micro_col,
-            "rank",
-            F.floor(
-                F.col("rank") * F.lit(q_pct) * F.lit(1000000)
-                / (F.col("_m") * F.lit(100))
-            )
-            .cast("long")
-            .alias("bh_threshold_micro"),
-            (F.col("rank") <= F.col("_k")).alias("rejected"),
-        )
-    )
-
-
-def eb_beta_binomial_shrink(
-    df: DataFrame,
-    key_cols: list[str],
-    k_col: str,
-    n_col: str,
-) -> DataFrame:
-    """Empirical-Bayes rate shrinkage (the baseball-batting-average
-    estimator): fit a Beta(α, β) prior to the per-entity rates by
-    method of moments, then report each entity's posterior mean
-    ``(k + α) / (n + α + β)`` — small-sample rates shrink hard toward
-    the corpus prior, high-n rates barely move. The standard guard
-    against ranking a 1/1 entity above a 980/1000 one in quality
-    scoring, CTR ranking, or source-reliability weighting.
-
-    Exactness contract: per-entity rates quantize to micro-units via
-    ONE integral divide (``k·10^6 DIV n``); the moment sums (U, Σr,
-    Σr²) close in DECIMAL(38,0); m and v derive from those exact
-    integers in frozen-association double math; α, β floor to
-    micro-units so the final posterior mean is one double divide of
-    exact integers. Degenerate contract: zero rate variance or
-    non-positive prior strength (v ≥ m(1−m) — no valid Beta moment
-    fit) → ``shrunk`` NULL, ``alpha_micro``/``beta_micro`` NULL.
-
-    Scale: one map-side-combined aggregation for the moments (3
-    numbers), broadcast back over the entity table — no window, no
-    second shuffle.
-    """
-    base = df.select(
-        *key_cols,
-        F.col(k_col).cast("long").alias("_k"),
-        F.col(n_col).cast("long").alias("_n"),
-    ).where(F.col("_n") > 0)
-    rated = base.withColumn(
-        "_rq", F.expr("CAST(_k AS DECIMAL(38,0)) * 1000000 DIV _n")
-    )
-    mom = F.broadcast(
-        rated.agg(
-            F.count(F.lit(1)).alias("_u"),
-            F.sum(F.col("_rq").cast("decimal(38,0)")).alias("_s1"),
-            F.sum(
-                (F.col("_rq") * F.col("_rq")).cast("decimal(38,0)")
-            ).alias("_s2"),
-        )
-    )
-    j = rated.crossJoin(mom)
-    m = F.col("_s1").cast("double") / (
-        F.col("_u").cast("double") * F.lit(1000000.0)
-    )
-    v = (
-        F.col("_u").cast("decimal(38,0)") * F.col("_s2")
-        - F.col("_s1") * F.col("_s1")
-    ).cast("double") / (
-        (F.col("_u").cast("double") * F.col("_u").cast("double"))
-        * F.lit(1e12)
-    )
-    strength = (m * (F.lit(1.0) - m)) / v - F.lit(1.0)
-    valid = (v > 0) & ((m * (F.lit(1.0) - m)) / v - F.lit(1.0) > 0)
-    alpha_micro = F.when(
-        valid, F.floor(m * strength * F.lit(1000000.0)).cast("long")
-    )
-    beta_micro = F.when(
-        valid,
-        F.floor((F.lit(1.0) - m) * strength * F.lit(1000000.0)).cast(
-            "long"
-        ),
-    )
-    out = j.select(
-        *key_cols,
-        F.col("_k").alias("k"),
-        F.col("_n").alias("n"),
-        F.round(F.col("_rq") / F.lit(1000000.0), 6).alias("raw_rate"),
-        alpha_micro.alias("alpha_micro"),
-        beta_micro.alias("beta_micro"),
-    )
-    shrunk = (
-        (F.col("k") * F.lit(1000000) + F.col("alpha_micro")).cast("double")
-        / (
-            F.col("n") * F.lit(1000000)
-            + F.col("alpha_micro")
-            + F.col("beta_micro")
-        ).cast("double")
-    )
-    return out.withColumn("shrunk", F.round(shrunk, 6))
-
-
-def ipw_ate(
-    df: DataFrame,
-    stratum_cols: list[str],
-    treat: Column,
-    outcome: Column,
-    cents: int = 100,
-) -> DataFrame:
-    """Inverse-propensity-weighted average treatment effect with
-    stratum-estimated propensities — the observational companion to
-    did_purchase_value/cuped: reweight treated and control outcomes by
-    1/p̂(s) and 1/(1−p̂(s)) within each confounder stratum, so strata
-    where treatment is rare count each treated unit more.
-
-    Algebra (exact): with per-stratum counts n_s, treated nt_s and
-    outcome sums Yt_s, Yc_s (outcome quantized to integer ``cents``
-    units), the Horvitz–Thompson terms fold as ONE integral divide per
-    stratum — ``Yt_s·n_s·10^6 DIV nt_s`` — summed in DECIMAL(38,0),
-    with a single double division by N·10^6·cents at the end.
-
-    Positivity contract: a stratum with zero treated or zero control
-    units makes IPW undefined; such strata are COUNTED
-    (``positivity_violations``) and force ``ate`` to NULL rather than
-    silently dropping them.
-    """
-    y = F.floor(outcome * cents).cast("long")
-    tcol = F.when(treat, F.lit(1)).otherwise(F.lit(0))
-    per = (
-        df.select(*stratum_cols, tcol.alias("_t"), y.alias("_y"))
-        .groupBy(*stratum_cols)
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_t").alias("_nt"),
-            F.sum(F.when(F.col("_t") == 1, F.col("_y")).otherwise(0)).alias(
-                "_yt"
-            ),
-            F.sum(F.when(F.col("_t") == 0, F.col("_y")).otherwise(0)).alias(
-                "_yc"
-            ),
-        )
-    )
-    ok = (F.col("_nt") > 0) & (F.col("_nt") < F.col("_n"))
-    term_t = F.expr(
-        "CAST(_yt AS DECIMAL(38,0)) * _n * 1000000 DIV _nt"
-    )
-    term_c = F.expr(
-        "CAST(_yc AS DECIMAL(38,0)) * _n * 1000000 DIV (_n - _nt)"
-    )
-    agg = per.agg(
-        F.sum("_n").alias("n"),
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum(F.when(~ok, 1).otherwise(0)).alias("positivity_violations"),
-        F.sum(F.when(ok, term_t.cast("decimal(38,0)"))).alias("_st"),
-        F.sum(F.when(ok, term_c.cast("decimal(38,0)"))).alias("_sc"),
-    )
-    ate = F.when(
-        F.col("positivity_violations") == 0,
-        F.round(
-            (F.col("_st") - F.col("_sc")).cast("double")
-            / (
-                F.col("n").cast("double")
-                * F.lit(1000000.0)
-                * F.lit(float(cents))
-            ),
-            6,
-        ),
-    )
-    return agg.select("n", "n_strata", "positivity_violations", ate.alias("ate"))
-
-
-def msprt_always_valid(
-    daily: DataFrame,
-    day_col: str,
-    d_micro_col: str,
-) -> DataFrame:
-    """Mixture sequential probability ratio test (Johari et al. —
-    always-valid inference): an A/B monitor you may PEEK at daily
-    without inflating false positives. Input is the daily
-    treatment-minus-control difference series (micro-quantized); the
-    mixture likelihood ratio under a N(0, τ²) effect prior with
-    τ² = σ̂² (the standard default) is
-
-        Λ_n = sqrt(1/(1+n)) · exp( n²·δ̂_n² / (2σ̂²(1+n)) )
-
-    and the always-valid p-value is the running min of 1/Λ_n —
-    monotone by construction, valid at every stopping time.
-
-    Exactness contract: σ̂² derives from exact integer moment sums of
-    the micro-quantized series; δ̂_n from exact cumulative integer
-    sums; log Λ evaluates in frozen-association double math and
-    floors to micro-units before ``exp``; the running min then folds
-    INTEGERS. Windows are calendar-bounded (one row per day — the
-    moving_avg_daily_revenue category). Degenerate contract: zero
-    series variance → NULL p (documented).
-
-    Returns per day: ``(day, n, dbar, p_always)``.
-    """
-    w_cum = Window.orderBy(day_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    mom = F.broadcast(
-        daily.agg(
-            F.count(F.lit(1)).alias("_u"),
-            F.sum(F.col(d_micro_col).cast("decimal(38,0)")).alias("_s1"),
-            # cast BEFORE squaring: a sparse day's mean difference can
-            # reach ~1e11 micro-units, whose long square overflows
-            # (found by the sf0.001 off-scale gate, round 7)
-            F.sum(
-                F.col(d_micro_col).cast("decimal(38,0)")
-                * F.col(d_micro_col)
-            ).alias("_s2"),
-        )
-    )
-    cum = daily.select(
-        day_col,
-        F.row_number().over(Window.orderBy(day_col)).alias("n"),
-        F.sum(d_micro_col).over(w_cum).alias("_cs"),
-    ).crossJoin(mom)
-    sigma2 = (
-        F.col("_u").cast("decimal(38,0)") * F.col("_s2")
-        - F.col("_s1") * F.col("_s1")
-    ).cast("double") / (
-        (F.col("_u").cast("double") * F.col("_u").cast("double"))
-        * F.lit(1e12)
-    )
-    nd = F.col("n").cast("double")
-    dbar = F.col("_cs").cast("double") / (nd * F.lit(1000000.0))
-    log_lambda = F.lit(0.5) * F.log(F.lit(1.0) / (F.lit(1.0) + nd)) + (
-        (nd * nd) * (dbar * dbar)
-    ) / ((F.lit(2.0) * sigma2) * (F.lit(1.0) + nd))
-    p_raw = F.when(
-        sigma2 > 0,
-        F.least(
-            F.lit(1000000).cast("long"),
-            F.floor(
-                F.exp(
-                    -(F.floor(log_lambda * F.lit(1000000.0)) / F.lit(1000000.0))
-                )
-                * F.lit(1000000.0)
-            ).cast("long"),
-        ),
-    )
-    staged = cum.select(day_col, "n", F.round(dbar, 6).alias("dbar"), p_raw.alias("_pr"))
-    p_always = F.min("_pr").over(
-        Window.orderBy(day_col).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-    )
-    return staged.select(
-        day_col,
-        "n",
-        "dbar",
-        F.round(p_always / F.lit(1000000.0), 6).alias("p_always"),
-    )
-
-
-def ucb1_scores(
-    df: DataFrame,
-    arm: Column,
-    reward: Column,
-    cents: int = 100,
-) -> DataFrame:
-    """UCB1 bandit scores (Auer et al. 2002) over logged rewards —
-    the DETERMINISTIC allocation rule (mean + sqrt(2 ln N / n_a))
-    for choose-the-next-arm serving decisions: which connector to
-    poll, which extraction strategy to route a doc through. Thompson
-    sampling needs randomness; UCB1 is replayable from counts alone,
-    so it fits the exact-oracle posture.
-
-    Exactness: rewards quantize to integer ``cents``; means are exact
-    integer ratios; the exploration bonus ``sqrt(2·ln N / n_a)``
-    evaluates in frozen-association double math and the final score
-    quantizes to micro-units before the argmax (ties → arm name ASC).
-    One aggregation, metadata-sized output (one row per arm).
-    """
-    y = F.floor(reward * cents).cast("long")
-    per = (
-        df.select(arm.alias("arm"), y.alias("_y"))
-        .groupBy("arm")
-        .agg(F.count(F.lit(1)).alias("n_a"), F.sum("_y").alias("_s"))
-    )
-    tot = F.broadcast(per.agg(F.sum("n_a").alias("_n")))
-    j = per.crossJoin(tot)
-    mean = F.col("_s").cast("double") / (
-        F.col("n_a").cast("double") * F.lit(float(cents))
-    )
-    bonus = F.sqrt(
-        F.lit(2.0)
-        * F.log(F.col("_n").cast("double"))
-        / F.col("n_a").cast("double")
-    )
-    scored = j.select(
-        "arm",
-        "n_a",
-        F.floor((mean + bonus) * F.lit(1000000.0))
-        .cast("long")
-        .alias("ucb_micro"),
-        F.round(mean, 6).alias("mean_reward"),
-    )
-    best = F.broadcast(
-        scored.agg(
-            F.max(F.struct(F.col("ucb_micro"), F.col("arm"))).alias("_b")
-        )
-    )
-    return scored.crossJoin(best).select(
-        "arm",
-        "n_a",
-        "mean_reward",
-        F.round(F.col("ucb_micro") / F.lit(1000000.0), 6).alias("ucb"),
-        (
-            (F.col("ucb_micro") == F.col("_b.ucb_micro"))
-            & (F.col("arm") == F.col("_b.arm"))
-        ).alias("chosen"),
-    )
-
-
-def qini_uplift_curve(
-    df: DataFrame,
-    score: Column,
-    treat: Column,
-    outcome: Column,
-    n_buckets: int = 10,
-) -> DataFrame:
-    """Qini uplift curve by targeting-score decile — the evaluation
-    for "whom should we treat": rank units by the model's score,
-    sweep top-k%, and plot cumulative incremental conversions
-    ``Qini_k = Yt_k − Yc_k · (Nt_k / Nc_k)``. A useless score gives
-    the random-targeting diagonal; area between is the Qini
-    coefficient's numerator.
-
-    Buckets come from OVERALL percentile_disc decile EDGES of the
-    score (the woe_iv/psi scheme — one aggregation + a broadcast
-    literal comparison, NO corpus-sized ranking window; bucket 1 =
-    top decile). Cumulative terms close per bucket with ONE integral
-    divide (``Yc_cum·Nt_cum·10^6 DIV Nc_cum``) in DECIMAL(38,0).
-    Bucket-level windows are bounded by ``n_buckets``
-    (metadata-sized). Degenerate: a prefix with zero control units →
-    NULL qini for that bucket (try-style CASE).
-    """
-    base = df.select(
-        score.alias("_v"),
-        F.when(treat, F.lit(1)).otherwise(F.lit(0)).alias("_t"),
-        F.when(outcome, F.lit(1)).otherwise(F.lit(0)).alias("_o"),
-    )
-    edges = F.broadcast(
-        base.agg(
-            *[
-                F.expr(
-                    f"percentile_disc({k}/{n_buckets}D)"
-                    " WITHIN GROUP (ORDER BY _v)"
-                ).alias(f"_e{k}")
-                for k in range(1, n_buckets)
-            ]
-        )
-    )
-    asc_bucket = F.lit(1)
-    for k in range(1, n_buckets):
-        asc_bucket = asc_bucket + F.when(
-            F.col("_v") > F.col(f"_e{k}"), 1
-        ).otherwise(0)
-    ranked = base.crossJoin(edges).select(
-        (F.lit(n_buckets + 1) - asc_bucket).alias("bucket"),
-        "_t",
-        "_o",
-    )
-    per = ranked.groupBy("bucket").agg(
-        F.sum("_t").alias("_nt"),
-        F.sum(F.lit(1) - F.col("_t")).alias("_nc"),
-        F.sum(F.col("_t") * F.col("_o")).alias("_yt"),
-        F.sum((F.lit(1) - F.col("_t")) * F.col("_o")).alias("_yc"),
-    )
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = per.select(
-        "bucket",
-        F.sum("_nt").over(w).alias("nt_cum"),
-        F.sum("_nc").over(w).alias("nc_cum"),
-        F.sum("_yt").over(w).alias("yt_cum"),
-        F.sum("_yc").over(w).alias("yc_cum"),
-    )
-    scaled = F.expr(
-        "CAST(yc_cum AS DECIMAL(38,0)) * nt_cum * 1000000 DIV nc_cum"
-    )
-    return cum.select(
-        "bucket",
-        "nt_cum",
-        "nc_cum",
-        "yt_cum",
-        "yc_cum",
-        F.when(
-            F.col("nc_cum") > 0,
-            F.round(
-                (
-                    F.col("yt_cum") * F.lit(1000000)
-                    - scaled.cast("long")
-                ).cast("double")
-                / F.lit(1000000.0),
-                6,
-            ),
-        ).alias("qini"),
-    ).orderBy("bucket")
-
-
-def wasserstein_1d(
-    df: DataFrame,
-    group: Column,
-    value: Column,
-    a,
-    b,
-    scale: int = 100,
-) -> DataFrame:
-    """1-D Wasserstein-1 (earth-mover) distance between groups ``a``
-    and ``b`` of ``value`` — the drift metric that reports HOW FAR the
-    distribution moved in value units, where KS reports only the max
-    CDF gap and PSI needs binning: W1 = ∫|F_a − F_b| dv. The natural
-    "did this week's spend/quality/score distribution shift, and by
-    how much?" monitor to sit beside ks_two_sample / psi_drift /
-    kl_domain_drift.
-
-    Exactness contract: values quantize to ``floor(value·scale)``
-    longs; inclusive cumulative counts per distinct value come from
-    ``distributed_cum_before``; each inter-value gap contributes
-    ``(v_next − v)·|cum_a·n_b − cum_b·n_a|`` in DECIMAL(38,0), summed
-    exactly, ONE division by ``n_a·n_b·scale`` at the end.
-
-    Scale posture: the groupBy bounds the shuffle by |distinct
-    quantized values| — a VALUE-DOMAIN bound (range × scale), not a
-    corpus bound, which is also the documented justification for the
-    single gap-lead window over that domain table (the
-    weighted_percentiles "value DOMAIN" category). NULL w1 when a
-    group is empty (try_divide).
-    """
-    q = df.where(group.isin(a, b)).select(
-        F.floor(value * scale).cast("long").alias("_s"),
-        F.when(group == a, F.lit(1)).otherwise(F.lit(0)).alias("_ya"),
-        F.when(group == b, F.lit(1)).otherwise(F.lit(0)).alias("_yb"),
-    )
-    g = q.groupBy("_s").agg(
-        F.sum("_ya").alias("_ca"), F.sum("_yb").alias("_cb_ct")
-    )
-    ranked = distributed_cum_before(g, "_s", ["_ca", "_cb_ct"]).select(
-        "_s",
-        (F.col("_cb__ca") + F.col("_ca")).alias("_cuma"),
-        (F.col("_cb__cb_ct") + F.col("_cb_ct")).alias("_cumb"),
-    )
-    w = Window.orderBy("_s")
-    gapped = ranked.withColumn(
-        "_gap", F.coalesce(F.lead("_s").over(w) - F.col("_s"), F.lit(0))
-    )
-    totals = g.agg(
-        F.sum("_ca").alias("n_a"), F.sum("_cb_ct").alias("n_b")
-    )
-    na = F.col("n_a").cast("decimal(38,0)")
-    nb = F.col("n_b").cast("decimal(38,0)")
-    agg = gapped.crossJoin(F.broadcast(totals)).agg(
-        F.sum(
-            F.col("_gap").cast("decimal(38,0)")
-            * F.abs(
-                F.col("_cuma").cast("decimal(38,0)") * nb
-                - F.col("_cumb").cast("decimal(38,0)") * na
-            )
-        ).alias("_num"),
-        F.min("n_a").alias("n_a"),
-        F.min("n_b").alias("n_b"),
-    )
-    return agg.select(
-        "n_a",
-        "n_b",
-        F.round(
-            F.try_divide(
-                F.col("_num").cast("double"),
-                (
-                    F.col("n_a").cast("decimal(38,0)")
-                    * F.col("n_b").cast("decimal(38,0)")
-                ).cast("double")
-                * F.lit(float(scale)),
-            ),
-            6,
-        ).alias("w1"),
-    )
-
-
-def platt_scaling_fit(
-    df: DataFrame,
-    label: Column,
-    z_micro: Column,
-    iters: int = 3,
-) -> DataFrame:
-    """Platt scaling: fit ``p = sigmoid(w0 + w1·z)`` by ``iters``
-    unrolled Newton–Raphson steps — the standard score→probability
-    calibrator (Platt 1999) that turns a ranking score (BM25, NB
-    log-odds, quality score) into a usable probability; the TRAINABLE
-    sibling of isotonic calibration (parametric, monotone, 2 params).
-
-    Exactness contract (the ALS/Lloyd's fixed-iteration scheme): the
-    feature arrives MICRO-QUANTIZED (``z_micro`` long, caller's
-    floor); weights live as micro-unit integers between iterations.
-    Per iteration, η = (w0_micro + w1_micro·z_micro/10^6)/10^6
-    evaluates on exact integers in frozen association, the per-row
-    sigmoid (the one libm ``exp``) floors to micro-units, and the
-    gradient/Hessian sums (Σ(y−p), Σ(y−p)z, Σw, Σwz, Σwzz with
-    w = p(1−p)) close in DECIMAL(38,0) integers. The 2×2 Newton solve
-    runs in frozen-association doubles from those exact sums and the
-    update floors back to micro-units — so the ENTIRE trajectory is
-    an integer sequence and the oracle unrolls the same iterations.
-
-    Scale posture: each iteration is ONE map-side-combined aggregation
-    (5 numbers) broadcast back — the pregel-free fixed-point shape;
-    plan size O(iters) with no checkpoint needed (state is one row).
-
-    Degenerate contract: singular Hessian (all-one-class or constant
-    z) → NULL weights from that iteration on (try-style CASE).
-    """
-    base = df.select(
-        F.when(label, F.lit(1)).otherwise(F.lit(0)).alias("_y"),
-        z_micro.cast("long").alias("_z"),
-    )
-    state = None  # (w0_micro, w1_micro) as a one-row DataFrame
-    spark = df.sparkSession
-    w0 = F.lit(0).cast("long").alias("w0m")
-    w1 = F.lit(0).cast("long").alias("w1m")
-    state = spark.range(1).select(w0, w1)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    for _ in range(iters):
-        j = base.crossJoin(F.broadcast(state))
-        eta = (
-            F.col("w0m").cast("double")
-            + F.col("w1m").cast("double")
-            * (F.col("_z").cast("double") / F.lit(1000000.0))
-        ) / F.lit(1000000.0)
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        pq = F.floor(p * F.lit(1000000.0)).cast("long")
-        wq = F.floor(p * (F.lit(1.0) - p) * F.lit(1000000.0)).cast("long")
-        agg = j.select(
-            "w0m",
-            "w1m",
-            (F.col("_y") * F.lit(1000000) - pq).alias("_r"),
-            pq.alias("_pq"),
-            wq.alias("_wq"),
-            F.col("_z").alias("_zz"),
-        ).groupBy("w0m", "w1m").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(d(F.col("_r"))).alias("_s"),
-            F.sum(d(F.col("_r")) * d(F.col("_zz"))).alias("_sz"),
-            F.sum(d(F.col("_wq"))).alias("_w"),
-            F.sum(d(F.col("_wq")) * d(F.col("_zz"))).alias("_wz"),
-            F.sum(
-                d(F.col("_wq")) * d(F.col("_zz")) * d(F.col("_zz"))
-            ).alias("_wzz"),
-        )
-        # natural units: S = _s/1e6, Sz = _sz/1e12, W = _w/1e6,
-        # Wz = _wz/1e12, Wzz = _wzz/1e18 — frozen divisions
-        s_ = F.col("_s").cast("double") / F.lit(1e6)
-        sz = F.col("_sz").cast("double") / F.lit(1e12)
-        w_ = F.col("_w").cast("double") / F.lit(1e6)
-        wz = F.col("_wz").cast("double") / F.lit(1e12)
-        wzz = F.col("_wzz").cast("double") / F.lit(1e18)
-        det = w_ * wzz - wz * wz
-        dw0 = (wzz * s_ - wz * sz) / det
-        dw1 = (w_ * sz - wz * s_) / det
-        state = agg.select(
-            F.when(
-                det > 0,
-                F.col("w0m") + F.floor(dw0 * F.lit(1000000.0)).cast("long"),
-            ).alias("w0m"),
-            F.when(
-                det > 0,
-                F.col("w1m") + F.floor(dw1 * F.lit(1000000.0)).cast("long"),
-            ).alias("w1m"),
-            F.col("_n").alias("n"),
-        ).localCheckpoint(eager=False)
-    return state.select(
-        "n",
-        F.round(F.col("w0m") / F.lit(1000000.0), 6).alias("w0"),
-        F.round(F.col("w1m") / F.lit(1000000.0), 6).alias("w1"),
-    )
-
-
-def pass_at_k(
-    df: DataFrame,
-    task_cols: list[str],
-    correct: Column,
-    k: int = 5,
-) -> DataFrame:
-    """Unbiased pass@k estimator (Chen et al. 2021, the Codex paper):
-    with n samples per task of which c are correct,
-
-        pass@k = 1 − C(n−c, k)/C(n, k) = 1 − Π_{i=0}^{k−1} (n−c−i)/(n−i)
-
-    — the expectation over all size-k subsets, NOT the biased
-    "any of the first k" count. The standard eval metric for
-    sample-based generation (code, math, agents).
-
-    Exactness: the product closes as two exact integer products in
-    DECIMAL(38,0) (k ≤ ~15 at n ≤ ~1000 stays under 38 digits; the
-    caller owns that bound) via ``aggregate`` over a literal
-    0..k−1 sequence, then ONE divide, round 6. Tasks with n < k get
-    NULL (pass@k undefined; the count columns say why). Per-task
-    aggregation only — map-side combined, no window, no shuffle
-    beyond the task key.
-    """
-    per = df.groupBy(*task_cols).agg(
-        F.count(F.lit(1)).alias("n_samples"),
-        F.sum(F.when(correct, 1).otherwise(0)).alias("n_correct"),
-    )
-    one = F.lit(1).cast("decimal(38,0)")
-    num = F.aggregate(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        one,
-        lambda acc, i: acc
-        * F.greatest(
-            (F.col("n_samples") - F.col("n_correct") - i).cast(
-                "decimal(38,0)"
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ),
-    )
-    den = F.aggregate(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        one,
-        lambda acc, i: acc * (F.col("n_samples") - i).cast("decimal(38,0)"),
-    )
-    return per.select(
-        *task_cols,
-        "n_samples",
-        "n_correct",
-        F.round(
-            F.col("n_correct").cast("double")
-            / F.col("n_samples").cast("double"),
-            6,
-        ).alias("pass_at_1"),
-        F.when(
-            F.col("n_samples") >= k,
-            F.round(
-                F.lit(1.0) - num.cast("double") / den.cast("double"), 6
-            ),
-        ).alias(f"pass_at_{k}"),
-    )
-
-
-def optimal_f1_threshold(
-    df: DataFrame,
-    label: Column,
-    score: Column,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Best F1 decision threshold over the quantized score domain —
-    the missing step between scoring and ACTING: exact_auc says the
-    ranking is good, this says WHERE to cut it (predict positive when
-    ``score ≥ t``). Sweeps every distinct quantized score as a
-    candidate threshold using the distributed prefix-sum rank
-    primitive (no single-partition window), closing each candidate's
-    F1 as ONE integral divide:
-
-        f1_micro(t) = 2·TP·10^6 DIV (TP + FP + P)
-
-    (algebraically 2TP/(2TP+FP+FN) with FN = P−TP). The argmax is a
-    struct-max with the LOWEST threshold breaking ties (equal F1 →
-    prefer recall). Returns one row: threshold (in score units),
-    tp/fp/fn, precision/recall/f1 (micro-quantized, rounded 6).
-    Degenerate: zero positives → empty result (no threshold is
-    defined; callers read the empty frame).
-    """
-    q = df.select(
-        F.floor(score * scale).cast("long").alias("_s"),
-        F.when(label, F.lit(1)).otherwise(F.lit(0)).alias("_y"),
-    )
-    g = q.groupBy("_s").agg(
-        F.count(F.lit(1)).alias("_c"), F.sum("_y").alias("_p")
-    )
-    ranked = distributed_cum_before(g, "_s", ["_c", "_p"])
-    tot = F.broadcast(
-        g.agg(F.sum("_c").alias("_tc"), F.sum("_p").alias("_tp"))
-    )
-    cand = ranked.crossJoin(tot).select(
-        "_s",
-        (F.col("_tp") - F.col("_cb__p")).alias("_TP"),
-        (
-            (F.col("_tc") - F.col("_tp"))
-            - (F.col("_cb__c") - F.col("_cb__p"))
-        ).alias("_FP"),
-        F.col("_tp").alias("_P"),
-    )
-    scored = cand.where(F.col("_P") > 0).select(
-        "_s",
-        "_TP",
-        "_FP",
-        F.expr(
-            "CAST(2 * _TP AS DECIMAL(38,0)) * 1000000 DIV (_TP + _FP + _P)"
-        ).alias("_f1m"),
-        "_P",
-    )
-    best = scored.agg(
-        F.max(F.struct(F.col("_f1m"), (-F.col("_s")).alias("_ns"))).alias(
-            "_b"
-        )
-    )
-    return (
-        scored.crossJoin(F.broadcast(best))
-        .where(
-            (F.col("_f1m") == F.col("_b._f1m"))
-            & (-F.col("_s") == F.col("_b._ns"))
-        )
-        .select(
-            F.round(F.col("_s") / F.lit(float(scale)), 6).alias("threshold"),
-            F.col("_TP").alias("tp"),
-            F.col("_FP").alias("fp"),
-            (F.col("_P") - F.col("_TP")).alias("fn"),
-            F.round(
-                F.expr(
-                    "CAST(CAST(_TP AS DECIMAL(38,0)) * 1000000"
-                    " DIV (_TP + _FP) AS DOUBLE)"
-                )
-                / F.lit(1000000.0),
-                6,
-            ).alias("precision"),
-            F.round(
-                F.expr(
-                    "CAST(CAST(_TP AS DECIMAL(38,0)) * 1000000"
-                    " DIV _P AS DOUBLE)"
-                )
-                / F.lit(1000000.0),
-                6,
-            ).alias("recall"),
-            F.round(F.col("_f1m") / F.lit(1000000.0), 6).alias("f1"),
-        )
-    )
-
-
-def permutation_test_diff(
-    df: DataFrame,
-    group: Column,
-    value: Column,
-    id_col: str,
-    n_perms: int = 63,
-    cents: int = 100,
-    seed: str = "perm-v1",
-) -> DataFrame:
-    """Two-sample permutation test of the mean difference — the
-    assumption-free inference workhorse (no normality, no variance
-    model: under H0 labels are exchangeable, so the observed diff is
-    compared to its own relabeling distribution). Complements
-    welch (parametric) and mann-whitney (rank) on the same A/B
-    decision.
-
-    Determinism contract (the bootstrap-replica scheme): permutation
-    ``b`` relabels each row by the parity of ``md5(seed|b|id)`` — an
-    exchangeable, engine-replicable relabeling; per-replica sums close
-    in exact integer cents via ONE map-side fan-out
-    (``explode(sequence(1, B))``) and a B-row shuffle; mean diffs
-    quantize to micro-cents in frozen double math; the p-value is the
-    add-one-smoothed exceedance count ``(1 + #{|d_b| ≥ |d_obs|}) /
-    (B+1)`` — pure integer comparisons.
-
-    Scale: fan-out ×B is map-side (one md5 per (row, b)); the shuffle
-    carries B pre-aggregated rows. Degenerate: an empty arm in the
-    OBSERVED split → NULL p (try-style CASE); empty arms in a replica
-    contribute NULL diff which never exceeds (documented).
-    """
-    y = F.floor(value * cents).cast("long")
-    base = df.select(
-        F.col(id_col).cast("string").alias("_id"),
-        F.when(group, F.lit(1)).otherwise(F.lit(0)).alias("_g"),
-        y.alias("_y"),
-    )
-    obs = base.agg(
-        F.sum(F.when(F.col("_g") == 1, F.col("_y")).otherwise(0)).alias("_sa"),
-        F.sum(F.when(F.col("_g") == 1, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("_g") == 0, F.col("_y")).otherwise(0)).alias("_sb"),
-        F.sum(F.when(F.col("_g") == 0, 1).otherwise(0)).alias("n_b"),
-    )
-    dmicro = lambda sa, na, sb, nb: F.floor(  # noqa: E731
-        (
-            sa.cast("double") / na.cast("double")
-            - sb.cast("double") / nb.cast("double")
-        )
-        * F.lit(1000000.0)
-    ).cast("long")
-    fan = base.select(
-        "_id",
-        "_y",
-        F.explode(F.sequence(F.lit(1), F.lit(n_perms))).alias("_b"),
-    ).select(
-        "_b",
-        "_y",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(seed),
-                            F.lit("|"),
-                            F.col("_b").cast("string"),
-                            F.lit("|"),
-                            F.col("_id"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("_pg"),
-    )
-    reps = fan.groupBy("_b").agg(
-        F.sum(F.when(F.col("_pg") == 1, F.col("_y")).otherwise(0)).alias("_sa"),
-        F.sum(F.when(F.col("_pg") == 1, 1).otherwise(0)).alias("_na"),
-        F.sum(F.when(F.col("_pg") == 0, F.col("_y")).otherwise(0)).alias("_sb"),
-        F.sum(F.when(F.col("_pg") == 0, 1).otherwise(0)).alias("_nb"),
-    )
-    rep_d = reps.select(
-        F.when(
-            (F.col("_na") > 0) & (F.col("_nb") > 0),
-            F.abs(
-                dmicro(
-                    F.col("_sa"), F.col("_na"), F.col("_sb"), F.col("_nb")
-                )
-            ),
-        ).alias("_ad")
-    )
-    obs_d = obs.select(
-        "n_a",
-        "n_b",
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            dmicro(F.col("_sa"), F.col("n_a"), F.col("_sb"), F.col("n_b")),
-        ).alias("_dobs"),
-    )
-    exceed = rep_d.crossJoin(F.broadcast(obs_d)).agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.max("_dobs").alias("_dobs"),
-        F.sum(
-            F.when(F.col("_ad") >= F.abs(F.col("_dobs")), 1).otherwise(0)
-        ).alias("_ge"),
-    )
-    return exceed.select(
-        "n_a",
-        "n_b",
-        F.round(F.col("_dobs") / F.lit(1000000.0) / F.lit(float(cents)), 6).alias(
-            "mean_diff"
-        ),
-        F.when(
-            F.col("_dobs").isNotNull(),
-            F.round(
-                (F.lit(1) + F.col("_ge")).cast("double")
-                / F.lit(float(n_perms + 1)),
-                6,
-            ),
-        ).alias("p_value"),
-    )
 
 
 def dataset_content_digest(
@@ -4626,175 +1898,4 @@ def krippendorff_alpha_nominal(
     )
     return joined.select(
         "n_items", "n_annotations", "do_micros", alpha.alias("alpha")
-    )
-
-
-def holt_winters_additive(
-    daily: DataFrame,
-    group_cols: list[str],
-    day_col: str,
-    y_col: str,
-    m: int = 7,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    gamma: float = 0.25,
-) -> DataFrame:
-    """Per-group additive Holt-Winters (level + trend + m-period
-    seasonality) over a DENSIFIED daily series — the seasonal upgrade
-    of :func:`holt_linear`: a weekday-periodic feed (weekend dips)
-    needs the seasonal state or the trend chases the weekly wave.
-
-    Recurrence (simplified zero-init seasonals, l1 = y1, b1 = 0):
-
-        l_t = a*(y_t - s_{t-m}) + (1-a)*(l_{t-1} + b_{t-1})
-        b_t = B*(l_t - l_{t-1}) + (1-B)*b_{t-1}
-        s_t = G*(y_t - l_t) + (1-G)*s_{t-m}
-
-    carried as a rotating m-slot buffer inside one sequential
-    ``F.aggregate`` fold per group (the holt_linear determinism
-    contract: identical IEEE doubles in identical order, dyadic
-    smoothing constants, so a DuckDB recursive CTE replays it
-    bit-for-bit). Input must be gap-free per group — densify with a
-    day spine first (a gap would silently misalign the seasonal
-    buffer; that is the caller's contract, same as the rolling_zscore
-    densification note).
-
-    Forecast h steps out: ``l + h*b + s_buffer[h]`` (the buffer after
-    the last step holds the NEXT m seasonal components in order).
-    Returns (group..., n_days, level, trend, forecast_1, forecast_m),
-    rounded to 6 dp.
-    """
-    a, b_, g = float(alpha), float(beta), float(gamma)
-    series = daily.groupBy(*group_cols).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(day_col).alias("d"),
-                    F.col(y_col).cast("double").alias("y"),
-                )
-            )
-        ).alias("_s")
-    )
-    zeros = F.array(*[F.lit(0.0) for _ in range(m)])
-    init = F.struct(
-        F.lit(0.0).alias("l"),
-        F.lit(0.0).alias("b"),
-        zeros.alias("s"),
-        F.lit(0).alias("t"),
-    )
-
-    def step(acc, e):
-        y = e["y"]
-        s1 = F.element_at(acc["s"], 1)
-        lnew = F.lit(a) * (y - s1) + F.lit(1.0 - a) * (
-            acc["l"] + acc["b"]
-        )
-        bnew = F.lit(b_) * (lnew - acc["l"]) + F.lit(1.0 - b_) * acc["b"]
-        snew = F.lit(g) * (y - lnew) + F.lit(1.0 - g) * s1
-        rotated = F.concat(
-            F.slice(acc["s"], 2, m - 1), F.array(snew)
-        )
-        first = F.struct(
-            y.alias("l"),
-            F.lit(0.0).alias("b"),
-            acc["s"].alias("s"),
-            F.lit(1).alias("t"),
-        )
-        rest = F.struct(
-            lnew.alias("l"),
-            bnew.alias("b"),
-            rotated.alias("s"),
-            (acc["t"] + 1).alias("t"),
-        )
-        return F.when(acc["t"] == 0, first).otherwise(rest)
-
-    fin = F.aggregate(F.col("_s"), init, step)
-    return series.select(
-        *group_cols,
-        F.size("_s").alias("n_days"),
-        F.round(fin["l"], 6).alias("level"),
-        F.round(fin["b"], 6).alias("trend"),
-        F.round(
-            fin["l"] + F.lit(1.0) * fin["b"] + F.element_at(fin["s"], 1),
-            6,
-        ).alias("forecast_1"),
-        F.round(
-            fin["l"]
-            + F.lit(float(m)) * fin["b"]
-            + F.element_at(fin["s"], m),
-            6,
-        ).alias(f"forecast_{m}"),
-    ).orderBy(*group_cols)
-
-
-def median_ci_order_stats(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col,
-) -> DataFrame:
-    """Distribution-free confidence interval for the MEDIAN from order
-    statistics (the binomial argument, normal-approximated ranks):
-    with n observations the 95% CI is the pair of values at ranks
-    ``floor(n/2 - 0.98*sqrt(n))`` and ``ceil(n/2 + 1 + 0.98*sqrt(n))``
-    — no bootstrap replicas, no distributional assumption; the robust
-    companion to bootstrap_ci's mean interval.
-
-    Exactness: values enter as integers; ranks derive from n in one
-    fixed double chain (0.98 = 1.96/2 parses to the same double in
-    any engine) and clamp into [1, n]; rank selection walks the
-    cumulative count over DISTINCT values (value-domain-bounded
-    window, the weighted_percentiles category) — the value at rank r
-    is ``min(v | cum(v) >= r)``, a conditional aggregation after an
-    equi-join of the 3-row-per-group rank table.
-
-    Returns (group..., n, median, ci_lo, ci_hi) with values in the
-    input's integer units.
-    """
-    g = [F.col(c) for c in group_cols]
-    vals = df.groupBy(*g, value_col.cast("long").alias("_v")).agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    w = Window.partitionBy(*group_cols).orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = vals.select(*group_cols, "_v", F.sum("_c").over(w).alias("_cum"))
-    n = df.groupBy(*g).agg(F.count(F.lit(1)).alias("n"))
-    half = F.lit(0.5) * F.col("n").cast("double")
-    spread = F.lit(0.98) * F.sqrt(F.col("n").cast("double"))
-    k_med = F.ceil(half).cast("long")
-    k_lo = F.greatest(F.floor(half - spread).cast("long"), F.lit(1))
-    k_hi = F.least(
-        F.ceil(half + F.lit(1.0) + spread).cast("long"), F.col("n")
-    )
-    ranks = n.select(
-        *group_cols,
-        "n",
-        F.explode(
-            F.array(
-                F.struct(F.lit("median").alias("_lab"), k_med.alias("_k")),
-                F.struct(F.lit("lo").alias("_lab"), k_lo.alias("_k")),
-                F.struct(F.lit("hi").alias("_lab"), k_hi.alias("_k")),
-            )
-        ).alias("_r"),
-    ).select(*group_cols, "n", F.col("_r._lab").alias("_lab"), F.col("_r._k").alias("_k"))
-    picked = (
-        cum.join(ranks, group_cols)
-        .where(F.col("_cum") >= F.col("_k"))
-        .groupBy(*group_cols, "n", "_lab")
-        .agg(F.min("_v").alias("_pick"))
-    )
-    return (
-        picked.groupBy(*group_cols, "n")
-        .agg(
-            F.max(F.when(F.col("_lab") == "median", F.col("_pick"))).alias(
-                "median"
-            ),
-            F.max(F.when(F.col("_lab") == "lo", F.col("_pick"))).alias(
-                "ci_lo"
-            ),
-            F.max(F.when(F.col("_lab") == "hi", F.col("_pick"))).alias(
-                "ci_hi"
-            ),
-        )
-        .orderBy(*group_cols)
     )

@@ -1275,7 +1275,7 @@ def cox_ph_binary(
 
     and Newton iterates β ← β + U/I.
 
-    Exactness contract (the platt_scaling scheme): risk counts derive
+    Exactness contract: risk counts derive
     from ``distributed_cum_before`` over the duration-keyed aggregate
     (exact integers, ≤ |distinct durations| rows — observation-span
     bounded); per iteration β is a micro-unit INTEGER, e^β the one

@@ -152,24 +152,6 @@ GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
         "vocab-bounded (the weighted_percentiles category), never "
         "corpus-bounded; token counts are map-side combined first"
     ),
-    "wasserstein_value_drift_halves": (
-        "gap-lead window over ONE ROW PER DISTINCT CENT VALUE - "
-        "value-DOMAIN-bounded (range x scale rows, the "
-        "weighted_percentiles category), never corpus-bounded"
-    ),
-    "qini_uplift_user_targeting": (
-        "cumulative window over ONE ROW PER DECILE (10 rows - "
-        "metadata, the best_split category)"
-    ),
-    "msprt_daily_value_monitor": (
-        "cumulative + running-min windows over the global DAILY "
-        "series - calendar-bounded (the moving_avg_daily_revenue "
-        "category)"
-    ),
-    "bh_fdr_nation_fulfilled": (
-        "BH step-up rank over ONE ROW PER TEST (25 nations - "
-        "metadata-sized, the bootstrap-replica category)"
-    ),
     "skew_join_key_profile": "rank over the <=top_k TakeOrdered survivors",
     "search_term_relevance": "rank over the <=k TakeOrdered survivors",
     "bm25_document_rank": "rank over the <=k TakeOrdered survivors",
@@ -179,18 +161,6 @@ GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
         "(observation-span-bounded, not corpus-bounded)"
     ),
     "moving_avg_daily_revenue": "global DAILY series - calendar-bounded",
-    "ccf_views_purchases": (
-        "lead windows over the global DAILY series - calendar-bounded "
-        "(|days| rows, the moving_avg_daily_revenue category)"
-    ),
-    "bollinger_daily_revenue": (
-        "trailing-frame windows over the global DAILY series - "
-        "calendar-bounded (the moving_avg_daily_revenue category)"
-    ),
-    "best_split_value_purchase": (
-        "cumulative window over ONE ROW PER BIN of the <=32-bin "
-        "candidate grid (metadata, never corpus)"
-    ),
     "skyline_parts_price_size": (
         "running min over ONE ROW PER LEVEL of the bounded size "
         "domain (|distinct sizes| rows - metadata, never corpus)"

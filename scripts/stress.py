@@ -440,23 +440,6 @@ def case_chunk_sink(spark, sf_dir: str, k: int) -> DataFrame:
 
 
 
-def case_holt(spark, sf_dir: str, k: int) -> DataFrame:
-    # SAME user keys, k-x deeper series (ts jittered per replica): the
-    # per-group collect+fold grows k-x per key — the harshest shape for
-    # a bounded-series operator; linear unless the fold re-sorts or
-    # re-scans per element
-    from mlentory_etl_pipeline_spark.operators import stats
-
-    e = t(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    e = _replicated(e, k).select(
-        "user_id",
-        (F.col("ts") + F.make_interval(secs=F.col("_rep"))).alias("ts"),
-        "value",
-        (F.col("event_id") * k + F.col("_rep")).alias("event_id"),
-    )
-    return stats.holt_linear(e, ["user_id"], "ts", "value", "event_id")
-
-
 def case_cogroup_reconcile(spark, sf_dir: str, k: int) -> DataFrame:
     # disjoint key copies: k-x more keys, same per-key group size —
     # cogroup must scale with the shuffle, not with key count squared
@@ -474,40 +457,6 @@ def case_cogroup_reconcile(spark, sf_dir: str, k: int) -> DataFrame:
     )
     r = li.groupBy("o_orderkey").agg(F.sum("_p").alias("rtot"))
     return cogroup_reconcile(o, r, "o_orderkey", "ltot", "rtot")
-
-
-def case_mann_kendall(spark, sf_dir: str, k: int) -> DataFrame:
-    # DISJOINT key copies: the pair join is quadratic in per-group
-    # depth BY DESIGN (bounded-events-per-entity contract), so the
-    # honest scale axis is MORE GROUPS at constant depth — linear
-    # unless the join leaks across groups
-    from mlentory_etl_pipeline_spark.operators import stats
-
-    e = t(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    e = _replicated(e, k).select(
-        (F.col("user_id") * k + F.col("_rep")).alias("user_id"),
-        "ts", "value",
-        (F.col("event_id") * k + F.col("_rep")).alias("event_id"),
-    )
-    return stats.mann_kendall(e, ["user_id"], "ts", "value", "event_id")
-
-
-
-def case_theil_sen(spark, sf_dir: str, k: int) -> DataFrame:
-    # disjoint key copies, constant per-group depth (the honest axis
-    # for a per-group pair join — see case_mann_kendall)
-    from mlentory_etl_pipeline_spark.operators import stats
-
-    e = t(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    e = _replicated(e, k).select(
-        (F.col("user_id") * k + F.col("_rep")).alias("user_id"),
-        "ts", "value",
-        (F.col("event_id") * k + F.col("_rep")).alias("event_id"),
-    )
-    return stats.theil_sen(e, ["user_id"], "ts", "value", "event_id")
-
-
-
 
 
 def case_rank_tests(spark, sf_dir: str, k: int) -> DataFrame:
@@ -639,32 +588,6 @@ def case_assoc_rules(spark, sf_dir: str, k: int) -> DataFrame:
         "l_suppkey",
     )
     return association_rules(r, "l_orderkey", "l_suppkey", min_pair_count=3)
-
-
-def case_ranking_metrics(spark, sf_dir: str, k: int) -> DataFrame:
-    # kx disjoint query universes (query and item ids offset per
-    # replica): the (query, item) hash join and per-query aggregation
-    # both scale in |queries| -- no cross-replica key collisions
-    from mlentory_etl_pipeline_spark.operators.stats import ranking_metrics
-
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "label")
-    base = _replicated(e.where("vec_id < 2000"), k).select(
-        (F.col("vec_id") * k + F.col("_rep")).alias("q")
-    )
-    # synthetic rankings: 10 retrieved + 10 truth rows per query,
-    # overlapping on even ranks (deterministic, join-shape-faithful)
-    ranks = F.explode(F.sequence(F.lit(1), F.lit(10))).alias("rank")
-    retrieved = base.select(F.col("q").alias("query_id"), ranks).select(
-        "query_id",
-        (F.col("query_id") * 100 + F.col("rank")).alias("neighbor_id"),
-        "rank",
-    )
-    truth = base.select(F.col("q").alias("query_id"), ranks).select(
-        "query_id",
-        (F.col("query_id") * 100 + F.col("rank") * 2).alias("neighbor_id"),
-        "rank",
-    )
-    return ranking_metrics(retrieved, truth, k=10)
 
 
 def case_training_labels(spark, sf_dir: str, k: int) -> DataFrame:
@@ -1009,10 +932,7 @@ CASES = {
     "pmi": case_pmi,
     "quantile_norm": case_quantile_norm,
     "chunk_sink": case_chunk_sink,
-    "holt": case_holt,
     "cogroup_reconcile": case_cogroup_reconcile,
-    "mann_kendall": case_mann_kendall,
-    "theil_sen": case_theil_sen,
     "rank_tests": case_rank_tests,
     "ks_drift": case_ks_drift,
     "gini": case_gini,
@@ -1021,7 +941,6 @@ CASES = {
     "rfm": case_rfm,
     "markov": case_markov,
     "assoc_rules": case_assoc_rules,
-    "ranking_metrics": case_ranking_metrics,
     "training_labels": case_training_labels,
     "rake": case_rake,
     "link_prediction": case_link_prediction,

@@ -86,3 +86,11 @@ def test_invariance_diff():
     assert audit.diverged(["same"], a, {"same": {"error": "E: y"}}) == [
         {"query": "same", "A": a["same"], "B": {"error": "E: y"}}
     ]
+
+
+def test_global_window_allowlist_names_registered_queries():
+    # an exemption for a deleted or renamed query would silently outlive it
+    from mlentory_etl_pipeline_spark.plans.queries import REGISTRY
+
+    stale = sorted(set(audit.GLOBAL_WINDOW_ALLOWED) - set(REGISTRY))
+    assert stale == [], f"allowlisted but not registered: {stale}"

@@ -3,16 +3,16 @@ models.
 
 The oracle gate proves Spark and DuckDB agree; these tests prove the
 shared definition is RIGHT: a from-the-textbook multinomial NB scorer,
-a threshold-sweep average-precision model, Fraction-exact LOO target
-encoding, and a hashlib-computed hashing-trick bucket — all applying
-the operators' documented quantization contracts.
+Fraction-exact LOO target encoding, and a hashlib-computed
+hashing-trick bucket — all applying the operators' documented
+quantization contracts.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 from fractions import Fraction
 
 from hypothesis import HealthCheck, given, settings
@@ -24,7 +24,6 @@ from mlentory_etl_pipeline_spark.operators.classify import (
     nb_confusion,
     target_encoding_loo,
 )
-from mlentory_etl_pipeline_spark.operators.stats import average_precision
 
 SETTINGS = dict(
     max_examples=12,
@@ -114,54 +113,6 @@ def test_nb_confusion_matches_dense_model(spark, docs):
         for r in nb_confusion(df, "lang", "doc_id", "text").collect()
     }
     assert got == dict(model)
-
-
-# --- average precision vs a threshold-sweep model ---------------------
-
-ap_case = st.lists(
-    st.tuples(st.booleans(), st.sampled_from([0.1, 0.25, 0.25001, 0.5, 0.9])),
-    min_size=1,
-    max_size=30,
-)
-
-
-def _ap_model(pairs):
-    """Float threshold-sweep AP (sklearn definition): thresholds =
-    distinct scores desc; AP = sum dRecall * precision-at-block."""
-    P = sum(1 for y, _ in pairs if y)
-    if P == 0:
-        return None
-    by_score = defaultdict(lambda: [0, 0])
-    for y, s in pairs:
-        by_score[s][0] += 1
-        by_score[s][1] += 1 if y else 0
-    ap = 0.0
-    cb = pb = 0
-    for s in sorted(by_score, reverse=True):
-        c, p = by_score[s]
-        if p:
-            ap += (p / P) * ((pb + p) / (cb + c))
-        cb += c
-        pb += p
-    return ap
-
-
-@settings(**SETTINGS)
-@given(ap_case)
-def test_average_precision_matches_sweep_model(spark, pairs):
-    df = spark.createDataFrame(
-        [(1 if y else 0, s) for y, s in pairs], "y int, s double"
-    )
-    row = average_precision(df, F.col("y") == 1, F.col("s")).collect()[0]
-    model = _ap_model(pairs)
-    if model is None:
-        assert row.ap is None and row.n_pos == 0
-    else:
-        # per-block pico-unit floor + final round-6: tolerance well
-        # above both, far below any real AP difference
-        assert abs(row.ap - model) < 1e-5
-        assert row.n_pos == sum(1 for y, _ in pairs if y)
-        assert row.n == len(pairs)
 
 
 # --- LOO target encoding vs Fraction arithmetic -----------------------
@@ -270,51 +221,6 @@ def test_hits_matches_integer_model(spark, edges):
     expect = {("hub", u): round(s / 1e9, 9) for u, s in h.items()}
     expect |= {("auth", v): round(s / 1e9, 9) for v, s in a.items()}
     assert got == expect
-
-
-# --- normal SF polynomial + BH step-up --------------------------------
-
-
-def test_normal_sf2_micro_matches_erfc(spark):
-    from mlentory_etl_pipeline_spark.operators.stats import normal_sf2_micro
-
-    zs = [-3_500_000, -1_959_964, -500_000, 0, 123_456, 1_644_854, 2_575_829]
-    df = spark.createDataFrame([(z,) for z in zs], "zm long")
-    got = {
-        r.zm: r.pm
-        for r in df.select(
-            "zm", normal_sf2_micro(F.col("zm")).alias("pm")
-        ).collect()
-    }
-    for z in zs:
-        true_p = math.erfc(abs(z / 1e6) / math.sqrt(2.0))
-        # A&S 7.1.26 |err| < 1.5e-7 plus the floor quantum
-        assert abs(got[z] / 1e6 - true_p) < 2e-6
-
-
-bh_case = st.lists(st.integers(0, 1_000_000), min_size=1, max_size=25)
-
-
-@settings(**SETTINGS)
-@given(bh_case, st.integers(1, 20))
-def test_bh_fdr_matches_stepup_model(spark, ps, q_pct):
-    from mlentory_etl_pipeline_spark.operators.stats import bh_fdr
-
-    df = spark.createDataFrame(
-        [(str(i), p) for i, p in enumerate(ps)], "k string, p_micro long"
-    )
-    got = {
-        r.k: (r.rank, r.rejected)
-        for r in bh_fdr(df, ["k"], "p_micro", q_pct=q_pct).collect()
-    }
-    order = sorted(range(len(ps)), key=lambda i: (ps[i], str(i)))
-    m = len(ps)
-    kmax = 0
-    for rank, i in enumerate(order, start=1):
-        if ps[i] * m * 100 <= rank * q_pct * 1_000_000:
-            kmax = rank
-    for rank, i in enumerate(order, start=1):
-        assert got[str(i)] == (rank, rank <= kmax)
 
 
 def test_dawid_skene_outvotes_adversarial_annotator(spark):

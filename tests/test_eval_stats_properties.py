@@ -302,155 +302,6 @@ def test_quantile_normalize_matches_rank_model(spark, pairs):
     assert got == {i: float(v) for i, v in model.items()}
 
 
-# ---------------------------------------------------------------------
-# robust_location vs a naive order-statistics model
-# ---------------------------------------------------------------------
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    cents=st.lists(st.integers(-300, 300), min_size=1, max_size=40),
-    trim_pct=st.sampled_from([0.0, 0.1, 0.25]),
-)
-def test_robust_location_matches_order_stat_model(spark, cents, trim_pct):
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from mlentory_etl_pipeline_spark.operators.stats import robust_location
-
-    rows = [("g", i, c / 100.0) for i, c in enumerate(cents)]
-    df = spark.createDataFrame(rows, "g string, event_id long, v double")
-    got = robust_location(df, ["g"], "v", "event_id", trim=trim_pct).collect()[0]
-
-    # model on quantized cents (floor of the IEEE product, like the op)
-    import math
-
-    q = sorted(math.floor((c / 100.0) * 100) for c in cents)
-    n = len(q)
-    k = math.floor(trim_pct * n)
-    kept = q[k:n - k]
-    trimmed = sum(kept) / len(kept) / 100.0
-    winsor = (sum(kept) + k * q[k] + k * q[n - k - 1]) / n / 100.0
-    med = (q[(n + 1) // 2 - 1] + q[(n + 2) // 2 - 1]) / 2.0 / 100.0
-    zr = 1.96 * math.sqrt(n)
-    clo = max(math.floor((n - zr) / 2.0), 1)
-    chi = min(math.ceil(1.0 + (n + zr) / 2.0), n)
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP))
-
-    assert got.n_points == n
-    assert abs(got.trimmed_mean - r6(trimmed)) < 2e-6
-    assert abs(got.winsor_mean - r6(winsor)) < 2e-6
-    assert abs(got.median - r6(med)) < 2e-6
-    assert got.median_ci_lo == q[int(clo) - 1] / 100.0
-    assert got.median_ci_hi == q[int(chi) - 1] / 100.0
-
-
-# ---------------------------------------------------------------------
-# theil_sen vs a naive pairwise-median model
-# ---------------------------------------------------------------------
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    cents=st.lists(st.integers(-200, 200), min_size=1, max_size=25),
-)
-def test_theil_sen_matches_pairwise_median_model(spark, cents):
-    import math
-    from datetime import datetime, timedelta
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from mlentory_etl_pipeline_spark.operators.stats import theil_sen
-
-    d0 = datetime(2024, 1, 1)
-    # hour-spaced points with heavy value ties (the hard case for the
-    # slope-array order statistics)
-    rows = [("g", d0 + timedelta(hours=i), i, c / 100.0)
-            for i, c in enumerate(cents)]
-    df = spark.createDataFrame(
-        rows, "g string, ts timestamp, event_id long, v double"
-    )
-    got = theil_sen(df, ["g"], "ts", "v", "event_id").collect()[0]
-
-    q = [math.floor((c / 100.0) * 100) for c in cents]
-    t_us = [i * 3_600_000_000 for i in range(len(q))]
-    slopes = sorted(
-        (q[j] - q[i]) / (t_us[j] - t_us[i])
-        for i in range(len(q))
-        for j in range(i + 1, len(q))
-    )
-    assert got.n_points == len(q)
-    assert got.n_pairs == len(slopes)
-    if not slopes:
-        assert got.slope_per_day is None
-        return
-    m = len(slopes)
-    med = (slopes[(m + 1) // 2 - 1] + slopes[(m + 2) // 2 - 1]) / 2.0 \
-        if m % 2 == 0 else slopes[(m + 1) // 2 - 1]
-    want = med * 86400.0 * 1_000_000.0 / 100.0
-    rounded = float(Decimal(repr(want)).quantize(
-        Decimal("0.000001"), rounding=ROUND_HALF_UP))
-    assert abs(got.slope_per_day - rounded) < 2e-6
-
-
-# ---------------------------------------------------------------------
-# mann_kendall vs the brute-force pairwise definition
-# ---------------------------------------------------------------------
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    cents=st.lists(st.integers(-8, 8), min_size=1, max_size=22),
-)
-def test_mann_kendall_matches_bruteforce_model(spark, cents):
-    import math
-    from collections import Counter
-    from datetime import datetime, timedelta
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from mlentory_etl_pipeline_spark.operators.stats import mann_kendall
-
-    d0 = datetime(2024, 1, 1)
-    rows = [("g", d0 + timedelta(hours=i), i, c / 100.0)
-            for i, c in enumerate(cents)]
-    df = spark.createDataFrame(
-        rows, "g string, ts timestamp, event_id long, v double"
-    )
-    got = mann_kendall(df, ["g"], "ts", "v", "event_id").collect()[0]
-
-    q = [math.floor((c / 100.0) * 100) for c in cents]
-    n = len(q)
-    s = sum(
-        (q[j] > q[i]) - (q[j] < q[i])
-        for i in range(n) for j in range(i + 1, n)
-    )
-    ties = Counter(q).values()
-    var = (n * (n - 1) * (2 * n + 5)
-           - sum(t * (t - 1) * (2 * t + 5) for t in ties)) / 18.0
-    assert got.n_points == n and got.s_stat == s
-
-    def r4(x):
-        return float(Decimal(repr(x)).quantize(
-            Decimal("0.0001"), rounding=ROUND_HALF_UP))
-
-    assert abs(got.var_s - r4(var)) < 2e-4
-    if var > 0:
-        s_adj = s - 1 if s > 0 else (s + 1 if s < 0 else 0)
-        assert abs(got.z - r4(s_adj / math.sqrt(var))) < 2e-4
-    else:
-        assert got.z is None
-
-
 # --- Mann-Whitney U vs the O(n_a*n_b) pairwise definition -------------
 
 # few distinct values -> maximal ties, the hard case for rank tests
@@ -1009,75 +860,6 @@ def test_transition_latency_matches_fold_model(spark, events):
         assert abs(got[k][2] - med / 1e6) < 1e-6
 
 
-# --- ranking metrics vs pure-Python model ------------------------------
-
-rank_case = st.tuples(
-    st.integers(2, 10),  # k
-    st.dictionaries(     # per query: (retrieved perm seed, truth perm seed)
-        st.integers(0, 4),
-        st.tuples(st.permutations(list(range(12))), st.permutations(list(range(12)))),
-        min_size=1,
-        max_size=4,
-    ),
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(rank_case)
-def test_ranking_metrics_matches_python_model(spark, case):
-    from mlentory_etl_pipeline_spark.operators.stats import (
-        ranking_discounts,
-        ranking_metrics,
-    )
-
-    k, per_query = case
-    disc, idcg = ranking_discounts(k)
-    r_rows, t_rows = [], []
-    for q, (r_perm, t_perm) in per_query.items():
-        # retrieved lists vary in depth; truth may be shorter than k
-        for rank, item in enumerate(r_perm[: k + 1], start=1):
-            r_rows.append((q, item, rank))
-        for rank, item in enumerate(t_perm[: max(1, k - 2)], start=1):
-            t_rows.append((q, item, rank))
-    rdf = spark.createDataFrame(r_rows, "query_id int, neighbor_id int, rank int")
-    tdf = spark.createDataFrame(t_rows, "query_id int, neighbor_id int, rank int")
-    got = {
-        r.query_id: r.asDict()
-        for r in ranking_metrics(rdf, tdf, k).collect()
-    }
-
-    for q, (r_perm, t_perm) in per_query.items():
-        truth_rank = {
-            item: rank
-            for rank, item in enumerate(t_perm[: max(1, k - 2)], start=1)
-            if rank <= k
-        }
-        retrieved = [
-            (rank, item)
-            for rank, item in enumerate(r_perm[: k + 1], start=1)
-            if rank <= k
-        ]
-        n_t = len(truth_rank)
-        hits = [(rank, item) for rank, item in retrieved if item in truth_rank]
-        fh = min((rank for rank, _ in hits), default=None)
-        dcg_u = sum(
-            (k - truth_rank[item] + 1) * disc[rank - 1] for rank, item in hits
-        )
-        idcg_u = idcg[min(n_t, k) - 1]
-        row = got[q]
-        assert row["n_truth"] == n_t
-        assert row["hits"] == len(hits)
-        assert row["rr"] == round(1.0 / fh, 6) if fh else row["rr"] == 0.0
-        assert abs(row["ndcg"] - dcg_u / idcg_u) < 1e-6
-        assert abs(row["precision_at_k"] - len(hits) / k) < 1e-6
-        assert abs(row["recall_at_k"] - len(hits) / n_t) < 1e-6
-    assert set(got) == set(per_query)
-
-
 # --- association rules vs dict model -----------------------------------
 
 basket_case = st.lists(
@@ -1299,130 +1081,6 @@ def test_sequence_ngrams_matches_fold_model(spark, events, n):
     assert got == want
 
 
-# --- PSI drift vs integerized model ---------------------------------------
-
-psi_case = st.lists(
-    st.tuples(st.booleans(), st.integers(0, 30)),  # (is_reference, value)
-    min_size=2,
-    max_size=60,
-).filter(lambda xs: any(r for r, _ in xs))
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(psi_case, st.integers(2, 6))
-def test_psi_drift_matches_integer_model(spark, rows, n_buckets):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import psi_drift
-
-    df = spark.createDataFrame(
-        [(r, float(v)) for r, v in rows], "ref boolean, v double"
-    )
-    got = {
-        r.bucket: (
-            r.expected_n,
-            r.actual_n,
-            r.psi_term,
-            r.psi_total,
-        )
-        for r in psi_drift(
-            df, F.col("ref"), F.col("v"), n_buckets=n_buckets
-        ).collect()
-    }
-
-    ref = sorted(v for r, v in rows if r)
-    # percentile_disc(p) = smallest value whose cume_dist >= p
-    edges = [
-        ref[max(0, math.ceil(k / n_buckets * len(ref)) - 1)]
-        for k in range(1, n_buckets)
-    ]
-    en = {b: 0 for b in range(1, n_buckets + 1)}
-    an = dict(en)
-    for r, v in rows:
-        b = 1 + sum(1 for e in edges if v > e)
-        (en if r else an)[b] += 1
-    te, ta = sum(en.values()), sum(an.values())
-    de, da = 2 * te + n_buckets, 2 * ta + n_buckets
-    terms = {}
-    for b in range(1, n_buckets + 1):
-        pe, pa = 2 * en[b] + 1, 2 * an[b] + 1
-        lq = math.floor(math.log((pa * de) / (pe * da)) * 1_000_000)
-        terms[b] = (pa * de - pe * da) * lq
-    den = da * de * 1_000_000
-    total = sum(terms.values())
-    assert set(got) == set(terms)
-    for b in terms:
-        assert got[b][0] == en[b]
-        assert got[b][1] == an[b]
-        assert abs(got[b][2] - terms[b] / den) < 1e-6
-        assert abs(got[b][3] - total / den) < 1e-6
-    # PSI of identical windows must be ~0; shifted windows positive —
-    # sanity direction checks on the model itself
-    if all(r for r, _ in rows):
-        assert ta == 0
-
-
-# --- conformal intervals vs dict model -------------------------------------
-
-conf_case = st.lists(
-    st.tuples(st.integers(0, 1), st.integers(0, 100), st.integers(-20, 20)),
-    min_size=4,
-    max_size=50,
-    unique_by=lambda t: t[1],  # unique ids -> deterministic split
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(conf_case)
-def test_conformal_intervals_matches_dict_model(spark, rows):
-    import hashlib
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import (
-        conformal_intervals,
-    )
-
-    df = spark.createDataFrame(
-        [(g, i, float(v)) for g, i, v in rows], "g int, id long, v double"
-    )
-    got = {
-        r.group: (r.n_calib, r.n_eval, r.median, r.half_width, r.coverage)
-        for r in conformal_intervals(
-            df, F.col("g"), F.col("id"), F.col("v"), target_coverage_pct=90
-        ).collect()
-    }
-
-    def is_cal(i):
-        return hashlib.md5(str(i).encode()).hexdigest()[:2] < "80"
-
-    def pdisc(sorted_vals, p):
-        return sorted_vals[max(0, math.ceil(p * len(sorted_vals)) - 1)]
-
-    want = {}
-    for g in {g for g, _, _ in rows}:
-        cal = sorted(v for gg, i, v in rows if gg == g and is_cal(i))
-        ev = [v for gg, i, v in rows if gg == g and not is_cal(i)]
-        if not cal or not ev:
-            continue  # operator inner-joins both halves away
-        med = pdisc(cal, 0.5)
-        q = pdisc(sorted(abs(v - med) for v in cal), 0.9)
-        cov = sum(1 for v in ev if abs(v - med) <= q) / len(ev)
-        want[g] = (len(cal), len(ev), round(med, 6), round(q, 6), round(cov, 6))
-    assert set(got) == set(want)
-    for g, w in want.items():
-        assert got[g][0] == w[0] and got[g][1] == w[1]
-        for a, b in zip(got[g][2:], w[2:]):
-            assert abs(a - b) < 1e-6
-
-
 # --- training labels vs dict model -----------------------------------------
 
 label_case = st.lists(
@@ -1473,66 +1131,6 @@ def test_training_labels_match_dict_model(spark, events, fd, ld, stride):
             fut = any(snap <= d < snap + ld for d in days)
             want[(e, base + snap)] = (past, fut)
     assert got == want
-
-
-# --- cross-correlation vs textbook model ------------------------------------
-
-ccf_case = st.lists(
-    st.tuples(st.integers(0, 15), st.booleans()),  # (day, is_a else b)
-    min_size=2,
-    max_size=50,
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(ccf_case, st.integers(1, 4))
-def test_ccf_daily_matches_textbook_model(spark, events, max_lag):
-    import math
-    from datetime import datetime, timedelta
-
-    from mlentory_etl_pipeline_spark.operators.stats import ccf_daily
-
-    d0 = datetime(2024, 1, 1, 6)
-    rows = [
-        (d0 + timedelta(days=day), "a" if is_a else "b")
-        for day, is_a in events
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, kind string")
-    got = {
-        r.lag: r.ccf
-        for r in ccf_daily(
-            df, F.col("ts"), F.col("kind") == "a", F.col("kind") == "b",
-            max_lag=max_lag,
-        ).collect()
-    }
-
-    lo = min(d for d, _ in events)
-    hi = max(d for d, _ in events)
-    n = hi - lo + 1
-    a = [0] * n
-    b = [0] * n
-    for day, is_a in events:
-        (a if is_a else b)[day - lo] += 1
-    ma, mb = sum(a) / n, sum(b) / n
-    sda = math.sqrt(sum(x * x for x in a) - n * ma * ma)
-    sdb = math.sqrt(sum(x * x for x in b) - n * mb * mb)
-    for k in range(-max_lag, max_lag + 1):
-        if k >= 0:
-            pairs = [(a[t], b[t + k]) for t in range(n - k)]
-        else:
-            pairs = [(a[t - k], b[t]) for t in range(n + k)]
-        num = sum(
-            (x - ma) * (y - mb) for x, y in pairs
-        )
-        if sda == 0 or sdb == 0:
-            assert got[k] is None
-        else:
-            assert abs(got[k] - num / sda / sdb) < 1e-5
-    assert set(got) == set(range(-max_lag, max_lag + 1))
 
 
 # --- Shannon diversity vs quantized model ------------------------------------
@@ -1637,63 +1235,6 @@ def test_logrank_matches_textbook_model(spark, rows):
         assert abs(got.chi2 - (o1 - e1) ** 2 / v) < 1e-5
 
 
-# --- difference-in-differences vs four-cell model ----------------------------
-
-did_case = st.lists(
-    st.tuples(st.booleans(), st.booleans(), st.integers(-500, 500)),
-    min_size=8,
-    max_size=60,
-).filter(
-    lambda xs: all(
-        sum(1 for t, p, _ in xs if t == tt and p == pp) >= 2
-        for tt in (True, False)
-        for pp in (True, False)
-    )
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(did_case)
-def test_diff_in_diff_matches_four_cell_model(spark, rows):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import diff_in_diff
-
-    df = spark.createDataFrame(
-        [(t, p, c / 100.0) for t, p, c in rows],
-        "t boolean, p boolean, v double",
-    )
-    got = diff_in_diff(df, F.col("t"), F.col("p"), F.col("v")).collect()[0]
-
-    def cell(tt, pp):
-        # mirror the floor-of-IEEE-product quantization
-        q = [
-            math.floor((c / 100.0) * 100)
-            for t_, p_, c in rows
-            if t_ == tt and p_ == pp
-        ]
-        n, s, ss = len(q), sum(q), sum(x * x for x in q)
-        m = s / n / 100.0
-        v = (ss - s * s / n) / (n - 1.0) / 10000.0
-        return n, m, v
-
-    nt1, mt1, vt1 = cell(True, True)
-    nt0, mt0, vt0 = cell(True, False)
-    nc1, mc1, vc1 = cell(False, True)
-    nc0, mc0, vc0 = cell(False, False)
-    did = (mt1 - mt0) - (mc1 - mc0)
-    se = math.sqrt(vt1 / nt1 + vt0 / nt0 + vc1 / nc1 + vc0 / nc0)
-    assert (got.n_t1, got.n_t0, got.n_c1, got.n_c0) == (nt1, nt0, nc1, nc0)
-    assert abs(got.did - did) < 1e-6
-    assert abs(got.se - se) < 1e-6
-    if se > 0:
-        assert abs(got.t_stat - did / se) < 1e-3
-
-
 # --- cohort LTV vs dict model --------------------------------------------
 
 ltv_case = st.lists(
@@ -1770,132 +1311,6 @@ def test_cohort_ltv_matches_dict_model(spark, events):
         assert abs(got[k][2] - ltv) < 1e-6
 
 
-# --- rolling bands vs dict model -------------------------------------------
-
-band_case = st.lists(
-    st.tuples(st.integers(0, 25), st.integers(0, 10000)),  # (day, cents)
-    min_size=1,
-    max_size=40,
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(band_case)
-def test_rolling_bands_matches_dict_model(spark, rows):
-    import math
-    from datetime import datetime, timedelta
-
-    from mlentory_etl_pipeline_spark.operators.stats import rolling_bands
-
-    d0 = datetime(2024, 1, 1, 8)
-    df = spark.createDataFrame(
-        [(d0 + timedelta(days=day), c / 100.0) for day, c in rows],
-        "ts timestamp, v double",
-    )
-    got = {
-        r.day.toordinal(): (
-            r.day_value,
-            r.rolling_mean,
-            r.upper_band,
-            r.lower_band,
-            r.outside_band,
-        )
-        for r in rolling_bands(
-            df, F.col("ts"), F.col("v"), window_days=5, n_sigma=2.0,
-            min_obs=3,
-        ).collect()
-    }
-
-    daily = {}
-    for day, c in rows:
-        daily[day] = daily.get(day, 0) + math.floor((c / 100.0) * 100)
-    days = sorted(daily)
-    base = datetime(2024, 1, 1).toordinal()
-    want = {}
-    for i, day in enumerate(days):
-        frame = [daily[d] for d in days[max(0, i - 4) : i + 1]]
-        n = len(frame)
-        s, ss = sum(frame), sum(x * x for x in frame)
-        mu = s / n / 100.0
-        var = (ss - s * s / n) / n / 10000.0
-        v = daily[day] / 100.0
-        if n >= 3:
-            band = math.sqrt(var) * 2.0
-            out = v > mu + band or v < mu - band
-            want[base + day] = (
-                round(v, 6), round(mu, 6), round(mu + band, 6),
-                round(mu - band, 6), out,
-            )
-        else:
-            want[base + day] = (round(v, 6), round(mu, 6), None, None, None)
-    assert set(got) == set(want)
-    for k, w in want.items():
-        g = got[k]
-        assert abs(g[0] - w[0]) < 1e-6 and abs(g[1] - w[1]) < 1e-6
-        for a, b in ((g[2], w[2]), (g[3], w[3])):
-            if b is None:
-                assert a is None
-            else:
-                assert abs(a - b) < 1e-6
-        assert g[4] == w[4]
-
-
-# --- CUPED vs moment model -----------------------------------------------
-
-cuped_case = st.lists(
-    st.tuples(st.integers(0, 9), st.booleans(), st.integers(0, 2000)),
-    min_size=4,
-    max_size=60,
-).filter(lambda xs: len({u for u, _, _ in xs}) >= 2)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(cuped_case)
-def test_cuped_matches_moment_model(spark, rows):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import cuped_adjustment
-
-    df = spark.createDataFrame(
-        [(u, pre, c / 100.0) for u, pre, c in rows],
-        "u int, pre boolean, v double",
-    )
-    got = cuped_adjustment(
-        df, F.col("u"), F.col("pre"), F.col("v")
-    ).collect()[0]
-
-    per = {}
-    for u, pre, c in rows:
-        q = math.floor((c / 100.0) * 100)
-        x, y = per.get(u, (0, 0))
-        per[u] = (x + q, y) if pre else (x, y + q)
-    xs = [x for x, _ in per.values()]
-    ys = [y for _, y in per.values()]
-    n = len(per)
-    sx, sy = sum(xs), sum(ys)
-    cov = (sum(a * b for a, b in zip(xs, ys)) - sx * sy / n) / (n - 1.0)
-    vx = (sum(a * a for a in xs) - sx * sx / n) / (n - 1.0)
-    vy = (sum(b * b for b in ys) - sy * sy / n) / (n - 1.0)
-    assert got.n_entities == n
-    assert abs(got.mean_pre - sx / n / 100.0) < 1e-6
-    assert abs(got.var_post - vy / 10000.0) < 1e-5
-    if vx == 0:
-        assert got.theta is None
-    else:
-        assert abs(got.theta - cov / vx) < 1e-5
-        assert abs(got.var_cuped - (vy - cov * cov / vx) / 10000.0) < 1e-5
-        # CUPED never increases variance
-        assert got.var_cuped <= got.var_post + 1e-9
-
-
 # --- Jaccard link prediction vs dict model ----------------------------------
 
 link_case = st.lists(
@@ -1950,38 +1365,6 @@ def test_jaccard_link_prediction_matches_dict_model(spark, pairs, max_deg):
     for k, (c, j) in want.items():
         assert got[k][0] == c
         assert abs(got[k][1] - j) < 1e-6
-
-
-# --- rate ratio vs closed form -----------------------------------------------
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(st.integers(0, 40), st.integers(0, 40))
-def test_rate_ratio_matches_closed_form(spark, ca, cb):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import rate_ratio_test
-
-    rows = [("a",)] * ca + [("b",)] * cb + [("x",)]
-    df = spark.createDataFrame(rows, "k string")
-    got = rate_ratio_test(
-        df, F.col("k") == "a", F.col("k") == "b",
-        exposure_a=3.0, exposure_b=7.0,
-    ).collect()[0]
-    assert (got.c_a, got.c_b) == (ca, cb)
-    assert abs(got.rate_a - round(ca / 3.0, 6)) < 1e-9
-    if cb == 0:
-        assert got.rate_ratio is None and got.z is None
-    elif ca == 0:
-        assert got.z is None
-    else:
-        lq = math.floor(math.log((ca * 7.0) / (cb * 3.0)) * 1_000_000)
-        z = (lq / 1e6) / math.sqrt(1.0 / ca + 1.0 / cb)
-        assert abs(got.z - z) < 1e-3
 
 
 # --- RAKE vs dict model ------------------------------------------------------
@@ -2040,80 +1423,6 @@ def test_rake_keywords_matches_dict_model(spark, toks):
         for rk, (ph, (n, s)) in enumerate(order, start=1)
     ]
     assert got == want
-
-
-# --- MAD vs sorted-list model -------------------------------------------
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(st.lists(st.tuples(st.integers(0, 2), st.integers(-500, 500)),
-                min_size=1, max_size=40))
-def test_mad_scale_matches_sorted_model(spark, rows):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import mad_scale
-
-    df = spark.createDataFrame(
-        [(g, c / 10.0) for g, c in rows], "g int, v double"
-    )
-    got = {
-        r.g: (r.n_points, r.median, r.mad, r.mad_sigma)
-        for r in mad_scale(df, ["g"], F.col("v")).collect()
-    }
-
-    def pdisc(vals, p):
-        vals = sorted(vals)
-        return vals[max(0, math.ceil(p * len(vals)) - 1)]
-
-    for g in {g for g, _ in rows}:
-        vals = [c / 10.0 for gg, c in rows if gg == g]
-        med = pdisc(vals, 0.5)
-        mad = pdisc([abs(v - med) for v in vals], 0.5)
-        assert got[g][0] == len(vals)
-        assert abs(got[g][1] - med) < 1e-6
-        assert abs(got[g][2] - mad) < 1e-6
-        assert abs(got[g][3] - round(mad * 1.4826, 6)) < 1e-6
-
-
-# --- Hill estimator vs model --------------------------------------------
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(st.lists(st.integers(1, 100000), min_size=3, max_size=40),
-       st.integers(2, 10))
-def test_hill_tail_index_matches_model(spark, vals, k):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import hill_tail_index
-
-    df = spark.createDataFrame(
-        [(v / 10.0, i) for i, v in enumerate(vals)], "v double, i long"
-    )
-    got = hill_tail_index(df, F.col("v"), F.col("i"), k=k).collect()[0]
-
-    # top-(k+1) by (v desc, i asc)
-    order = sorted(
-        ((v / 10.0, i) for i, v in enumerate(vals)),
-        key=lambda t: (-t[0], t[1]),
-    )[: k + 1]
-    th = min(v for v, _ in order)
-    su = sum(
-        math.floor(math.log(v / th) * 1_000_000) for v, _ in order
-    )
-    hill = su / k / 1e6
-    assert got.k_tail == len(order) - 1
-    assert abs(got.threshold - th) < 1e-6
-    assert abs(got.hill - hill) < 1e-6
-    if hill > 0:
-        assert abs(got.alpha - 1.0 / hill) < 1e-3
 
 
 # --- 2-D skyline vs brute-force dominance ----------------------------------
@@ -2201,142 +1510,6 @@ def test_weighted_percentiles_match_cumulative_model(spark, rows):
                     break
             want.append(sel)
         assert got[g] == tuple(want)
-
-
-# --- WOE/IV vs integerized model ---------------------------------------------
-
-woe_case = st.lists(
-    st.tuples(st.booleans(), st.integers(0, 30)),
-    min_size=2,
-    max_size=60,
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(woe_case, st.integers(2, 6))
-def test_woe_iv_matches_integer_model(spark, rows, n_buckets):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import woe_iv
-
-    df = spark.createDataFrame(
-        [(p, float(v)) for p, v in rows], "pos boolean, v double"
-    )
-    got = {
-        r.bucket: (r.n_pos, r.n_neg, r.woe, r.iv_term, r.iv_total)
-        for r in woe_iv(
-            df, F.col("pos"), F.col("v"), n_buckets=n_buckets
-        ).collect()
-    }
-
-    vals = sorted(v for _, v in rows)
-    edges = [
-        vals[max(0, math.ceil(k / n_buckets * len(vals)) - 1)]
-        for k in range(1, n_buckets)
-    ]
-    pn = {b: 0 for b in range(1, n_buckets + 1)}
-    nn = dict(pn)
-    for p, v in rows:
-        b = 1 + sum(1 for e in edges if v > e)
-        (pn if p else nn)[b] += 1
-    tp, tn = sum(pn.values()), sum(nn.values())
-    dp, dn = 2 * tp + n_buckets, 2 * tn + n_buckets
-    terms, lqs = {}, {}
-    for b in pn:
-        sp, sn = 2 * pn[b] + 1, 2 * nn[b] + 1
-        lq = math.floor(math.log((sp * dn) / (sn * dp)) * 1_000_000)
-        lqs[b] = lq
-        terms[b] = (sp * dn - sn * dp) * lq
-    den = dp * dn * 1_000_000
-    tot = sum(terms.values())
-    assert set(got) == set(terms)
-    for b in terms:
-        assert got[b][0] == pn[b] and got[b][1] == nn[b]
-        assert abs(got[b][2] - lqs[b] / 1e6) < 1e-6
-        assert abs(got[b][3] - terms[b] / den) < 1e-6
-        assert abs(got[b][4] - tot / den) < 1e-6
-
-
-# --- decision stump vs brute-force model -------------------------------------
-
-stump_case = st.lists(
-    st.tuples(st.booleans(), st.integers(0, 20)),
-    min_size=4,
-    max_size=50,
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(stump_case, st.integers(2, 8))
-def test_best_split_stump_matches_bruteforce(spark, rows, max_bins):
-    import math
-
-    from mlentory_etl_pipeline_spark.operators.stats import best_split_stump
-
-    df = spark.createDataFrame(
-        [(p, float(v)) for p, v in rows], "pos boolean, v double"
-    )
-    out = best_split_stump(
-        df, F.col("pos"), F.col("v"), max_bins=max_bins
-    ).collect()
-
-    vals = sorted(v for _, v in rows)
-    edges = [
-        vals[max(0, math.ceil(k / max_bins * len(vals)) - 1)]
-        for k in range(1, max_bins)
-    ]
-    buckets = {}
-    for p, v in rows:
-        b = 1 + sum(1 for e in edges if v > e)
-        pp, nn, vm = buckets.get(b, (0, 0, None))
-        buckets[b] = (
-            pp + (1 if p else 0),
-            nn + (0 if p else 1),
-            v if vm is None else max(vm, v),
-        )
-    order = sorted(buckets)
-    tp = sum(p for p, _, _ in buckets.values())
-    tn = sum(n for _, n, _ in buckets.values())
-
-    def xlq(x):
-        return x * math.floor(math.log(x) * 1_000_000) if x > 0 else 0
-
-    cands = []
-    pl = nl = 0
-    vmax = None
-    for b in order[:-1]:
-        p, n, vm = buckets[b]
-        pl, nl = pl + p, nl + n
-        vmax = vm if vmax is None else max(vmax, vm)
-        pr, nr = tp - pl, tn - nl
-        gu = (
-            (xlq(tp + tn) - xlq(tp) - xlq(tn))
-            - (xlq(pl + nl) - xlq(pl) - xlq(nl))
-            - (xlq(pr + nr) - xlq(pr) - xlq(nr))
-        )
-        cands.append((gu, vmax, pl, nl, pr, nr))
-    if not cands:
-        assert out == []
-        return
-    gu, th, pl, nl, pr, nr = sorted(
-        cands, key=lambda c: (-c[0], c[1])
-    )[0]
-    got = out[0]
-    assert got.threshold == th
-    assert (got.pos_left, got.neg_left, got.pos_right, got.neg_right) == (
-        pl, nl, pr, nr,
-    )
-    assert abs(got.gain_nats - gu / (tp + tn) / 1e6) < 1e-6
-    # information gain is non-negative up to the 1e-6 log quantization
-    assert got.gain_nats > -1e-3
 
 
 # --- attribution models vs dict model ----------------------------------------
@@ -2539,72 +1712,6 @@ def test_fellegi_sunter_em_matches_fold_model(spark, pairs, iters):
         assert abs(gm - m[i] / S) < 1e-6
         assert abs(gu - u[i] / S) < 1e-6
         assert abs(gp - p / S) < 1e-6
-
-
-# --- Croston vs fold model ---------------------------------------------------
-
-croston_case = st.lists(
-    st.tuples(st.integers(0, 2), st.integers(0, 20), st.integers(1, 9)),
-    min_size=1,
-    max_size=40,
-)
-
-
-@settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(croston_case)
-def test_croston_matches_fold_model(spark, demands):
-    from datetime import datetime, timedelta
-
-    from mlentory_etl_pipeline_spark.operators.stats import croston_forecast
-
-    d0 = datetime(2024, 1, 1, 9)
-    rows = [
-        (g, d0 + timedelta(days=day), q) for g, day, q in demands
-    ]
-    df = spark.createDataFrame(rows, "g int, ts timestamp, q long")
-    got = {
-        r.g: (
-            r.n_days,
-            r.n_demand_days,
-            r.size_ewma,
-            r.interval_ewma,
-            r.demand_rate,
-        )
-        for r in croston_forecast(
-            df, ["g"], "ts", F.col("q"), alpha=0.25
-        ).collect()
-    }
-
-    for g in {g for g, _, _ in demands}:
-        daily = {}
-        for gg, day, q in demands:
-            if gg == g:
-                daily[day] = daily.get(day, 0) + q
-        lo, hi = min(daily), max(daily)
-        ser = [daily.get(d, 0) for d in range(lo, hi + 1)]
-        z = x = 0.0
-        qq, started = 1, False
-        for d in ser:
-            if not started and d > 0:
-                z, x, started = float(d), 1.0, True
-                qq = 1
-            elif started and d > 0:
-                z = 0.25 * d + 0.75 * z
-                x = 0.25 * qq + 0.75 * x
-                qq = 1
-            else:
-                qq += 1
-        n_demand = sum(1 for d in ser if d > 0)
-        assert started  # every present group has >= 1 demand
-        assert got[g][0] == len(ser)
-        assert got[g][1] == n_demand
-        assert abs(got[g][2] - z) < 1e-6
-        assert abs(got[g][3] - x) < 1e-6
-        assert abs(got[g][4] - z / x) < 1e-5
 
 
 # --- DBSCAN labeling vs dict model -------------------------------------------

@@ -1,9 +1,8 @@
-"""EB shrinkage / IPW / mSPRT vs independent Python models.
+"""Cox PH / Bradley-Terry / dataset digest vs independent Python models.
 
 Each operator's documented quantization contract is re-implemented
 directly in Python (ints + floats, no Spark) on hypothesis-generated
-inputs that stress the degenerate corners the sf-data gate never hits
-(constant rates, empty arms, zero variance).
+inputs that stress the degenerate corners the sf-data gate never hits.
 """
 
 from __future__ import annotations
@@ -14,396 +13,16 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from mlentory_etl_pipeline_spark.operators.stats import (
-    eb_beta_binomial_shrink,
-    ipw_ate,
-    msprt_always_valid,
-)
-
 SETTINGS = dict(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
 
-# --- EB beta-binomial shrinkage ---------------------------------------
-
-eb_case = st.lists(
-    st.tuples(st.integers(0, 20), st.integers(1, 20)).map(
-        lambda kn: (min(kn), max(kn))  # k <= n
-    ),
-    min_size=1,
-    max_size=20,
-)
-
 
 import pytest
 
 pytestmark = pytest.mark.slow
-
-
-def _eb_model(rows):
-    rqs = [(k * 1_000_000) // n for k, n in rows]
-    u = len(rqs)
-    s1 = sum(rqs)
-    s2 = sum(r * r for r in rqs)
-    m = s1 / (u * 1_000_000.0)
-    v = (u * s2 - s1 * s1) / ((u * float(u)) * 1e12)
-    if v > 0 and (m * (1.0 - m)) / v - 1.0 > 0:
-        strength = (m * (1.0 - m)) / v - 1.0
-        a = math.floor(m * strength * 1_000_000.0)
-        b = math.floor((1.0 - m) * strength * 1_000_000.0)
-    else:
-        a = b = None
-    out = []
-    for (k, n), rq in zip(rows, rqs):
-        if a is None:
-            out.append((k, n, round(rq / 1e6, 6), None, None, None))
-        else:
-            out.append(
-                (
-                    k,
-                    n,
-                    round(rq / 1e6, 6),
-                    a,
-                    b,
-                    round((k * 1_000_000 + a) / (n * 1_000_000 + a + b), 6),
-                )
-            )
-    return out
-
-
-@settings(**SETTINGS)
-@given(eb_case)
-def test_eb_shrink_matches_model(spark, rows):
-    df = spark.createDataFrame(
-        [(i, k, n) for i, (k, n) in enumerate(rows)],
-        "id long, k long, n long",
-    )
-    got = {
-        r.id: (r.k, r.n, r.raw_rate, r.alpha_micro, r.beta_micro, r.shrunk)
-        for r in eb_beta_binomial_shrink(df, ["id"], "k", "n").collect()
-    }
-    model = _eb_model(rows)
-    for i, exp in enumerate(model):
-        g = got[i]
-        assert g[:5] == exp[:5]
-        if exp[5] is None:
-            assert g[5] is None
-        else:
-            assert abs(g[5] - exp[5]) < 2e-6
-    # shrinkage direction: when valid, every shrunk rate sits between
-    # the raw rate and the prior mean
-    if model and model[0][3] is not None:
-        a, b = model[0][3], model[0][4]
-        prior = a / (a + b) if a + b > 0 else None
-        for k, n, raw, *_rest, sh in model:
-            if prior is not None:
-                lo, hi = sorted((raw, round(prior, 4)))
-                assert lo - 1e-4 <= sh <= hi + 1e-4
-
-
-# --- IPW ATE ----------------------------------------------------------
-
-ipw_case = st.lists(
-    st.tuples(
-        st.integers(0, 2),      # stratum
-        st.booleans(),          # treated
-        st.integers(-50, 50),   # outcome (whole units)
-    ),
-    min_size=1,
-    max_size=30,
-)
-
-
-def _ipw_model(rows):
-    strata = {}
-    for s, t_, y in rows:
-        n, nt, yt, yc = strata.get(s, (0, 0, 0, 0))
-        strata[s] = (
-            n + 1,
-            nt + (1 if t_ else 0),
-            yt + (y * 100 if t_ else 0),
-            yc + (0 if t_ else y * 100),
-        )
-    viol = sum(1 for n, nt, _, _ in strata.values() if nt == 0 or nt == n)
-    if viol:
-        return len(rows), len(strata), viol, None
-    st_ = sum(
-        (yt * n * 1_000_000) // nt for n, nt, yt, _ in strata.values()
-    )
-    sc = sum(
-        (yc * n * 1_000_000) // (n - nt)
-        for n, nt, _, yc in strata.values()
-    )
-    n_tot = len(rows)
-    return (
-        n_tot,
-        len(strata),
-        0,
-        round((st_ - sc) / (n_tot * 1_000_000.0 * 100.0), 6),
-    )
-
-
-@settings(**SETTINGS)
-@given(ipw_case)
-def test_ipw_ate_matches_model(spark, rows):
-    df = spark.createDataFrame(
-        [(s, t_, float(y)) for s, t_, y in rows],
-        "s int, t boolean, y double",
-    )
-    r = ipw_ate(df, ["s"], F.col("t"), F.col("y"), cents=100).collect()[0]
-    n, k, viol, ate = _ipw_model(rows)
-    assert (r.n, r.n_strata, r.positivity_violations) == (n, k, viol)
-    if ate is None:
-        assert r.ate is None
-    else:
-        assert abs(r.ate - ate) < 2e-6
-
-
-# --- mSPRT ------------------------------------------------------------
-
-msprt_case = st.lists(st.integers(-3_000_000, 3_000_000), min_size=1, max_size=15)
-
-
-def _msprt_model(dms):
-    u = len(dms)
-    s1 = sum(dms)
-    s2 = sum(d * d for d in dms)
-    sigma2 = (u * s2 - s1 * s1) / ((u * float(u)) * 1e12)
-    out = []
-    cs = 0
-    best = None
-    for n, d in enumerate(dms, start=1):
-        cs += d
-        dbar = cs / (n * 1_000_000.0)
-        if sigma2 > 0:
-            ll = 0.5 * math.log(1.0 / (1.0 + float(n))) + (
-                (float(n) * float(n)) * (dbar * dbar)
-            ) / ((2.0 * sigma2) * (1.0 + float(n)))
-            pr = min(
-                1_000_000,
-                math.floor(
-                    math.exp(-(math.floor(ll * 1_000_000.0) / 1_000_000.0))
-                    * 1_000_000.0
-                ),
-            )
-            best = pr if best is None else min(best, pr)
-            out.append((n, round(dbar, 6), round(best / 1e6, 6)))
-        else:
-            out.append((n, round(dbar, 6), None))
-    return out
-
-
-@settings(**SETTINGS)
-@given(msprt_case)
-def test_msprt_matches_model(spark, dms):
-    df = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(dms)], "day int, d_micro long"
-    )
-    got = {
-        r.day: (r.n, r.dbar, r.p_always)
-        for r in msprt_always_valid(df, "day", "d_micro").collect()
-    }
-    for day, exp in enumerate(_msprt_model(dms)):
-        g = got[day]
-        assert g[0] == exp[0]
-        assert abs(g[1] - exp[1]) < 2e-6
-        if exp[2] is None:
-            assert g[2] is None
-        else:
-            assert abs(g[2] - exp[2]) < 2e-6
-    # always-valid property: p is non-increasing over days
-    ps = [got[d][2] for d in sorted(got) if got[d][2] is not None]
-    assert all(a >= b for a, b in zip(ps, ps[1:]))
-
-
-# --- UCB1 -------------------------------------------------------------
-
-
-def test_ucb1_matches_model(spark):
-    from mlentory_etl_pipeline_spark.operators.stats import ucb1_scores
-
-    rows = [("a", 1.0), ("a", 3.0), ("b", 10.0), ("c", 2.0), ("c", 2.0), ("c", 2.0)]
-    df = spark.createDataFrame(rows, "arm string, y double")
-    got = {
-        r.arm: (r.n_a, r.mean_reward, r.ucb, r.chosen)
-        for r in ucb1_scores(df, F.col("arm"), F.col("y"), cents=100).collect()
-    }
-    n = len(rows)
-    per = {}
-    for a, y in rows:
-        c, s = per.get(a, (0, 0))
-        per[a] = (c + 1, s + int(y * 100))
-    scored = {
-        a: math.floor(
-            (s / (c * 100.0) + math.sqrt(2.0 * math.log(float(n)) / c))
-            * 1_000_000.0
-        )
-        for a, (c, s) in per.items()
-    }
-    best = max(scored, key=lambda a: (scored[a], a))
-    for a, (c, s) in per.items():
-        assert got[a][0] == c
-        assert abs(got[a][1] - s / (c * 100.0)) < 2e-6
-        assert abs(got[a][2] - scored[a] / 1e6) < 2e-6
-        assert got[a][3] == (a == best)
-    # exploration property: rarely-pulled arm b outranks its mean
-    assert got["b"][2] > got["b"][1]
-
-
-# --- Qini -------------------------------------------------------------
-
-
-def test_qini_random_score_near_zero_and_cumulative_shape(spark):
-    from mlentory_etl_pipeline_spark.operators.stats import qini_uplift_curve
-
-    # deterministic synthetic: 400 units, outcome rate higher under
-    # treatment for high-score units only
-    rows = []
-    for i in range(400):
-        score = i % 100
-        treat = i % 2 == 0
-        outcome = (score >= 80 and treat) or (i % 17 == 0)
-        rows.append((float(score), treat, outcome))
-    df = spark.createDataFrame(rows, "s double, t boolean, o boolean")
-    out = qini_uplift_curve(
-        df, F.col("s"), F.col("t"), F.col("o"), n_buckets=10
-    ).collect()
-    assert [r.bucket for r in out] == list(range(1, 11))
-    # totals: final cumulative row covers everything
-    last = out[-1]
-    assert last.nt_cum + last.nc_cum == 400
-    # the uplift is concentrated in the TOP deciles: qini at bucket 2
-    # (top 20%) captures most of the total incremental effect
-    q2 = next(r.qini for r in out if r.bucket == 2)
-    qlast = last.qini
-    assert q2 > 0 and q2 >= 0.5 * qlast
-
-
-# --- Wasserstein-1 ----------------------------------------------------
-
-w1_case = st.lists(
-    st.tuples(
-        st.booleans(),
-        st.sampled_from([0.0, 0.25, 0.5, 0.77, 1.0, 2.5, -1.3]),
-    ),
-    min_size=1,
-    max_size=30,
-)
-
-
-def _w1_model(pairs, scale=100):
-    qa = sorted(math.floor(v * scale) for g, v in pairs if g)
-    qb = sorted(math.floor(v * scale) for g, v in pairs if not g)
-    if not qa or not qb:
-        return len(qa), len(qb), None
-    vals = sorted(set(qa) | set(qb))
-    na, nb = len(qa), len(qb)
-    num = 0
-    for v, vn in zip(vals, vals[1:]):
-        ca = sum(1 for x in qa if x <= v)
-        cb = sum(1 for x in qb if x <= v)
-        num += (vn - v) * abs(ca * nb - cb * na)
-    return na, nb, round(num / (na * nb * float(scale)), 6)
-
-
-@settings(**SETTINGS)
-@given(w1_case)
-def test_wasserstein_matches_model(spark, pairs):
-    from mlentory_etl_pipeline_spark.operators.stats import wasserstein_1d
-
-    df = spark.createDataFrame(
-        [("a" if g else "b", v) for g, v in pairs], "g string, v double"
-    )
-    r = wasserstein_1d(
-        df, F.col("g"), F.col("v"), "a", "b", scale=100
-    ).collect()[0]
-    na, nb, w1 = _w1_model(pairs)
-    assert (r.n_a, r.n_b) == (na, nb)
-    if w1 is None:
-        assert r.w1 is None
-    else:
-        assert abs(r.w1 - w1) < 2e-6
-    # sanity: identical samples => distance 0
-    if w1 is not None and sorted(
-        v for g, v in pairs if g
-    ) == sorted(v for g, v in pairs if not g):
-        assert r.w1 == 0.0
-
-
-# --- Platt scaling ----------------------------------------------------
-
-
-def _platt_model(rows, iters=3):
-    w0m = w1m = 0
-    n = len(rows)
-    for _ in range(iters):
-        if w0m is None:
-            return None, None, n
-        s = sz = w = wz = wzz = 0
-        for y, z in rows:
-            eta = (float(w0m) + float(w1m) * (float(z) / 1e6)) / 1e6
-            p = 1.0 / (1.0 + math.exp(-eta))
-            pq = math.floor(p * 1e6)
-            wq = math.floor(p * (1.0 - p) * 1e6)
-            r = y * 1_000_000 - pq
-            s += r
-            sz += r * z
-            w += wq
-            wz += wq * z
-            wzz += wq * z * z
-        wd, wzd, wzzd = w / 1e6, wz / 1e12, wzz / 1e18
-        sd, szd = s / 1e6, sz / 1e12
-        det = wd * wzzd - wzd * wzd
-        if det > 0:
-            w0m = w0m + math.floor((wzzd * sd - wzd * szd) / det * 1e6)
-            w1m = w1m + math.floor((wd * szd - wzd * sd) / det * 1e6)
-        else:
-            w0m = w1m = None
-    return w0m, w1m, n
-
-
-platt_case = st.lists(
-    st.tuples(
-        st.booleans(),
-        st.sampled_from([0, 250_000, 500_000, 1_000_000, 2_000_000]),
-    ),
-    min_size=2,
-    max_size=25,
-)
-
-
-@settings(**SETTINGS)
-@given(platt_case)
-def test_platt_matches_unrolled_model(spark, rows):
-    from mlentory_etl_pipeline_spark.operators.stats import platt_scaling_fit
-
-    data = [(1 if y else 0, z) for y, z in rows]
-    df = spark.createDataFrame(data, "y int, z long")
-    r = platt_scaling_fit(
-        df, F.col("y") == 1, F.col("z"), iters=3
-    ).collect()[0]
-    w0m, w1m, n = _platt_model(data)
-    assert r.n == n
-    if w0m is None:
-        assert r.w0 is None and r.w1 is None
-    else:
-        assert abs(r.w0 - round(w0m / 1e6, 6)) < 2e-6
-        assert abs(r.w1 - round(w1m / 1e6, 6)) < 2e-6
-    # calibration sanity: all-positive high scores push w1 up
-    pos_high = all(y for y, z in rows if z >= 1_000_000)
-    neg_low = all(not y for y, z in rows if z == 0)
-    if (
-        w0m is not None
-        and pos_high
-        and neg_low
-        and any(z >= 1_000_000 for _, z in rows)
-        and any(z == 0 for _, z in rows)
-        and any(y for y, _ in rows)
-        and any(not y for y, _ in rows)
-    ):
-        assert w1m > 0
 
 
 # --- Cox PH (binary covariate) ----------------------------------------
@@ -504,40 +123,6 @@ def test_cox_recovers_known_hazard_direction(spark):
     assert r.hazard_ratio > 1.5
 
 
-# --- pass@k -----------------------------------------------------------
-
-
-@settings(**SETTINGS)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 3), st.booleans()), min_size=1, max_size=40
-    ),
-    st.integers(1, 6),
-)
-def test_pass_at_k_matches_comb(spark, rows, k):
-    from mlentory_etl_pipeline_spark.operators.stats import pass_at_k
-
-    df = spark.createDataFrame(rows, "task int, ok boolean")
-    got = {
-        r.task: (r.n_samples, r.n_correct, r.pass_at_1, r[f"pass_at_{k}"])
-        for r in pass_at_k(df, ["task"], F.col("ok"), k=k).collect()
-    }
-    from collections import Counter
-
-    n_by = Counter(t for t, _ in rows)
-    c_by = Counter(t for t, ok in rows if ok)
-    for task, n in n_by.items():
-        c = c_by.get(task, 0)
-        g = got[task]
-        assert g[0] == n and g[1] == c
-        assert abs(g[2] - round(c / n, 6)) < 1e-9
-        if n < k:
-            assert g[3] is None
-        else:
-            expect = 1.0 - math.comb(n - c, k) / math.comb(n, k)
-            assert abs(g[3] - expect) < 2e-6
-
-
 # --- Bradley-Terry ----------------------------------------------------
 
 
@@ -609,80 +194,7 @@ def test_bradley_terry_dominant_item_rates_highest(spark):
     assert r[0] > r[1] > r[3]
 
 
-# --- optimal F1 threshold ---------------------------------------------
-
-
-@settings(**SETTINGS)
-@given(
-    st.lists(
-        st.tuples(
-            st.booleans(),
-            st.sampled_from([0.1, 0.25, 0.25001, 0.5, 0.9]),
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_optimal_f1_matches_sweep(spark, pairs):
-    from mlentory_etl_pipeline_spark.operators.stats import (
-        optimal_f1_threshold,
-    )
-
-    df = spark.createDataFrame(
-        [(1 if y else 0, s) for y, s in pairs], "y int, s double"
-    )
-    out = optimal_f1_threshold(df, F.col("y") == 1, F.col("s")).collect()
-    P = sum(1 for y, _ in pairs if y)
-    if P == 0:
-        assert out == []
-        return
-    qs = [(math.floor(s * 1e6), y) for y, s in pairs]
-    best = None
-    for t_ in sorted({q for q, _ in qs}):
-        tp = sum(1 for q, y in qs if q >= t_ and y)
-        fp = sum(1 for q, y in qs if q >= t_ and not y)
-        f1m = (2 * tp * 1_000_000) // (tp + fp + P)
-        key = (f1m, -t_)
-        if best is None or key > best[0]:
-            best = (key, t_, tp, fp)
-    _, t_, tp, fp = best
-    assert len(out) == 1
-    r = out[0]
-    assert abs(r.threshold - round(t_ / 1e6, 6)) < 1e-9
-    assert (r.tp, r.fp, r.fn) == (tp, fp, P - tp)
-
-
-# --- permutation test & content digest ---------------------------------
-
-
-def test_permutation_test_null_effect_has_large_p(spark):
-    from mlentory_etl_pipeline_spark.operators.stats import (
-        permutation_test_diff,
-    )
-
-    # identical distributions in both arms -> p should be large;
-    # a planted massive effect -> p should be the minimum 1/64
-    null_rows = [(i, i % 2 == 0, float(i % 7)) for i in range(200)]
-    df = spark.createDataFrame(null_rows, "id long, g boolean, v double")
-    r = permutation_test_diff(
-        df, F.col("g"), F.col("v"), "id", n_perms=63
-    ).collect()[0]
-    assert r.p_value is not None and r.p_value > 0.05
-    eff_rows = [(i, i < 100, 100.0 if i < 100 else 1.0) for i in range(200)]
-    df2 = spark.createDataFrame(eff_rows, "id long, g boolean, v double")
-    r2 = permutation_test_diff(
-        df2, F.col("g"), F.col("v"), "id", n_perms=63
-    ).collect()[0]
-    assert abs(r2.p_value - round(1 / 64, 6)) < 1e-9
-    assert abs(r2.mean_diff - 99.0) < 1e-4
-    # degenerate: one empty arm -> NULL p
-    df3 = spark.createDataFrame(
-        [(1, True, 1.0), (2, True, 2.0)], "id long, g boolean, v double"
-    )
-    r3 = permutation_test_diff(
-        df3, F.col("g"), F.col("v"), "id", n_perms=7
-    ).collect()[0]
-    assert r3.p_value is None
+# --- content digest ---------------------------------------------------
 
 
 def test_dataset_digest_order_invariant_and_change_sensitive(spark):
